@@ -1,32 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: one count per corpus table absorbs first-action
-    // session setup (scheduler, codegen compiler) and per-table footer /
-    // file-open cost, so each per-query time measures the operator;
-    // whichever query touched a table first was otherwise charged its
-    // one-time cost (r02: join_cross 4.0 s cold vs ~1 s steady-state,
-    // dedup_exact 2.9 s cold vs 0.5 s warm).
-    // Crash-proof (VERDICT r9 #2): a broken table/fixture must degrade to
-    // "that key reports its crash time", never "the round reports nothing"
-    // — an uncaught AnalysisException here zeroed BENCH_r08 and r09.
-    Tables.AllTables.foreach { n =>
-      try Tables.t(spark, sfDir, n).count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup failed for $n: ${e.getMessage}")
-      }
-    }
+    val spark = Harness.session(Harness.cpus)
+    Harness.warmUp(spark, sfDir)
     // SPARK_GRAFT_ONLY=k1,k2 restricts to named keys — isolated
     // steady-state timing (in-suite numbers carry neighbor GC/page
     // pressure; see DESIGN §5).
@@ -35,74 +12,45 @@ object Bench {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (k, _) => only(k) }
-    // Pre-materialize the ingest fixtures so their write scaffolding —
-    // declared non-graded by IngestOps — stays out of every timed
-    // attempt (ADVICE r6); the per-path memo then makes the in-key
-    // write calls no-ops.
-    if (selected.keys.exists(operators.IngestOps.queries.contains))
-      try operators.IngestOps.prepareFixtures(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] prepareFixtures failed: ${e.getMessage}")
-      }
-    // Median-of-R with a GC settle per attempt (VERDICT r11 #1): the
-    // single-run canonical bench produced phantom 1.5–2× swings twice
-    // (r11 graph_bfs_hops read 4.52 s vs 2.4 s steady; r10→r11
-    // common-key total drifted +11% with no plan change) — in-suite
-    // times carry neighbor GC/page pressure, not operator cost. The
-    // MEDIAN of R ≥ 3 attempts is robust to one bad draw in either
-    // direction (min-of-R, the r5–r11 estimator, still rewards one
-    // lucky cache-warm draw); a crashed attempt (-1 rows) poisons the
-    // key to its crash time so a failure can never report a fast
-    // median.
-    // non-numeric → default 3; clamped to [1, 10] (ADVICE r6)
+    Harness.prepareFixtures(spark, sfDir, selected.keys)
+    // Median-of-R with a GC settle per attempt: a single run produced
+    // phantom 1.5–2× swings (graph_bfs_hops read 4.52 s vs 2.4 s
+    // steady) — in-suite times carry neighbor GC/page pressure, not
+    // operator cost. The MEDIAN of R ≥ 3 attempts is robust to one bad
+    // draw in either direction (min-of-R still rewards one lucky
+    // cache-warm draw); a crashed attempt (-1 rows) poisons the key to
+    // its crash time so a failure can never report a fast median.
+    // non-numeric → default 3; clamped to [1, 10]
     val reps = sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
       .getOrElse(3).max(1).min(10)
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.map { case (name, fn) =>
-      // Snapshot the persistent-RDD ids live BEFORE this key so the
-      // end-of-key sweep below can release exactly the pins this key's
-      // attempts created (targeted bookkeeping, VERDICT r13 #1).
-      val pinsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val pinsBefore = Harness.pinSnapshot(spark)
       val attempts = (1 to reps).map { i =>
         System.gc()
         val t0 = System.nanoTime()
-        // FULL-PLAN execution, not .count() (r10): under a count
-        // aggregate Catalyst prunes unreferenced window/sort/projection
-        // tails (win_rank's entire WindowExec vanished — ShuffleProbe
-        // measured 0 shuffle bytes), so count() times a DIFFERENT plan
-        // than any consumer of the result runs. toRdd executes the
-        // key's own plan with its full output schema. Times for
-        // projection-tail keys rise accordingly vs rounds ≤ r10-early;
-        // the delta is the measurement fix, not a regression (DESIGN
-        // §13).
+        // FULL-PLAN execution, not .count(): under a count aggregate
+        // Catalyst prunes unreferenced window/sort/projection tails
+        // (win_rank's entire WindowExec vanished — 0 shuffle bytes
+        // measured at 7787a2e), so count() times a DIFFERENT plan than
+        // any consumer of the result runs. toRdd executes the key's own
+        // plan with its full output schema (DESIGN §13).
         val n = try { fn(spark, sfDir).queryExecution.toRdd.count() }
-          catch { case _: Throwable => -1L }
+          catch { case e: Throwable =>
+            val what = s"${e.getClass.getName}: ${e.getMessage}"
+            System.err.println(s"[bench] $name try$i failed: $what")
+            errors.getOrElseUpdate(name, what)
+            -1L
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench] $name%-22s try$i $dt%8.2fs rows=$n")
         (dt, n)
       }
-      // End-of-key pin sweep (VERDICT r13 #1): localCheckpoint pins
-      // (Tables.pin — the iterative/fused keys' lineage truncation) are
-      // executor-resident blocks nobody unpersists, so a full suite
-      // accumulates 177 keys × reps of dead pins; under external memory
-      // pressure (the driver runs Bench under a resident sbt parent JVM)
-      // the block-manager eviction + GC churn lands on whichever
-      // allocation-heavy key runs late in the order — BENCH_r13 read
-      // agg_mad at 9.17 s vs the 3.81 s canonical at the same HEAD.
-      // Release ONLY the pins this key's attempts created, OUTSIDE the
-      // timed section, once per key — NOT the per-attempt global
-      // sweep + System.gc(), which measured as a 150.4 → 167.9 s net
-      // loss (DESIGN §15.5a). blocking = true (ADVICE r14): async
-      // removal can overlap the NEXT key's first timed attempt; the
-      // synchronous wait here is free because the sweep runs outside
-      // every timed section.
-      val swept = spark.sparkContext.getPersistentRDDs.count {
-        case (id, rdd) =>
-          !pinsBefore.contains(id) && {
-            try { rdd.unpersist(blocking = true); true }
-            catch { case _: Throwable => false }
-          }
-      }
+      // Once per key, not per attempt: a per-attempt global sweep +
+      // System.gc() measured as a 150.4 → 167.9 s net loss (DESIGN
+      // §15.5a).
+      val swept = Harness.sweepPins(spark, pinsBefore)
       if (swept > 0)
         System.err.println(s"[bench] $name swept $swept pins")
       val dt =
@@ -118,43 +66,32 @@ object Bench {
     }
     val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // Per-attempt times IN ORDER (VERDICT r14 #7): the median hides
-    // the cold-vs-steady split, so a driver-vs-canonical gap (r13/r14
-    // agg_mad) needed a TimeKey rerun to adjudicate. With the raw
-    // attempts in the artifact, try1/median is readable from the
-    // record itself (tools/bench_band.py folds it as cold_ratio).
-    // A CRASHED attempt ships as its NEGATED time (r15 review: raw
-    // times made a fast-failing exception look like a fast draw, and
-    // the poisoned median then produced a <1 cold_ratio); Locale.ROOT
-    // because the f interpolator is locale-sensitive and a comma
-    // decimal point would silently corrupt the array.
+    // Per-attempt times IN ORDER: the median hides the cold-vs-steady
+    // split, so try1/median is readable from the record itself
+    // (tools/bench_band.py folds it as cold_ratio). A CRASHED attempt
+    // ships as its NEGATED time, so a fast-failing exception never
+    // looks like a fast draw; Locale.ROOT because the f interpolator is
+    // locale-sensitive and a comma decimal point would corrupt the
+    // array.
     val ts = results.map { case (k, (_, tries)) =>
       s"\"" + k + "\":" + tries.map { case (t, n) =>
         String.format(java.util.Locale.ROOT, "%.4f",
           Double.box(if (n < 0) -t else t))
       }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    val es = errors.map { case (k, e) => s"\"$k\":${Harness.jsonString(e)}" }
+      .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"tries":$ts,"sf":"$sfDir"}"""
-    println(line)
-    // Compact driver-grade summary as the FINAL stdout line (VERDICT
-    // r15 #1): the full line above is ~10 KB and the driver's stored
-    // stdout tail is 2000 chars, so two rounds of PERF comparisons ran
-    // dark (prev/now_bench_ok false) because the only parseable JSON
-    // started mid-tail. This short line fits any tail capture even
-    // with sbt's trailing "[success]" noise; the full per-query/tries
-    // record stays in the line above and in the output file.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}""")
-    // stdout capture truncates (r2/r3 each lost ~19 per-key timings to the
-    // tail cut) — persist the full line to a file as well.
-    // SPARK_GRAFT_ONLY guard (VERDICT r10 #8): a restricted run must
-    // NEVER write a file NAMED bench_out.json — the r9 failure mode was
-    // a single-key dev run clobbering the canonical full-suite record,
-    // which then shipped as the round's "suite". The guard matches the
-    // BASENAME (./bench_out.json and absolute spellings included) and
-    // applies even to an explicit SPARK_GRAFT_BENCH_OUT: a partial
-    // record under the canonical name is wrong no matter who asked.
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"tries":$ts,"errors":$es,"sf":"$sfDir"}"""
+    // The full record goes to a file only: stdout captures truncate
+    // (the full line is ~10 KB), and the compact summary printed last
+    // must be the one parseable line.
+    // A SPARK_GRAFT_ONLY run must NEVER write a file NAMED
+    // bench_out.json — a single-key dev run once clobbered the
+    // canonical full-suite record. The guard matches the BASENAME
+    // (./bench_out.json and absolute spellings included) and applies
+    // even to an explicit SPARK_GRAFT_BENCH_OUT.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.nonEmpty) "bench_only_out.json" else "bench_out.json")
     val diverted = only.nonEmpty &&
@@ -173,5 +110,6 @@ object Bench {
       System.err.println(s"[bench] could not write $outPath: $e")
     }
     spark.stop()
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}""")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: `explain("formatted")` for EVERY declared key
   * (VERDICT r5 #6 — was a 40-key flagship subset) — the plan-audit
   * evidence behind DESIGN §3's claims (pushdown reaching scans,
@@ -19,14 +17,9 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed 4 partitions: the plans print them, so PLANS.md must not
+    // depend on the machine that regenerates it
+    val spark = Harness.session(4)
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans of the flagship operators\n\n"
     sb ++= s"Generated by `graft.PlanDump` at $sfDir (initial plans, " +

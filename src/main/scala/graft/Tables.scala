@@ -158,19 +158,7 @@ object Tables {
     * scheduling barrier, so keep lazy pins in iterative chains whose
     * rounds are tiny (DESIGN §14.1: barriers cost more than the work
     * they dedup when each round is a sub-100 ms stage). */
-  /** Dev-only pre-pin plan recorder (VERDICT r15 #4/#8): a pin makes
-    * the key-level plan dump opaque — the executed plan shows only a
-    * Scan ExistingRDD where the joins/windows happen inside the pin's
-    * materialization. When a recorder buffer is installed (KeyPlan
-    * installs one), [[pin]] appends each frame BEFORE checkpointing so
-    * plan audits can dump the pre-pin trees too. Never set outside dev
-    * tools; null (the default) is a no-op on the query path. */
-  private[graft] val pinRecorder =
-    new ThreadLocal[scala.collection.mutable.Buffer[DataFrame]]
-
   def pin(df: DataFrame, eager: Boolean): DataFrame = {
-    val rec = pinRecorder.get()
-    if (rec != null) rec += df
     val s = df.sparkSession
     s.conf.getOption("spark.graft.checkpointDir") match {
       case Some(dir) if dir.nonEmpty =>

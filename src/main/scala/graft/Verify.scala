@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     // IngestOps' oracles read fixtures this run writes — pin the oracle
     // fixture SF to THIS run's sfDir so the dumped SQL can never aim at
@@ -38,38 +29,20 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        // Targeted end-of-key pin sweep, mirroring Bench (r15 review):
-        // the percentile keys' internal localCheckpoint pins would
-        // otherwise stay resident for the remaining ~170 keys of the
-        // run — the exact block-pressure accumulation DESIGN §15.6
-        // diagnosed on the bench route, re-created on the driver's
-        // correctness route.
-        val pinsBefore = spark.sparkContext.getPersistentRDDs.keySet
+        // the same end-of-key sweep as Bench: otherwise the pin-creating
+        // keys' blocks stay resident for the rest of the run (DESIGN
+        // §15.6)
+        val pinsBefore = Harness.pinSnapshot(spark)
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!pinsBefore.contains(id))
-            try rdd.unpersist(blocking = true)
-            catch { case _: Throwable => }
-        }
+        Harness.sweepPins(spark, pinsBefore)
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

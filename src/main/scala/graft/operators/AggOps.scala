@@ -75,10 +75,7 @@ object AggOps {
     * selection, pre-counted input is consumed as-is and needs NO
     * (grp, v) uniqueness — duplicate blocks of one value sum into the
     * same bucket total and the boundary window's crossing row yields
-    * the same v whichever duplicate crosses — so the r13/r14 internal
-    * re-collapse (a second row-scaled exchange + pin per pass) no
-    * longer exists and `collapsed` is accepted for API compatibility
-    * only (both settings take the same plan).
+    * the same v whichever duplicate crosses.
     *
     * Boundary-equality note (ADVICE r12): the finish ALWAYS computes
     * (1−f)·lo + f·hi, even when vlo == vhi, because DuckDB's
@@ -90,11 +87,7 @@ object AggOps {
     * pinned regressions, not a universal theorem. */
   private[graft] def countPercentiles(vals0: org.apache.spark.sql.DataFrame,
       grp: String, ps: Seq[(String, Double)], scale: Double = 1.0,
-      preCounted: Boolean = false, collapsed: Boolean = false,
-      stats: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    require(!collapsed || preCounted,
-      "countPercentiles: collapsed = true requires preCounted = true")
+      preCounted: Boolean = false): org.apache.spark.sql.DataFrame = {
     require(preCounted == vals0.columns.contains("cnt"),
       if (preCounted)
         "countPercentiles: preCounted input must carry a cnt column"
@@ -138,9 +131,9 @@ object AggOps {
     // bucket totals, boundary detail), whose exchange subtrees differ
     // (the NULL-v filter pushes below one aggregate but not the
     // other), so ReuseExchange cannot dedupe them — unpinned, the
-    // row-scaled collapse re-executed once per consumer (r15
-    // MadStageProbe: agg_mad's deviation pass read 1.9 s steady vs
-    // 0.12 s for the same work over a pinned input). Pin the collapse:
+    // row-scaled collapse re-executed once per consumer (agg_mad's
+    // deviation pass read 1.9 s steady vs 0.12 s for the same work over
+    // a pinned input, measured at 8b67029). Pin the collapse:
     // the value-domain-sized block table writes once and every
     // consumer reads blocks. EAGER (r15): two of the consumers are
     // BROADCAST subtrees, whose build jobs run concurrently on the
@@ -168,29 +161,9 @@ object AggOps {
     // the two subtrees differently (reqs keeps only nr), so exchange
     // reuse cannot dedupe them and the blocks-scan aggregate ran
     // twice per pass. The pin is group-count-sized.
-    //
-    // Caller-supplied stats (r16, VERDICT r15 #2): a caller that
-    // ALREADY KNOWS the group stats — agg_mad's deviation pass derives
-    // pass 2's (n, nr, vmax) from pass 1's by dimension-sized
-    // arithmetic — passes them as a (grp, n, nr, vmax) frame and this
-    // pass skips its own blocks-scan aggregate + pin entirely. The
-    // frame is TRUSTED (private[graft] internal contract): n counts
-    // all rows, nr the non-NULL-v rows, vmax = max(v) per group, one
-    // row per group, and it should already be pinned or trivially
-    // cheap (it feeds the request frame and the final left join).
-    stats.foreach { st =>
-      val cols = st.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-      require(Set(grp.toLowerCase(java.util.Locale.ROOT), "n", "nr",
-        "vmax").subsetOf(cols),
-        s"countPercentiles: stats frame must carry ($grp, n, nr, vmax), " +
-          s"got ${st.columns.mkString(", ")}")
-    }
-    val ntab = stats.map(_.select(col(grp), col("n"), col("nr"),
-        col("vmax")))
-      .getOrElse(pin(cnts.groupBy(col(grp)).agg(sum(col("cnt")).as("n"),
-        coalesce(sum(when(col("v").isNotNull, col("cnt"))), lit(0L))
-          .as("nr"),
-        max(col("v")).as("vmax"))))
+    val ntab = pin(cnts.groupBy(col(grp)).agg(sum(col("cnt")).as("n"),
+      coalesce(sum(when(col("v").isNotNull, col("cnt"))), lit(0L)).as("nr"),
+      max(col("v")).as("vmax")))
     val nn = cnts.where(col("v").isNotNull)
       .withColumn("bk", expr(s"v div $SelBucket"))
     // Bucket totals: the only other row-scaled pass, a map-side
@@ -652,7 +625,7 @@ object AggOps {
           blocks.select(col("l_returnflag"), col("xc").as("v"),
             col("cnt")),
           "l_returnflag", Seq(("med", 0.5)),
-          preCounted = true, collapsed = true), eager = true)
+          preCounted = true), eager = true)
         val dev2 = blocks
           .join(broadcast(med.select(col("l_returnflag"), col("med"))),
             "l_returnflag")
@@ -702,8 +675,8 @@ object AggOps {
     // r13/r14 shape that broadcast the offsets BACK onto every block
     // and re-aggregated row-scale. That shape also executed the
     // row-scaled collapse twice — its offset and window branches
-    // fanned out below any exchange Spark could reuse (JobProbe r15:
-    // two identical 4.9 MB collapse-write jobs per run) — while this
+    // fanned out below any exchange Spark could reuse (two identical
+    // 4.9 MB collapse-write jobs per run, measured at ff6f127) — while this
     // one is a single LINEAR chain: collapse → bucket window → bucket
     // agg → offset window → finish, nothing consumed twice, no pin
     // needed. Exact: all-integer until the one shared-string double

@@ -112,20 +112,17 @@ object GraftOps {
     * like percentile()), `vmax`, one DOUBLE per requested fraction.
     * `preCounted = true` reads an existing `cnt` column as tie-block
     * weights (multi-pass callers scan their corpus once), duplicates
-    * of one (grp, v) allowed; `collapsed` is accepted for API
-    * compatibility (no internal re-collapse exists since r15 — both
-    * settings take the same plan). Byte-parity notes in
+    * of one (grp, v) allowed. Byte-parity notes in
     * [[AggOps.countPercentiles]]. */
   def countPercentiles(vals: DataFrame, grp: String,
       ps: Seq[(String, Double)], scale: Double = 1.0,
-      preCounted: Boolean = false, collapsed: Boolean = false)
-      : DataFrame = {
+      preCounted: Boolean = false): DataFrame = {
     require(ps.nonEmpty, "at least one (alias, fraction) is required")
     ps.foreach { case (_, p) =>
       require(p >= 0.0 && p <= 1.0, s"fraction $p outside [0, 1]") }
     // scale/alias domains and the cnt weight contract are validated
     // inside AggOps.countPercentiles (shared with internal callers)
-    AggOps.countPercentiles(vals, grp, ps, scale, preCounted, collapsed)
+    AggOps.countPercentiles(vals, grp, ps, scale, preCounted)
   }
 
   /** Approximate k-NN cosine graph via top-2 multi-probe IVF (r11):

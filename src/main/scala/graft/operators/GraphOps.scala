@@ -41,9 +41,9 @@ object GraphOps {
     // pinned (r15): edges feeds FOUR subtree references (the degree
     // agg, the join's probe side, and both node-set branches) whose
     // exchange subtrees differ, so nothing above the distinct was
-    // reused — JobProbe caught the row-scaled lineitem distinct
-    // executing twice per run (two identical 4.9 MB shuffle writes)
-    // under the withDeg and nodes pins. One pin, every consumer reads
+    // reused — the row-scaled lineitem distinct executed twice per run
+    // (two identical 4.9 MB shuffle writes, measured at b0e3f58) under
+    // the withDeg and nodes pins. One pin, every consumer reads
     // blocks — the ccCore edge-list discipline applied here.
     val edges = t(s, d, "lineitem")
       .select(col("l_suppkey").as("u"),
@@ -94,8 +94,8 @@ object GraphOps {
     "graph_bfs_hops" -> ((s: SparkSession, d: String) => {
       // union-of-two-selects is safe HERE (r15 audit): both branches
       // are bare projections of the SAME distinct exchange, so
-      // exchange reuse dedups the row-scaled subtree (JobProbe: one
-      // distinct write, read twice) — unlike pagerank's four
+      // exchange reuse dedups the row-scaled subtree (one distinct
+      // write, read twice, measured at b0e3f58) — unlike pagerank's four
       // differing consumers, which needed the pin
       val e = t(s, d, "lineitem")
         .select(col("l_suppkey").as("u"),

@@ -719,7 +719,7 @@ object PipelineOps {
         val thr = AggOps.countPercentiles(
             blocks.select(col("lang"), col("q6").as("v"), col("cnt")),
             "lang", Seq(("t6", 0.75)), scale = 1e6,
-            preCounted = true, collapsed = true)
+            preCounted = true)
           .select(col("lang"), round6(col("t6")).as("thr"),
             col("n").as("n_docs"))
         blocks.join(broadcast(thr), "lang")

@@ -329,7 +329,7 @@ object TextSimOps {
     * the last exchange; RangePartitioning keeps equal da in one
     * partition and AQE coalescing of range output is adjacent-merge,
     * order-preserving). Measured sf0.1 local[32]: 4.1–4.7 s →
-    * 2.9–3.2 s steady, byte-identical row order (BitsetContainProbe).
+    * 2.9–3.2 s steady, byte-identical row order (measured at 05f3fbb).
     * Scale: the exchange now carries one row per (x-member, rep-pair)
     * with the member ids as array payload — same ids, 5× fewer row
     * headers, and no second full-output pass; per-rep member arrays
@@ -396,7 +396,7 @@ object TextSimOps {
       // row. 128 buckets (not 64) because corpus docs carry 40-80
       // distinct tokens: at 64 bits the y-side density is ~70% and the
       // bound goes blunt; at 128 it stays ~45% dense and cuts ~2× more
-      // (CandCount-measured). Same window partition as rnk/c → no
+      // (measured at dfce344). Same window partition as rnk/c → no
       // extra shuffle, two BIGINTs wider.
       .withColumn("bm0", expr(
         "bit_or(CASE WHEN pmod(xxhash64(w), 128) < 64 THEN " +
@@ -524,7 +524,7 @@ object TextSimOps {
     // duplicate rows through the array attach + merge scan; the
     // post-verify distinct then becomes a no-op and is dropped
     // (verified rows of unique candidates are unique). sf0.1 A/B
-    // (ContainProbe shape): dedup-first 14.5 s vs verify-first 17-25 s.
+    // (measured at dfce344): dedup-first 14.5 s vs verify-first 17-25 s.
     //
     // Threshold in single-occurrence form — (100+τ)·o ≥ τ·(ca+cb) ⟺
     // 100·o ≥ τ·(ca+cb−o) — so the pushed-down join residual evaluates
@@ -698,8 +698,8 @@ object TextSimOps {
         round6(lit(1.0) - col("inter").cast("double") /
           col("uni").cast("double")).as("dist"))
       // Deterministic presentation order. This global sort is now the
-      // key's ONLY large exchange (r11 ShuffleProbe: 30 of 31 MiB at
-      // sf0.1 — the candidate+verify stage shuffles 1.2 MiB); both
+      // key's ONLY large exchange (30 of 31 MiB at sf0.1, measured at
+      // dbd603a — the candidate+verify stage shuffles 1.2 MiB); both
       // costs are output-sized and exist solely for run-to-run
       // determinism of the dumped pair set; a 100 TB consumer feeding
       // CC / keep-best (keyed consumers) would drop the orderBy and
@@ -1066,7 +1066,7 @@ object TextSimOps {
           // distinct dropped — same r10 re-measurement as exactWordPairs
           // (the dense regenerated corpus flipped r5's verify-first
           // call): sf0.1 A/B 14.5 s dedup-first vs 17-25 s verify-first
-          // (ContainProbe).
+          // (measured at dfce344).
           containmentCandidatesFrom(ranked, tau).distinct()
             .join(dt.select(col("doc_id").as("da"), col("wh").as("wa"),
               col("c").as("ca")), "da")

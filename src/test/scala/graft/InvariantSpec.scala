@@ -296,23 +296,18 @@ class InvariantSpec extends SparkTestBase {
         .orderBy("g").collect().map(_.toString).toSeq
       assert(got == want,
         s"trial $trial (domain $domain) drifts:\n got  $got\n want $want")
-      // the r13 input forms must agree with the raw path on the same
-      // data: pre-counted tie blocks (weighted sum(cnt) re-collapse)
-      // and collapsed=true (re-collapse skipped under the uniqueness
-      // guarantee) — otherwise a cnt-branch regression is visible
+      // the pre-counted tie-block form must agree with the raw path on
+      // the same data — otherwise a cnt-branch regression is visible
       // only through end-to-end parity of its three callers
       val blocks = df.groupBy(col("g"), col("v"))
         .agg(count(lit(1)).as("cnt"))
-      for ((form, flags) <- Seq(
-          ("preCounted", false), ("collapsed", true))) {
-        val alt = graft.operators.AggOps.countPercentiles(
-            blocks, "g", ps, preCounted = true, collapsed = flags)
-          .select(col("g"), round6(col("p25")).as("p25"),
-            round6(col("p50")).as("p50"), round6(col("p90")).as("p90"))
-          .orderBy("g").collect().map(_.toString).toSeq
-        assert(alt == want,
-          s"trial $trial $form form drifts:\n got  $alt\n want $want")
-      }
+      val alt = graft.operators.AggOps.countPercentiles(
+          blocks, "g", ps, preCounted = true)
+        .select(col("g"), round6(col("p25")).as("p25"),
+          round6(col("p50")).as("p50"), round6(col("p90")).as("p90"))
+        .orderBy("g").collect().map(_.toString).toSeq
+      assert(alt == want,
+        s"trial $trial preCounted form drifts:\n got  $alt\n want $want")
     }
   }
 
@@ -386,8 +381,7 @@ class InvariantSpec extends SparkTestBase {
     "(r13 review: no silent semantics switch)") {
     // The pre-counted switch is an explicit parameter, never a
     // column-name sniff: an unrelated column named cnt must fail fast
-    // rather than silently weight every row, and the collapsed skip
-    // is only reachable through the pre-counted contract.
+    // rather than silently weight every row.
     val ss = spark
     import ss.implicits._
     val plain = Seq(("A", 1L), ("A", 2L)).toDF("g", "v")
@@ -402,17 +396,12 @@ class InvariantSpec extends SparkTestBase {
         plain, "g", Seq(("p50", 0.5)), preCounted = true) // no cnt
     }
     assert(e2.getMessage.contains("cnt"), e2.getMessage)
-    val e3 = intercept[IllegalArgumentException] {
-      graft.operators.AggOps.countPercentiles(
-        plain, "g", Seq(("p50", 0.5)), collapsed = true) // needs preCounted
-    }
-    assert(e3.getMessage.contains("collapsed"), e3.getMessage)
     // and the public GraftOps surface validates fractions
-    val e4 = intercept[IllegalArgumentException] {
+    val e3 = intercept[IllegalArgumentException] {
       graft.operators.GraftOps.countPercentiles(
         plain, "g", Seq(("bad", 1.5)))
     }
-    assert(e4.getMessage.contains("fraction"), e4.getMessage)
+    assert(e3.getMessage.contains("fraction"), e3.getMessage)
   }
 
   test("countPercentiles keeps count(*) semantics under NULL values " +

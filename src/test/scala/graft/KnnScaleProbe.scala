@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r10): locates the exact-vs-IVF kNN-graph crossover. Builds
@@ -15,14 +14,7 @@ object KnnScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_knn_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f
       (r, (System.nanoTime() - t0) / 1e9)
@@ -34,12 +26,7 @@ object KnnScaleProbe {
     ProbeScratch.runWith(outRoot) {
     for (k <- Seq(1, 2, 4, 8)) {
       val dir = s"$outRoot/x$k"
-      // Snapshot the live pin ids BEFORE this rung so the end-of-rung
-      // sweep releases exactly what the rung created (ADVICE r14): a
-      // global unpersist is correct only while no pin is hoisted above
-      // the loop — a future shared pin would be silently dropped after
-      // rung 1 and recomputed every later rung. Mirrors Bench.scala.
-      val pinsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val pinsBefore = Harness.pinSnapshot(spark)
       (0 until k).map { j =>
         if (j == 0) emb
         else emb.select(
@@ -70,13 +57,9 @@ object KnnScaleProbe {
         f"exact_rows=$ne%7d exact_s=$te%7.2f " +
         f"ivf_rows=$ni%7d ivf_s=$ti%7.2f " +
         f"edge_recall=${hits.toDouble / ne}%.3f")
-      // sweep this rung's pins before the next (ADVICE r13): without
-      // it each larger rung is timed under the accumulated block
-      // pressure of all earlier rungs — the exact hazard
-      // PercentileScaleProbe already sweeps before timing
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!pinsBefore.contains(id)) rdd.unpersist(blocking = true)
-      }
+      // sweep this rung's pins before the next: otherwise each larger
+      // rung is timed under the block pressure of all earlier rungs
+      Harness.sweepPins(spark, pinsBefore)
       System.gc()
     }
     }

@@ -69,6 +69,25 @@ class OperatorSmokeSpec extends SparkTestBase {
         s"stale ⊘ entries: ${declaredNoOracle -- unoracled}")
   }
 
+  test("Harness.sweepPins releases a key's pins and spares earlier ones") {
+    val sc = spark.sparkContext
+    val outside = Harness.pinSnapshot(spark)
+    val kept = Tables.pin(spark.range(10).toDF(), eager = true)
+    val before = Harness.pinSnapshot(spark)
+    val keptIds = before -- outside
+    assert(keptIds.nonEmpty, "the eager pin registered no persistent RDD")
+    SparkEntry.queries("graph_kcore")(spark, sf).queryExecution.toRdd.count()
+    val created = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(created.nonEmpty, "graph_kcore created no pin")
+    Harness.sweepPins(spark, before)
+    val after = sc.getPersistentRDDs.keySet.toSet
+    assert((after intersect created).isEmpty,
+      s"key pins survived the sweep: ${after intersect created}")
+    assert(keptIds.subsetOf(after), "the sweep released a pre-snapshot pin")
+    assert(kept.count() == 10)
+    Harness.sweepPins(spark, outside)
+  }
+
   test("entry (flagship) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r13): evidence for DESIGN §15.2.1's saturation claim —
@@ -18,19 +17,13 @@ object PercentileScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_pct_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f
       (r, (System.nanoTime() - t0) / 1e9)
     }
+    val pinsBefore = Harness.pinSnapshot(spark)
     val li = Tables.t(spark, base, "lineitem")
       .select(col("l_returnflag"), col("l_extendedprice"))
     // scratch discipline: ProbeScratch refuses a pre-existing
@@ -45,7 +38,7 @@ object PercentileScaleProbe {
       // the session's parallelism so the corpus layout matches what
       // the canonical bench reads (r13 review: a fixed 8 skewed the
       // written layout under SPARK_GRAFT_CPUS=32)
-      (0 until k).map(_ => li).reduce(_ union _).coalesce(cpus.toInt)
+      (0 until k).map(_ => li).reduce(_ union _).coalesce(cpus)
         .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       val rows = Tables.t(spark, dir, "lineitem").count()
       val blocks = Tables.t(spark, dir, "lineitem")
@@ -56,12 +49,11 @@ object PercentileScaleProbe {
       SparkEntry.queries("agg_mad")(spark, dir)
         .queryExecution.toRdd.count()
       // sweep dead localCheckpoint pins from prior runs/sizes before
-      // timing (r13 review): without it, the k=8 run executes under
-      // the block pressure of every earlier run's pins, and a
-      // super-linear reading could be pin accumulation rather than the
-      // algorithmic scaling this probe exists to measure
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      // timing: without it, the k=8 run executes under the block
+      // pressure of every earlier run's pins, and a super-linear
+      // reading could be pin accumulation rather than the algorithmic
+      // scaling this probe exists to measure
+      Harness.sweepPins(spark, pinsBefore)
       System.gc()
       val (n, t) = time(
         SparkEntry.queries("agg_mad")(spark, dir)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r10, extended r11): measured scaling evidence for the
@@ -36,14 +35,7 @@ object ScaleProbe {
     val ks = if (args.length > 2) args(2).split(",").toSeq.map(_.toInt)
       else Seq(1, 2, 4, 8)
     val mode = if (args.length > 3) args(3) else "closed"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
     @volatile var write = 0L
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {

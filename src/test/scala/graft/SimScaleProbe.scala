@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r15, VERDICT r14 #4): scaling ladder for the similarity
@@ -27,14 +26,7 @@ object SimScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_sim_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
     spark.conf.set("spark.graft.sim.forceGeneral", "true")
     @volatile var write = 0L
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -66,7 +58,7 @@ object SimScaleProbe {
             .select(baseCols.map(col): _*)
         }.reduce(_ union _).coalesce(4)
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        val pinsBefore = spark.sparkContext.getPersistentRDDs.keySet
+        val pinsBefore = Harness.pinSnapshot(spark)
         for (key <- Seq("sim_containment_pairs", "sim_ngram_jaccard")) {
           // fresh frame per timed draw (shuffle reuse on a shared
           // DataFrame object would fake a repeat)
@@ -77,11 +69,7 @@ object SimScaleProbe {
           println(f"[simscale] k=$k%d docs=${baseN * k}%6d $key%-24s " +
             f"rows=$n%9d wall=$t%7.2fs shuffle=${write / 1048576.0}%8.1f MiB")
         }
-        // targeted rung sweep (Bench/KnnScaleProbe pattern): release
-        // only this rung's pins, never a hoisted shared one
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!pinsBefore.contains(id)) rdd.unpersist(blocking = true)
-        }
+        Harness.sweepPins(spark, pinsBefore)
         System.gc()
       }
     }

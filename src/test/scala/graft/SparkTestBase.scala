@@ -3,22 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole forked test JVM (mirrors the
-  * driver harness config: UTC, small shuffle partitions, nanosAsLong). */
+/** One shared local session for the whole forked test JVM: the harness
+  * config at a fixed `local[4]`, with a per-user warehouse dir. */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_${System.getProperty("user.name")}")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4,
+    "spark.sql.warehouse.dir" ->
+      s"/tmp/graft_warehouse_${System.getProperty("user.name")}")
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -76,7 +76,7 @@ def main() -> int:
         # cold-cost fold (VERDICT r14 #7): runs that carry per-attempt
         # "tries" expose try1 (the cold draw) vs the key's median —
         # the worst try1/median across runs adjudicates driver-route
-        # cold readings without a TimeKey rerun. Ratio uses the RAW
+        # cold readings without a rerun. Ratio uses the RAW
         # median, not the display-rounded one (a 0.001-rounded median
         # skews fast keys' ratios by tens of percent); a run with any
         # non-positive attempt time is a CRASH record (Bench negates
