@@ -36,12 +36,12 @@ object Tables {
     * re-resolves. The corpus is read-only (TESTDATA.md); anything
     * engine-written goes through the sources/IngestOps readers, never
     * this registry. */
-  // Stopped sessions are evicted EXPLICITLY on the next access (ADVICE
-  // r11: a WeakHashMap here was self-defeating — the memoized
-  // DataFrames strongly reference their session, so weak keys could
-  // never be collected and stopped contexts were pinned for the JVM
-  // lifetime anyway). An isStopped sweep at each lookup is O(live
-  // sessions) — in practice 1 — and needs no listener plumbing.
+  // Stopped sessions are evicted EXPLICITLY on the next access, not
+  // through a WeakHashMap: the memoized DataFrames strongly reference
+  // their session, so weak keys could never be collected and stopped
+  // contexts would stay pinned for the JVM lifetime. An isStopped
+  // sweep at each lookup is O(live sessions) — in practice 1 — and
+  // needs no listener plumbing.
   // All access synchronizes on the map itself.
   private val leafMemo = new java.util.HashMap[SparkSession,
     scala.collection.mutable.Map[(String, String), DataFrame]]()
@@ -61,8 +61,8 @@ object Tables {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.read.parquet(s"$sfDir/$name.parquet")
     }
-    // Sweep stopped sessions on EVERY lookup, not only memoized ones
-    // (ADVICE r12): a JVM whose last t() calls all take the
+    // Sweep stopped sessions on EVERY lookup, not only memoized ones:
+    // a JVM whose last t() calls all take the
     // non-memoized branch must still release a stopped session's
     // cached plans. O(live sessions) — in practice 1.
     leafMemo.synchronized {
@@ -138,7 +138,7 @@ object Tables {
     *
     * Default is `localCheckpoint(eager=false)`: executor-local blocks, no
     * DFS round-trip — right for local mode and benchmarks. Its cluster
-    * caveat (VERDICT r6 item 3): executor loss discards the blocks AND the
+    * caveat: executor loss discards the blocks AND the
     * truncated lineage, failing the job. Setting
     * `spark.graft.checkpointDir=<dfs path>` switches every pin in the
     * engine to a RELIABLE `checkpoint()` into that directory, the
@@ -201,51 +201,6 @@ object Tables {
     * ops, so it is engine-independent.) */
   def round6(c: Column): Column =
     floor(c * lit(1e6) + lit(0.5)).cast("double") / lit(1e6)
-
-  /** The engine's ONE percentile-over-groups primitive (VERDICT r11
-    * #4/#6 — agg_mad, agg_percentile, pipe_quality_cut and
-    * pipe_dataset_card each hand-rolled it). Exact `percentile(e, p)`
-    * by default: the graded, oracle-matched path, whose contract is
-    * that every group's values buffer on one reducer
-    * (ObjectHashAggregate) — the cost of an EXACT order statistic.
-    * Setting `spark.graft.agg.approxPercentile=<accuracy>` swaps
-    * EVERY caller to `percentile_approx`'s mergeable Greenwald–Khanna
-    * sketch at that accuracy — bounded reducer memory, map-side
-    * combinable, the 100 TB path; rank error ≤ n/accuracy
-    * (InvariantSpec bounds the realized divergence on this corpus).
-    * The sketch result is cast to DOUBLE so both paths emit the same
-    * schema (percentile_approx returns the INPUT type; exact
-    * percentile returns DOUBLE). */
-  def groupPercentile(s: SparkSession, e: String, p: Double): Column =
-    if (percentileSketchOn(s)) {
-      val acc = s.conf.get("spark.graft.agg.approxPercentile")
-      // Validate HERE, naming the conf key: a bare toInt would throw
-      // a keyless NumberFormatException from deep inside plan build
-      // on natural spellings like "1e4" or "10000.0", and 0/-1 would
-      // fail later inside percentile_approx (r12 self-review).
-      val ad = try acc.trim.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.agg.approxPercentile must be a positive " +
-            s"integer accuracy (e.g. 10000), got '$acc'")
-      }
-      // Reject non-integral spellings instead of silently truncating
-      // ('10000.9' → 10000 would betray the error message's promise;
-      // ADVICE r12). '1e4' / '10000.0' remain accepted — integral.
-      require(ad > 0 && ad == math.rint(ad) && ad <= Int.MaxValue.toDouble,
-        "spark.graft.agg.approxPercentile must be a " +
-          s"positive integer accuracy (e.g. 10000), got '$acc'")
-      val a = ad.toInt
-      percentile_approx(expr(e), lit(p), lit(a)).cast("double")
-    } else expr(s"percentile($e, $p)")
-
-  /** THE single predicate deciding whether the percentile family runs
-    * the GK sketch — shared by [[groupPercentile]] and every
-    * count-based exact caller (r12 self-review: two hand-rolled
-    * copies of this gate could silently drift, splitting the family
-    * across paths under one conf value). */
-  def percentileSketchOn(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.agg.approxPercentile")
-      .exists(_.trim.nonEmpty)
 
   /** Oracle-side sum helper, mirrored text of [[sumDec]]. */
   def oSumDec(sqlExpr: String): String =

@@ -65,7 +65,7 @@ object AggOps {
     * Output: one row per group — n, vmax (the group max, free from
     * the prefix-sum table), and one DOUBLE per requested (alias, p).
     *
-    * Pre-counted input (r13, VERDICT r12 #1): with `preCounted =
+    * Pre-counted input: with `preCounted =
     * true` the input must carry a `cnt` column and each row is a
     * PRE-AGGREGATED tie block weighing `cnt` occurrences of `v`. An
     * EXPLICIT parameter, not a cnt-column sniff (r13 review: an
@@ -77,7 +77,7 @@ object AggOps {
     * same bucket total and the boundary window's crossing row yields
     * the same v whichever duplicate crosses.
     *
-    * Boundary-equality note (ADVICE r12): the finish ALWAYS computes
+    * Boundary-equality note: the finish ALWAYS computes
     * (1−f)·lo + f·hi, even when vlo == vhi, because DuckDB's
     * quantile_cont interpolates the same way — oracle parity is the
     * contract. Spark's percentile() can short-circuit equal
@@ -96,7 +96,7 @@ object AggOps {
           "is false — pass preCounted = true or drop/rename the column")
     require(scale > 0 && !scale.isInfinite,
       s"countPercentiles: scale must be a positive finite double, got $scale")
-    // Reserved-name guard (ADVICE r13): grp is threaded through the
+    // Reserved-name guard: grp is threaded through the
     // internal bucket/selection frames and this method's own
     // n/nr/vmax attachments — a collision silently overwrites it.
     // Lower-cased like exclusivePrefix's guard (r14 review: column
@@ -108,9 +108,8 @@ object AggOps {
       s"countPercentiles: grp column '$grp' collides with a reserved " +
         "column name (bk, lprev, v, cnt, n, nr, vmax, " +
         "btot, boff, pa, wh, f, r, rr, pos)")
-    // ADVICE r15: an empty request list used to be well-defined
-    // (returned n/vmax); since the r15 bucket-pruned selection it would
-    // die at aggs.head during plan construction — fail loud and named.
+    // An empty request list would die at aggs.head during plan
+    // construction — fail loud and named instead.
     require(ps.nonEmpty,
       "countPercentiles: at least one percentile required")
     val aliases = ps.map(_._1)
@@ -322,27 +321,17 @@ object AggOps {
     // Exact per-group quantiles: median/p90 via linear interpolation —
     // Spark percentile() and DuckDB quantile_cont() share the
     // (1-f)·lo + f·hi definition; round6 absorbs any last-ulp skew.
-    // r12: the exact path is COUNT-BASED ([[countPercentiles]] over
-    // the cents domain — tie blocks + two-level prefix sum + rank
-    // range-selection), byte-equal to percentile() (InvariantSpec)
-    // with NO one-reducer value buffering at any group width; the
-    // spark.graft.agg.approxPercentile conf still selects the
-    // mergeable GK sketch (groupPercentile) when a sketch is wanted.
+    // The path is COUNT-BASED ([[countPercentiles]] over the cents
+    // domain), byte-equal to percentile() (InvariantSpec) with NO
+    // one-reducer value buffering at any group width.
     "agg_percentile" -> ((s: SparkSession, d: String) =>
-      (if (percentileSketchOn(s))
-        t(s, d, "orders")
-          .groupBy(col("o_orderstatus"))
-          .agg(
-            round6(groupPercentile(s, "o_totalprice", 0.5)).as("p50"),
-            round6(groupPercentile(s, "o_totalprice", 0.9)).as("p90"))
-      else
-        countPercentiles(
+      countPercentiles(
           t(s, d, "orders").select(col("o_orderstatus"),
             (dec2(col("o_totalprice")) * 100).cast("long").as("v")),
           "o_orderstatus", Seq(("p50", 0.5), ("p90", 0.9)), scale = 100)
-          .select(col("o_orderstatus"),
-            round6(col("p50")).as("p50"),
-            round6(col("p90")).as("p90")))
+        .select(col("o_orderstatus"),
+          round6(col("p50")).as("p50"),
+          round6(col("p90")).as("p90"))
         .orderBy("o_orderstatus")),
 
     // Mode (most frequent value) per group, deterministic tie-break to
@@ -564,90 +553,70 @@ object AggOps {
     // doubles (integers and .5/.25 steps < 2⁵³) and both engines emit
     // identical bits. Two passes: (1) per-group exact median, (2) the
     // group-count-sized median dim broadcast back, deviations
-    // aggregated. Scale note (r12): BOTH exact percentile stages run
-    // COUNT-BASED ([[countPercentiles]] — no per-group value buffering
-    // at any width; the deviation stage stays integral by doubling:
+    // aggregated. BOTH percentile stages run COUNT-BASED
+    // ([[countPercentiles]] — no per-group value buffering at any
+    // width; the deviation stage stays integral by doubling:
     // dev2 = |2·xc − 2·med| is BIGINT because a p=0.5 interpolation
     // over integers lands on halves, and halving the interpolated
     // dev2 percentile back is an exact power-of-2 scaling, so the
     // result is bit-equal to percentile() over |xc − med| — asserted
-    // in InvariantSpec). spark.graft.agg.approxPercentile=<accuracy>
-    // still switches both stages to the mergeable GK sketch
-    // (groupPercentile; divergence bounded in InvariantSpec).
-    // max_robust_z emits NULL when MAD = 0 (a ≥50%-constant group;
-    // ADVICE r11 — division would produce Infinity, which the engines
+    // in InvariantSpec).
+    // max_robust_z emits NULL when MAD = 0 (a ≥50%-constant group is
+    // legal input; division would produce Infinity, which the engines
     // round incompatibly), via nullif in the shared finish string.
     "agg_mad" -> ((s: SparkSession, d: String) => {
       val xc = (dec2(col("l_extendedprice")) * 100).cast("long")
       val base = t(s, d, "lineitem")
         .select(col("l_returnflag"), xc.as("xc"))
-      if (percentileSketchOn(s)) {
-        val med = base.groupBy(col("l_returnflag"))
-          .agg(count(lit(1)).as("n"),
-            groupPercentile(s, "xc", 0.5).as("med"))
-        base.join(broadcast(med), "l_returnflag")
-          .select(col("l_returnflag"), col("n"), col("med"),
-            abs(col("xc").cast("double") - col("med")).as("dev"))
-          .groupBy(col("l_returnflag"), col("n"), col("med"))
-          .agg(groupPercentile(s, "dev", 0.5).as("mad"),
-            max(col("dev")).as("maxdev"))
-          .select(col("l_returnflag"), col("n"),
-            round6(col("med") / 100.0).as("median"),
-            round6(col("mad") / 100.0).as("mad"),
-            round6(expr(madRobustZSql)).as("max_robust_z"))
-          .orderBy("l_returnflag")
-      } else {
-        // r13 (VERDICT r12 #1): the raw corpus crosses the wire ONCE.
-        // Both percentile passes consume the SAME pinned tie-collapsed
-        // (group, value, cnt) table — dev2 = |2·xc − 2·med| depends
-        // only on xc, so pass 2's blocks derive from pass 1's with the
-        // counts carried over (two xc blocks symmetric around the
-        // median map to ONE dev2 value; since r15's bucket-pruned
-        // selection countPercentiles consumes such duplicate blocks
-        // as-is — their bucket totals sum and the boundary window's
-        // crossing row yields the same v either way — so no re-collapse
-        // exchange exists anywhere in pass 2). Pinning the collapsed
-        // table is what makes the fusion real: unpinned, the dev2
-        // subtree would re-execute the row-scaled collapse.
-        // eager (r15): blocks feeds pass 1's THREE consumers, two of
-        // them broadcast-build jobs that run concurrently — a lazy pin
-        // lets those jobs race to re-execute the row-scaled collapse
-        // before any block lands (see countPercentiles' internal-pin
-        // note); materializing it first is the staged-floor schedule
-        val blocks = pin(base
-          .groupBy(col("l_returnflag"), col("xc"))
-          .agg(count(lit(1)).as("cnt")), eager = true)
-        // pinned: the group-count-sized median dim feeds BOTH the
-        // deviation pass and the final attach (both broadcasts — same
-        // race, and eager here also forces pass 1 to finish before
-        // pass 2's jobs start instead of interleaving on the pool)
-        val med = pin(countPercentiles(
-          blocks.select(col("l_returnflag"), col("xc").as("v"),
-            col("cnt")),
-          "l_returnflag", Seq(("med", 0.5)),
-          preCounted = true), eager = true)
-        val dev2 = blocks
-          .join(broadcast(med.select(col("l_returnflag"), col("med"))),
-            "l_returnflag")
-          .select(col("l_returnflag"),
-            abs(col("xc") * 2 - (col("med") * 2).cast("long")).as("v"),
-            col("cnt"))
-        // scale = 2: boundary values rescale as fl(dev2/2) = the exact
-        // |xc − med| doubles percentile() would interpolate — identical
-        // IEEE chain, no post-hoc halving of the interpolant
-        countPercentiles(dev2,
-            "l_returnflag", Seq(("mad", 0.5)), scale = 2,
-            preCounted = true)
-          .select(col("l_returnflag"), col("n"),
-            (col("vmax") / lit(2.0)).as("maxdev"), col("mad"))
-          .join(broadcast(med.select(col("l_returnflag"), col("med"))),
-            "l_returnflag")
-          .select(col("l_returnflag"), col("n"),
-            round6(col("med") / 100.0).as("median"),
-            round6(col("mad") / 100.0).as("mad"),
-            round6(expr(madRobustZSql)).as("max_robust_z"))
-          .orderBy("l_returnflag")
-      }
+      // The raw corpus crosses the wire ONCE.
+      // Both percentile passes consume the SAME pinned tie-collapsed
+      // (group, value, cnt) table — dev2 = |2·xc − 2·med| depends
+      // only on xc, so pass 2's blocks derive from pass 1's with the
+      // counts carried over (two xc blocks symmetric around the
+      // median map to ONE dev2 value; countPercentiles' bucket-pruned
+      // selection consumes such duplicate blocks as-is — their bucket totals sum and the boundary window's
+      // crossing row yields the same v either way — so no re-collapse
+      // exchange exists anywhere in pass 2). Pinning the collapsed
+      // table is what makes the fusion real: unpinned, the dev2
+      // subtree would re-execute the row-scaled collapse.
+      // eager: blocks feeds pass 1's THREE consumers, two of
+      // them broadcast-build jobs that run concurrently — a lazy pin
+      // lets those jobs race to re-execute the row-scaled collapse
+      // before any block lands (see countPercentiles' internal-pin
+      // note); materializing it first is the staged-floor schedule
+      val blocks = pin(base
+        .groupBy(col("l_returnflag"), col("xc"))
+        .agg(count(lit(1)).as("cnt")), eager = true)
+      // pinned: the group-count-sized median dim feeds BOTH the
+      // deviation pass and the final attach (both broadcasts — same
+      // race, and eager here also forces pass 1 to finish before
+      // pass 2's jobs start instead of interleaving on the pool)
+      val med = pin(countPercentiles(
+        blocks.select(col("l_returnflag"), col("xc").as("v"),
+          col("cnt")),
+        "l_returnflag", Seq(("med", 0.5)),
+        preCounted = true), eager = true)
+      val dev2 = blocks
+        .join(broadcast(med.select(col("l_returnflag"), col("med"))),
+          "l_returnflag")
+        .select(col("l_returnflag"),
+          abs(col("xc") * 2 - (col("med") * 2).cast("long")).as("v"),
+          col("cnt"))
+      // scale = 2: boundary values rescale as fl(dev2/2) = the exact
+      // |xc − med| doubles percentile() would interpolate — identical
+      // IEEE chain, no post-hoc halving of the interpolant
+      countPercentiles(dev2,
+          "l_returnflag", Seq(("mad", 0.5)), scale = 2,
+          preCounted = true)
+        .select(col("l_returnflag"), col("n"),
+          (col("vmax") / lit(2.0)).as("maxdev"), col("mad"))
+        .join(broadcast(med.select(col("l_returnflag"), col("med"))),
+          "l_returnflag")
+        .select(col("l_returnflag"), col("n"),
+          round6(col("med") / 100.0).as("median"),
+          round6(col("mad") / 100.0).as("mad"),
+          round6(expr(madRobustZSql)).as("max_robust_z"))
+        .orderBy("l_returnflag")
     }),
 
     // Gini coefficient per group — the concentration/inequality
@@ -656,8 +625,8 @@ object AggOps {
     // Rank ties are harmless BY ALGEBRA (equal x values contribute the
     // same Σ i·x under any tie permutation), so the oracle's row_number
     // is deterministic where it matters — and the engine never ranks
-    // ROWS at all (r12, VERDICT r11 #3; the r11 plan's row_number
-    // window sorted each group's full row set in ONE task). Tie blocks
+    // ROWS at all (a row_number window would sort each group's full
+    // row set in ONE task). Tie blocks
     // make Σ i·x a closed form per DISTINCT value: ranks sprev+1 …
     // sprev+cnt contribute x·(sprev·cnt + cnt·(cnt+1)/2), so the plan
     // is (1) hash-collapse rows to (group, value, cnt) — map-side
@@ -815,7 +784,7 @@ object AggOps {
   private[graft] val linregR2Sql = s"($lrNum * $lrNum) / ($lrDenX * $lrDenY)"
 
   /** agg_mad robust-z finish, shared VERBATIM with the oracle:
-    * nullif guards the MAD = 0 group (ADVICE r11 — ≥50% identical
+    * nullif guards the MAD = 0 group (≥50% identical
     * values is legal input; Infinity survives differently in the two
     * engines' round6, NULL identically). */
   private[graft] val madRobustZSql = "maxdev / (1.4826 * nullif(mad, 0))"

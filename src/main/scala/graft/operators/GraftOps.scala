@@ -177,32 +177,32 @@ object GraftOps {
     * the library default (6) covers diameter 126, far beyond any
     * near-dup chain a τ=90 threshold admits at the graded scales.
     *
-    * With `checked = true` (the shipped keys' setting) the plan appends
-    * one guard propagate round and RAISES at runtime if any label would
-    * still move — an under-budgeted run can never silently emit a
-    * wrong clustering (InvariantSpec proves both directions: a long
-    * synthetic chain raises below budget and converges at it). */
+    * The plan always appends one guard propagate round and RAISES at
+    * runtime if any label would still move — an under-budgeted run
+    * can never silently emit a wrong clustering (InvariantSpec proves
+    * both directions: a long synthetic chain raises below budget and
+    * converges at it). */
   def connectedComponents(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, rounds: Int = 6, checked: Boolean = true): DataFrame = {
+      sfDir: String, rounds: Int = 6): DataFrame = {
     require(rounds >= 1, "rounds must be ≥ 1")
-    TextSimOps.clusterCC(spark, sfDir, rounds, checked)
+    TextSimOps.clusterCC(spark, sfDir, rounds)
   }
 
   /** Generic min-label connected components over an arbitrary
-    * undirected pair set `pairs(a, b)` and node set `nodes(v)` (r11:
-    * [[connectedComponents]]'s propagation core promoted to a public
-    * edge-list API — the `graph_cc` key runs exactly this). Returns
-    * `(v, l)` with l = the component's min node id, unsorted. Same
-    * rounds-vs-diameter contract and `checked` guard semantics as
-    * [[connectedComponents]] (see its scaladoc). */
+    * undirected pair set `pairs(a, b)` and node set `nodes(v)`
+    * ([[connectedComponents]]'s propagation core as a public edge-list
+    * API — the `graph_cc` key runs exactly this). Returns `(v, l)` with
+    * l = the component's min node id, unsorted. Same rounds-vs-diameter
+    * contract and convergence guard as [[connectedComponents]] (see
+    * its scaladoc). */
   def connectedComponentsOf(nodes: DataFrame, pairs: DataFrame,
-      rounds: Int = 6, checked: Boolean = true): DataFrame = {
+      rounds: Int = 6): DataFrame = {
     require(rounds >= 1, "rounds must be ≥ 1")
     require(nodes.columns.toSeq == Seq("v"),
       "nodes must have exactly column (v)")
     require(pairs.columns.toSeq == Seq("a", "b"),
       "pairs must have exactly columns (a, b)")
-    GraphOps.ccCore(nodes, pairs, rounds, checked, "connectedComponentsOf")
+    GraphOps.ccCore(nodes, pairs, rounds, "connectedComponentsOf")
   }
 
   /** Changelog between two keyed snapshots `(k, p)` → rows

@@ -78,7 +78,7 @@ object GraphOps {
     // the reference platform's signature query shape ("is this address
     // within k hops of that entity"; SURVEY §0 [PUBLIC]). 4 rounds of
     // DELTA-FRONTIER expansion over the undirected supplier↔part edge
-    // set (VERDICT r6 item 4): each round joins edges against ONLY the
+    // set: each round joins edges against ONLY the
     // nodes first reached last round — with unit weights the discovery
     // hop IS the min hop, so excluding already-settled nodes (keyed
     // left-anti against the accumulated distance table) is exact, and
@@ -205,8 +205,8 @@ object GraphOps {
     // order: 756 components, max size 17 at sf0.1 — measured; the full
     // bipartite graph is ONE giant component through the supplier hubs,
     // which benchmarks corpus density, not the operator, and its Θ(Σ
-    // comp²) recursive-CTE oracle would be intractable). checked = true:
-    // the convergence guard makes a silent under-budget mislabeling
+    // comp²) recursive-CTE oracle would be intractable). The
+    // convergence guard makes a silent under-budget mislabeling
     // impossible. The oracle is an INDEPENDENT formulation (transitive
     // reachability via recursive CTE, min label per node) — two
     // different algorithms must agree on every node. rounds = 4 covers
@@ -219,7 +219,7 @@ object GraphOps {
         .distinct()
       val nodes = pairs.select(col("a").as("v"))
         .union(pairs.select(col("b").as("v"))).distinct()
-      ccCore(nodes, pairs, rounds = 4, checked = true, "graph_cc")
+      ccCore(nodes, pairs, rounds = 4, "graph_cc")
         .select(col("v").as("node"), col("l").as("comp"))
         .orderBy("node")
     }),
@@ -285,8 +285,8 @@ object GraphOps {
     * THEN shortcut (pointer jump, l ← l(l(v))), so converged radius
     * roughly doubles per round and the budget needed is O(log diameter)
     * — the converged radius after r rounds is 2^(r+1)−2 (InvariantSpec's
-    * chain-guard contract). With `checked = true` the plan appends ONE
-    * guard propagate round and raises at runtime if any label still
+    * chain-guard contract). The plan always appends ONE guard
+    * propagate round and raises at runtime if any label still
     * changed: stationarity under monotone min-propagation implies labels
     * are constant per component and each component's constant is its min
     * member id (l(v) ≤ v always), so an unconverged or wrong assignment
@@ -312,7 +312,7 @@ object GraphOps {
     * (quotient graph) and the component min survives as a label (the min
     * member m has no smaller neighbor, so l₁(m) = m). */
   private[graft] def ccCore(nodes: DataFrame, pairs: DataFrame,
-      rounds: Int, checked: Boolean, errName: String): DataFrame = {
+      rounds: Int, errName: String): DataFrame = {
     val edges = pairs
       .select(explode(array(
         struct(col("a").as("ev"), col("b").as("eu")),
@@ -358,8 +358,7 @@ object GraphOps {
           col("l") === col("sv"))
         .select(col("v"), col("fl").as("l"))
     }
-    if (!checked) assign
-    else step(assign)
+    step(assign)
       .join(assign.select(col("v").as("v0"), col("l").as("l0")),
         col("v") === col("v0"))
       .select(col("v"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
-/** Non-parquet ingest + partition-pruned read keys (VERDICT r5 #3/#4):
+/** Non-parquet ingest + partition-pruned read keys:
   * SURVEY §2.1 declared CSV/JSON readers and Hive-style partition
   * layouts "capability, no key" — these keys make the claims testable
   * end-to-end against the DuckDB oracle.
@@ -37,8 +37,8 @@ object IngestOps {
   /** 2024-01-05; inside the 19723..19752 event-day range at every SF. */
   private val PrunedDay = 19727L
 
-  /** Fixture root derived from the PROCESS cwd, not a baked repo path
-    * (ADVICE r6: the hardcoded /root/repo broke a moved checkout). */
+  /** Fixture root derived from the PROCESS cwd, not a baked repo path,
+    * so a moved checkout keeps working. */
   private[graft] def fixtureRoot(d: String): String =
     s"${new java.io.File("target/fixtures").getAbsolutePath}/" +
       new java.io.File(d).getName
@@ -46,7 +46,7 @@ object IngestOps {
   /** Fixture writes memoized per (JVM, path): writers are deterministic
     * per sfDir and the path embeds the SF, so re-running a key re-reads
     * the identical bytes instead of re-writing them. This is what keeps
-    * the write scaffolding out of Bench's timed region (ADVICE r6): the
+    * the write scaffolding out of Bench's timed region: the
     * first call — Bench's untimed prepare, or attempt 1 — pays the
     * write; every later call is read-only. */
   private val writtenOnce =
@@ -347,8 +347,8 @@ object IngestOps {
     }
 
   /** Pre-materializes every fixture this module's keys read, so a
-    * caller that wants write scaffolding OUT of a timed region (Bench —
-    * ADVICE r6) can pay it once up front; the per-key `once` memo then
+    * caller that wants write scaffolding OUT of a timed region (Bench)
+    * can pay it once up front; the per-key `once` memo then
     * makes the in-key write calls no-ops. */
   private[graft] def prepareFixtures(s: SparkSession, d: String): Unit = {
     writeCsvFixture(s, d); writeJsonFixture(s, d); writeOrcFixture(s, d)
@@ -356,19 +356,16 @@ object IngestOps {
     writeDayDimFixture(s, d); writeBucketedTables(s, d)
   }
 
-  /** Oracle reads the fixture the Verify run just wrote. Resolution
-    * order for the fixture SF (ADVICE r6 — the old form baked sf0.01 +
-    * an absolute repo path at object init, so a Verify run at another
-    * SF emitted oracle SQL aimed at a stale fixture): the
-    * `graft.oracle.sf` system property, which Verify sets from ITS OWN
-    * sfDir argument before dumping oracle_sql.json; then
-    * SPARK_GRAFT_ORACLE_SF; then the driver's sf0.01 default. `oracle`
-    * is a def so the path resolves at dump time, not class-load time,
-    * and the root follows the process cwd like [[fixtureRoot]]. */
+  /** Oracle reads the fixture the Verify run just wrote. The fixture
+    * SF is the `graft.oracle.sf` system property, which Verify sets
+    * from ITS OWN sfDir argument before dumping oracle_sql.json, and
+    * otherwise sf0.01, the graded scale. `oracle` is a def so the
+    * path resolves at dump time, not class-load time — a Verify run at
+    * another SF must not emit oracle SQL aimed at a stale fixture — and
+    * the root follows the process cwd like [[fixtureRoot]]. */
   def oracle: Map[String, String] = {
     val OracleFixtures = s"${new java.io.File("target/fixtures").getAbsolutePath}/" +
-      sys.props.getOrElse("graft.oracle.sf",
-        sys.env.getOrElse("SPARK_GRAFT_ORACLE_SF", "sf0.01"))
+      sys.props.getOrElse("graft.oracle.sf", "sf0.01")
     Map(
     "scan_csv_messy" ->
       ("SELECT TRY_CAST(c0 AS BIGINT) AS event_id, " +

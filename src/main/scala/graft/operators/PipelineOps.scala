@@ -138,7 +138,7 @@ object PipelineOps {
 
   /** The curation gate — the post-dedup tail of `pipe_curation_e2e`
     * (absolute quality cut → reingestion-stable hash split →
-    * per-(lang, split) summary), factored out (r14, VERDICT r13 #6) so
+    * per-(lang, split) summary), factored out so
     * the streaming dedup-on-ingest admitted set (NearDupStream /
     * `stream_neardup`) can feed the SAME gate the batch composite
     * runs: curation = ANY admitted set ⋈ this gate. `keep` is any
@@ -177,11 +177,11 @@ object PipelineOps {
     // writer would chunk it. Everything is integer: one keyed window
     // (cumulative token sum per source) + one (source, pack)-keyed agg,
     // and reingestion under the same ordering key reproduces identical
-    // packs (the sample_split_hash stability discipline). r11
-    // (VERDICT r10 #5): the key now RUNS the two-level bucketed
-    // prefix sum ([[packSequences]]) — per-(source, bucket) local
-    // cumsum + a bucket-count-sized per-source offset table — instead
-    // of routing each source through one task; InvariantSpec proves
+    // packs (the sample_split_hash stability discipline). The key
+    // RUNS the two-level bucketed prefix sum ([[packSequences]]) —
+    // per-(source, bucket) local cumsum + a bucket-count-sized
+    // per-source offset table — instead of routing each source
+    // through one task; InvariantSpec proves
     // the output invariant to the bucket width (cumsum is a prefix
     // monoid, so cum = offset + local is exact wherever the
     // boundaries fall), and the single-window form survives only as
@@ -361,7 +361,7 @@ object PipelineOps {
     }),
 
     // The BPE iteration pipe_bpe_pairs' scaladoc promises, made
-    // executable end-to-end (r12, VERDICT r11 #7): LEARN-AND-APPLY
+    // executable end-to-end: LEARN-AND-APPLY
     // BpeMerges merges over the word-frequency table, then report the
     // top-20 weighted symbols of the merged vocabulary. Each step is
     // VOCABULARY-sized — the corpus crosses the wire exactly once to
@@ -486,20 +486,18 @@ object PipelineOps {
     // only cluster-count-sized aggs and map-side expressions on top of
     // the pair graph, so its cost ≈ dedup_cluster_cc's. This is the plan
     // a real corpus-curation run submits once per ingest.
-    // CC is paid ONCE inside this composite (VERDICT r4 #5 checked, r5):
+    // CC is paid ONCE inside this composite:
     // `clusters` is referenced exactly once in the plan, and clusterCC's
     // per-round localCheckpoint chain materializes on this key's single
     // action — measured at sf0.1, pipe_curation_e2e ≈ dedup_keep_best ≈
     // CC + the cluster-count-sized keep step (8.9 s vs 8.9 s), not 2×CC.
     "pipe_curation_e2e" -> ((s: SparkSession, d: String) => {
-      // checked = true: same convergence guard as dedup_cluster_cc /
-      // dedup_keep_best — never silently emit an unconverged clustering.
-      // TextSimOps.CcRounds IS the dedup family's budget (ADVICE r15:
-      // a literal here would silently fall behind a family-wide budget
-      // change; covered radius 30 ≫ measured diameter 6–8, guard
-      // raises loudly on under-budget).
-      val clusters = TextSimOps.clusterCC(s, d, TextSimOps.CcRounds,
-        checked = true)
+      // clusterCC's convergence guard (the same as dedup_cluster_cc /
+      // dedup_keep_best) never lets an unconverged clustering out.
+      // TextSimOps.CcRounds IS the dedup family's budget: a literal
+      // here would silently fall behind a family-wide budget change
+      // (covered radius 30 ≫ measured diameter 6–8).
+      val clusters = TextSimOps.clusterCC(s, d, TextSimOps.CcRounds)
       val docs = qualityDocs(s, d)
       val keep = clusters.join(docs, "doc_id")
         .groupBy(col("cluster"))
@@ -563,7 +561,6 @@ object PipelineOps {
       // identical to the oracle's quantile_cont (r12 self-review: an
       // integer-domain interpolation divided AFTER would add a
       // rounding step that can flip round6 at its half boundary).
-      // The conf gate still selects the GK sketch.
       // r13 (§15.2.1 discipline): the card stats and the median share
       // ONE corpus scan — docs collapse to (lang, q6) blocks carrying
       // cnt + token aggregates (every card stat is block-decomposable:
@@ -575,46 +572,31 @@ object PipelineOps {
       // constant 1, so (g, v) is NOT unique across languages — fine
       // since r15: countPercentiles' bucket-pruned selection consumes
       // duplicate pre-counted blocks as-is (bucket totals sum them).
-      val card =
-        if (percentileSketchOn(s)) {
-          val quant = docs.agg(
-            round6(groupPercentile(s, "q6 / 1000000.0", 0.5)).as("q_p50"))
-          docs.agg(
-            count(lit(1)).as("n_docs"),
-            countDistinct(col("lang")).as("n_langs"),
-            sum(col("n_tokens")).cast("long").as("total_tokens"),
-            min(col("n_tokens")).as("min_tokens"),
-            max(col("n_tokens")).as("max_tokens"),
-            sum(col("q6")).as("sum_q6"))
-            .join(broadcast(quant), lit(true), "left")
-        } else {
-          val blocks = pin(docs
-            .groupBy(col("lang"), col("q6"))
-            .agg(count(lit(1)).as("cnt"),
-              sum(col("n_tokens")).cast("long").as("tok"),
-              min(col("n_tokens")).as("mintok"),
-              max(col("n_tokens")).as("maxtok")))
-          val quant = AggOps.countPercentiles(
-              blocks.select(lit(1).as("g"), col("q6").as("v"),
-                col("cnt")), "g",
-              Seq(("q6p", 0.5)), scale = 1e6, preCounted = true)
-            .select(round6(col("q6p")).as("q_p50"))
-          blocks.agg(
-            // coalesce: count(*) over an empty corpus is 0, and
-            // sum-over-empty is NULL — keep the count contract
-            coalesce(sum(col("cnt")), lit(0L)).as("n_docs"),
-            countDistinct(col("lang")).as("n_langs"),
-            sum(col("tok")).as("total_tokens"),
-            min(col("mintok")).as("min_tokens"),
-            max(col("maxtok")).as("max_tokens"),
-            sum(col("q6") * col("cnt")).as("sum_q6"))
-            .join(broadcast(quant), lit(true), "left")
-        }
+      val blocks = pin(docs
+        .groupBy(col("lang"), col("q6"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("n_tokens")).cast("long").as("tok"),
+          min(col("n_tokens")).as("mintok"),
+          max(col("n_tokens")).as("maxtok")))
+      val quant = AggOps.countPercentiles(
+          blocks.select(lit(1).as("g"), col("q6").as("v"),
+            col("cnt")), "g",
+          Seq(("q6p", 0.5)), scale = 1e6, preCounted = true)
+        .select(round6(col("q6p")).as("q_p50"))
+      val card = blocks.agg(
+        // coalesce: count(*) over an empty corpus is 0, and
+        // sum-over-empty is NULL — keep the count contract
+        coalesce(sum(col("cnt")), lit(0L)).as("n_docs"),
+        countDistinct(col("lang")).as("n_langs"),
+        sum(col("tok")).as("total_tokens"),
+        min(col("mintok")).as("min_tokens"),
+        max(col("maxtok")).as("max_tokens"),
+        sum(col("q6") * col("cnt")).as("sum_q6"))
+        .join(broadcast(quant), lit(true), "left")
       // quant attaches INSIDE card via LEFT on TRUE, not crossJoin: an
-      // empty/all-NULL-quality corpus leaves quant EMPTY on the count
-      // path, and a cross join would annihilate the one-row card
-      // instead of emitting NULL q_p50 (r12 self-review; the sketch
-      // path aggregates to 1 row always)
+      // empty/all-NULL-quality corpus leaves quant EMPTY, and a cross
+      // join would annihilate the one-row card instead of emitting
+      // NULL q_p50
       card
         .crossJoin(broadcast(dups))
         .select(col("n_docs"), col("n_langs"), col("total_tokens"),
@@ -679,58 +661,44 @@ object PipelineOps {
     // exact quality doubles BEFORE interpolating, so the IEEE chain
     // is identical to percentile(quality) — r12 self-review); n_docs
     // is countPercentiles' all-rows n (count(*) parity even when a
-    // doc's quality is NULL). The conf gate still selects the
-    // mergeable GK sketch.
+    // doc's quality is NULL).
     "pipe_quality_cut" -> ((s: SparkSession, d: String) => {
       val docs = t(s, d, "documents")
         .withColumn("quality", TextAnalysisOps.qualityCol)
         .withColumn("n_tokens", size(split(col("text"), " ")))
-      if (percentileSketchOn(s)) {
-        val thr = docs.groupBy(col("lang"))
-          .agg(round6(groupPercentile(s, "quality", 0.75)).as("thr"),
-            count(lit(1)).as("n_docs"))
-        docs.join(broadcast(thr), "lang")
-          .where(col("quality") >= col("thr"))
-          .groupBy(col("lang"))
-          .agg(max(col("n_docs")).as("n_docs"), max(col("thr")).as("thr"),
-            count(lit(1)).as("kept"), min(col("quality")).as("min_kept_q"),
-            sum(col("n_tokens")).cast("long").as("kept_tokens"))
-          .orderBy("lang")
-      } else {
-        // r13 (VERDICT r12 #4): the corpus crosses the wire ONCE —
-        // one row-scaled collapse to (lang, q6) tie blocks carrying
-        // cnt + token sums, pinned; the p75 threshold consumes the
-        // blocks pre-counted (countPercentiles sum(cnt) path) and the
-        // gate + summary run over the SAME blocks, value-domain-sized.
-        // Valid because every kept-side stat is block-decomposable:
-        // kept = Σcnt, kept_tokens = Σtok, min_kept_q = fl(min q6/1e6)
-        // (÷1e6 is monotone and q6 ↦ fl(q6/1e6) is EXACTLY the round6'd
-        // quality double — the same correctly-rounded division
-        // countPercentiles' scale=1e6 boundary rescale performs), and
-        // the gate compares that same double, so a block is kept iff
-        // each of its documents would have been.
-        // q6Of(quality), not q6Col: gate and threshold must flow from
-        // the ONE quality derivation bound above (r13 review)
-        val blocks = pin(docs
-          .groupBy(col("lang"),
-            TextAnalysisOps.q6Of(col("quality")).as("q6"))
-          .agg(count(lit(1)).as("cnt"),
-            sum(col("n_tokens")).cast("long").as("tok")))
-        val thr = AggOps.countPercentiles(
-            blocks.select(col("lang"), col("q6").as("v"), col("cnt")),
-            "lang", Seq(("t6", 0.75)), scale = 1e6,
-            preCounted = true)
-          .select(col("lang"), round6(col("t6")).as("thr"),
-            col("n").as("n_docs"))
-        blocks.join(broadcast(thr), "lang")
-          .where((col("q6").cast("double") / lit(1e6)) >= col("thr"))
-          .groupBy(col("lang"))
-          .agg(max(col("n_docs")).as("n_docs"), max(col("thr")).as("thr"),
-            sum(col("cnt")).as("kept"),
-            (min(col("q6")).cast("double") / lit(1e6)).as("min_kept_q"),
-            sum(col("tok")).as("kept_tokens"))
-          .orderBy("lang")
-      }
+      // The corpus crosses the wire ONCE —
+      // one row-scaled collapse to (lang, q6) tie blocks carrying
+      // cnt + token sums, pinned; the p75 threshold consumes the
+      // blocks pre-counted (countPercentiles sum(cnt) path) and the
+      // gate + summary run over the SAME blocks, value-domain-sized.
+      // Valid because every kept-side stat is block-decomposable:
+      // kept = Σcnt, kept_tokens = Σtok, min_kept_q = fl(min q6/1e6)
+      // (÷1e6 is monotone and q6 ↦ fl(q6/1e6) is EXACTLY the round6'd
+      // quality double — the same correctly-rounded division
+      // countPercentiles' scale=1e6 boundary rescale performs), and
+      // the gate compares that same double, so a block is kept iff
+      // each of its documents would have been.
+      // q6Of(quality), not q6Col: gate and threshold must flow from
+      // the ONE quality derivation bound above (r13 review)
+      val blocks = pin(docs
+        .groupBy(col("lang"),
+          TextAnalysisOps.q6Of(col("quality")).as("q6"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("n_tokens")).cast("long").as("tok")))
+      val thr = AggOps.countPercentiles(
+          blocks.select(col("lang"), col("q6").as("v"), col("cnt")),
+          "lang", Seq(("t6", 0.75)), scale = 1e6,
+          preCounted = true)
+        .select(col("lang"), round6(col("t6")).as("thr"),
+          col("n").as("n_docs"))
+      blocks.join(broadcast(thr), "lang")
+        .where((col("q6").cast("double") / lit(1e6)) >= col("thr"))
+        .groupBy(col("lang"))
+        .agg(max(col("n_docs")).as("n_docs"), max(col("thr")).as("thr"),
+          sum(col("cnt")).as("kept"),
+          (min(col("q6")).cast("double") / lit(1e6)).as("min_kept_q"),
+          sum(col("tok")).as("kept_tokens"))
+        .orderBy("lang")
     }))
 
   val oracle: Map[String, String] = Map(

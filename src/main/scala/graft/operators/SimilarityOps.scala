@@ -158,7 +158,7 @@ object SimilarityOps {
     // exact all-pairs cosine threshold — tiled (see object scaladoc for
     // why LSH candidate generation cannot apply at τ = 0.3 on this data
     // and why tiling, not broadcast, is the distributed shape).
-    // SCALE CONTRACT (r11, VERDICT r10 #6): recall-1 at cos ≥ 0.3 on
+    // SCALE CONTRACT: recall-1 at cos ≥ 0.3 on
     // near-uniform unit vectors is Θ(N²) compute BY SEMANTICS — the
     // plan bounds memory, nothing can bound work. The measured
     // renegotiation trade (KnnScaleProbe, DESIGN §3/§11): the
@@ -332,17 +332,17 @@ object SimilarityOps {
       .select(col("node"), col("nbr"), col("cos"), col("rn"))
   }
 
-  /** Multi-probe IVF k-NN graph (r11, probe count generalized r12):
-    * every vector candidates in its TOP-p trained cells instead of
-    * one. The single-probe form loses any true neighbor whose home
-    * cell differs — on THIS corpus's near-uniform vectors that was
-    * most of them (measured edge recall 0.19); with probing a pair is
-    * found iff the two vectors' top-p cell SETS intersect (r11 p=2:
-    * 0.563; r12 p=3: measured in ExtOpsSpec, VERDICT r11 #5). Pair
-    * work rises from Θ(Σ n_c²) to ≤ p² × that (each cell's occupancy
-    * ≤ p-folds) — same asymptotic family, same per-task memory bound
-    * via [[tiledPairs]]. p is the standard IVF recall/cost dial: at
-    * 100 TB it tunes per-query against the measured curve, and the
+  /** Multi-probe IVF k-NN graph: every vector candidates in its
+    * TOP-p trained cells (p = [[IvfGraphProbes]]) instead of one. The
+    * single-probe form loses any true neighbor whose home cell
+    * differs — on THIS corpus's near-uniform vectors that was most of
+    * them (measured edge recall 0.19); with probing a pair is found
+    * iff the two vectors' top-p cell SETS intersect (p=2: 0.563; p=3:
+    * measured in ExtOpsSpec). Pair work rises from Θ(Σ n_c²) to
+    * ≤ p² × that (each cell's occupancy ≤ p-folds) — same asymptotic
+    * family, same per-task memory bound via [[tiledPairs]]. p is the
+    * standard IVF recall/cost dial: at 100 TB it tunes per-query
+    * against the measured curve, and the
     * REPLICATION stays on candidate generation only — the stored
     * layout (knn_ivf's partition key) keeps one home cell per vector.
     *
@@ -353,8 +353,9 @@ object SimilarityOps {
     * (the minhash first-colliding-band trick; `least` skips the null
     * arms of the membership `when`s). */
   private[graft] val IvfGraphProbes = 3
-  private[graft] def knnGraphMultiProbe(emb: DataFrame, k: Int,
-      p: Int = IvfGraphProbes): DataFrame = {
+  private[graft] def knnGraphMultiProbe(emb: DataFrame,
+      k: Int): DataFrame = {
+    val p = IvfGraphProbes
     val means = ivfMeans(emb)
     val scored = emb.crossJoin(broadcast(means))
       .withColumn("cd", dot(col("embedding"), col("cvec")))

@@ -83,7 +83,7 @@ object TextSimOps {
     * join when it fits (PlanSpec asserts this at sf0.01) while an
     * open-scale corpus degrades to shuffle equi-joins keyed by
     * candidate doc ids — the size gate lives in the engine, not in a
-    * source edit (VERDICT r4 #4). */
+    * source edit. */
   private[graft] def docTokens(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .select(col("doc_id"),
@@ -142,8 +142,8 @@ object TextSimOps {
     * Returns (doc_id, m: BIGINT mask, c = bit_count(m)) — one row per
     * document, two shuffles (tokenize distinct, groupBy doc) — or None
     * when the vocabulary exceeds 62 tokens. The ≤62-row dictionary
-    * carries no hard broadcast hint (the engine-wide rule, VERDICT r4
-    * #4): AQE broadcasts it at runtime, and the forced-shuffle fallback
+    * carries no hard broadcast hint (the engine-wide rule): AQE
+    * broadcasts it at runtime, and the forced-shuffle fallback
     * stays exercised by PlanSpec. */
   private[graft] def bitsetDocs(tok: DataFrame): Option[DataFrame] = {
     // The tokenize+distinct subtree feeds THREE executions otherwise —
@@ -155,7 +155,7 @@ object TextSimOps {
     // real scale, where the corpus scan is the cost. The pin is the
     // (doc, token)-distinct table, the smallest frame in the pipeline.
     //
-    // Pin retention (ADVICE r10): localCheckpoint blocks persist until
+    // Pin retention: localCheckpoint blocks persist until
     // the checkpointed RDD is GC'd and reaped by the ContextCleaner —
     // there is no handle here to unpersist eagerly (the returned frame
     // escapes into arbitrary downstream plans). Acceptable because the
@@ -314,10 +314,9 @@ object TextSimOps {
     cross.union(intra)
   }
 
-  /** [[expandContainment]] fused with the (da, db) presentation sort —
-    * the r12 fix for the key's drifted tail (VERDICT r11 #2). The naive
-    * `expand.orderBy` pays for the 4.6 M-row output THREE times at
-    * sf0.1: once for the RangePartitioning bound sampling (which
+  /** [[expandContainment]] fused with the (da, db) presentation sort.
+    * The naive `expand.orderBy` pays for the 4.6 M-row output THREE
+    * times at sf0.1: once for the RangePartitioning bound sampling (which
     * re-runs the whole expansion), once through the range exchange, and
     * once in the sort. But the output's sort key `da` is decided BEFORE
     * the db-side blowup — da is a member of the x-side rep — so the
@@ -375,7 +374,7 @@ object TextSimOps {
     * materialized dictionary is small (it is, at every graded SF —
     * PlanSpec asserts the conversion) and keeps the shuffle join on an
     * open-vocabulary corpus where a forced broadcast would OOM the
-    * driver (VERDICT r4 #4). */
+    * driver. */
   private def docRanked(s: SparkSession, d: String): DataFrame = {
     val tok = t(s, d, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -483,8 +482,8 @@ object TextSimOps {
     // ranked feeds THREE consumers (x prefix, y prefix, verify arrays);
     // exchange/stage reuse across those branches is a lottery (see the
     // clusterCC design note), so pin the small posting table (one row
-    // per distinct (doc, token)) once, GraphX-style. Tradeoff (ADVICE
-    // r5): localCheckpoint truncates lineage into EXECUTOR-LOCAL block
+    // per distinct (doc, token)) once, GraphX-style. Tradeoff:
+    // localCheckpoint truncates lineage into EXECUTOR-LOCAL block
     // storage, so on a real cluster a lost executor fails the job
     // instead of recomputing the postings — the same contract clusterCC
     // documents for its per-round pins. Acceptable because the pin is
@@ -614,8 +613,8 @@ object TextSimOps {
     * (b,r) sensitivity table in ExtOpsSpec measures real plans, not a
     * formula. Returns (candidates(da,db), pairs(da,db,dist)).
     *
-    * r11 restructure (VERDICT r10 #2 — the verify attach was the
-    * family's biggest shuffle mover, 31 MiB at sf0.1):
+    * Shape (the verify attach would otherwise be the family's biggest
+    * shuffle mover, 31 MiB at sf0.1):
     *  - ONE doc-keyed groupBy computes the signature and the verify
     *    payload together. On the bitset path (closed ≤62-token
     *    vocabulary, [[bitsetDict]]) the payload is the exact BIGINT set
@@ -767,8 +766,7 @@ object TextSimOps {
 
   /** The sim_jaccard_pairs pair frame BEFORE its presentation pin —
     * ONE construction shared by the key and PlanSpec's broadcast/
-    * shuffle-fallback audit (ADVICE r15: the test used to hand-copy
-    * the construction with a literal threshold, which could drift). */
+    * shuffle-fallback audit, so the test cannot drift from the key. */
   private[graft] def jaccardPairsPrePin(s: SparkSession,
       d: String): DataFrame = exactWordPairs(s, d, TauPct)
 
@@ -780,9 +778,9 @@ object TextSimOps {
     * still). r15: trimmed 6 → 4 — each budgeted-but-converged round
     * still costs its label-sized stages and their AQE job latency
     * (~3 jobs/round; dedup_cluster_cc ran 62 jobs for 5.8 s of task
-    * time), and `checked = true` appends a guard propagate that
-    * RAISES on any residual label change, so an under-budget cannot
-    * silently mis-cluster — it fails the run loudly (verified green
+    * time), and ccCore's guard propagate RAISES on any residual
+    * label change, so an under-budget cannot silently mis-cluster —
+    * it fails the run loudly (verified green
     * at sf0.001/0.01/0.1). */
   private[graft] val CcRounds = 4
 
@@ -792,11 +790,11 @@ object TextSimOps {
     * can assert the candidate set is a superset of the qualifying
     * pairs. */
   private[graft] def containmentCandidates(s: SparkSession, d: String,
-      tauPct: Int, bitmapPrune: Boolean = true): DataFrame =
-    containmentCandidatesFrom(docRanked(s, d), tauPct, bitmapPrune)
+      tauPct: Int): DataFrame =
+    containmentCandidatesFrom(docRanked(s, d), tauPct)
 
   private def containmentCandidatesFrom(ranked: DataFrame,
-      tauPct: Int, bitmapPrune: Boolean = true): DataFrame = {
+      tauPct: Int): DataFrame = {
     val x = ranked
       .where(col("rnk") <= col("c") - expr(s"($tauPct * c + 99) div 100") + 1)
       .select(col("doc_id").as("da"), col("w"),
@@ -814,35 +812,17 @@ object TextSimOps {
     // C ≥ τ needs o·100 ≥ τ·ca. One-sided, two AND+POPCNTs per matched
     // row; r6 measured 20.7 M candidate rows surviving the positional
     // filters alone (corpus tokens are hot: ~32 M raw matches).
-    val base = col("w") === col("wy") &&
+    val cond = col("w") === col("wy") &&
       col("kx") === col("ky") && col("da") =!= col("db") &&
       lit(100) * col("cb") >= lit(tauPct) * col("ca") &&
       (lit(1) + least(col("ca") - col("ra"), col("cb") - col("rb"))) *
-        lit(100) >= lit(tauPct) * col("ca")
-    val cond = if (bitmapPrune)
-      base && (col("ca") -
+        lit(100) >= lit(tauPct) * col("ca") &&
+      (col("ca") -
         expr("bit_count(ba0 & ~bb0) + bit_count(ba1 & ~bb1)")) *
         lit(100) >= lit(tauPct) * col("ca")
-    else base
     x.join(y, cond).select(col("da"), col("db"))
   }
 
-  /** Min-label CC over the near-dup pair graph (see the
-    * `dedup_cluster_cc` entry below for the design notes). Each round is
-    * propagate (min label over the 1-hop neighborhood) THEN shortcut
-    * (pointer jump, l ← l(l(v))), so converged-radius roughly DOUBLES
-    * per round and the budget needed is O(log diameter), not O(diameter)
-    * — plain propagation's Achilles heel on exactly the corpus this
-    * operator targets: drop-one-word near-dup CHAINS, whose diameter
-    * grows with corpus size. 6 rounds cover diameter ≈ 2⁶ vs plain
-    * propagation's 6. Exposed with a round-count parameter so
-    * InvariantSpec can prove convergence (round N == round N+1 under
-    * monotone min-propagation). With `checked = true` the plan appends
-    * ONE guard PROPAGATE round and raises at runtime if any label still
-    * changed — stationarity under propagate implies labels are constant
-    * per component and each component's constant is its min member id
-    * (l(v) ≤ v always), so an unconverged or wrong clustering can never
-    * be silently emitted. */
   /** Near-dup CONNECTIVITY pairs at τ — same connected components as
     * [[exactWordPairs]]'s full pair set, WITHOUT materializing it. On
     * the bitset path the quotient (see [[maskUniq]]) is returned
@@ -877,17 +857,31 @@ object TextSimOps {
     exactWordPairs(s, d, tauPct).select(col("da"), col("db"))
   }
 
+  /** Min-label CC over the near-dup pair graph (see the
+    * `dedup_cluster_cc` entry below for the design notes). Each round is
+    * propagate (min label over the 1-hop neighborhood) THEN shortcut
+    * (pointer jump, l ← l(l(v))), so converged-radius roughly DOUBLES
+    * per round and the budget needed is O(log diameter), not O(diameter)
+    * — plain propagation's Achilles heel on exactly the corpus this
+    * operator targets: drop-one-word near-dup CHAINS, whose diameter
+    * grows with corpus size. 6 rounds cover diameter ≈ 2⁶ vs plain
+    * propagation's 6. Exposed with a round-count parameter so
+    * InvariantSpec can prove convergence (round N == round N+1 under
+    * monotone min-propagation). The plan always appends ONE guard
+    * PROPAGATE round and raises at runtime if any label still
+    * changed — stationarity under propagate implies labels are constant
+    * per component and each component's constant is its min member id
+    * (l(v) ≤ v always), so an unconverged or wrong clustering can never
+    * be silently emitted. */
   private[graft] def clusterCC(s: SparkSession, d: String,
-      rounds: Int, checked: Boolean = false): DataFrame = {
-    // The propagation core is the generic [[GraphOps.ccCore]] (r11: CC
-    // promoted to a first-class graph API; this call site is byte-equal
-    // to the pre-refactor inlined form — RewriteEquivalenceSpec); this
+      rounds: Int): DataFrame = {
+    // The propagation core is the generic [[GraphOps.ccCore]]; this
     // operator supplies the near-dup pair graph and the all-docs node
     // set (isolated docs are singleton clusters).
     val pairs = connectivityPairs(s, d, TauPct)
       .select(col("da").as("a"), col("db").as("b"))
     val docs = t(s, d, "documents").select(col("doc_id").as("v"))
-    GraphOps.ccCore(docs, pairs, rounds, checked, "dedup_cluster_cc")
+    GraphOps.ccCore(docs, pairs, rounds, "dedup_cluster_cc")
       .select(col("v").as("doc_id"), col("l").as("cluster"))
       .orderBy("doc_id")
   }
@@ -1018,10 +1012,10 @@ object TextSimOps {
     // Same prefix-filter machinery, asymmetric: o ≥ τ·|x| only binds
     // x's side, so candidates pair x-PREFIX postings with y postings.
     //
-    // r4's weak point (VERDICT #3): y entered the join with its FULL
-    // posting rows — a hot token's whole posting list was paired before
-    // any filter ran, a Σ_w |prefix(w)|·|post(w)| term that grows with
-    // corpus skew. r5 applies the ASYMMETRIC PREFIX BOUND of the
+    // If y entered the join with its FULL posting rows, a hot token's
+    // whole posting list would be paired before any filter ran, a
+    // Σ_w |prefix(w)|·|post(w)| term that grows with corpus skew. The
+    // key applies the ASYMMETRIC PREFIX BOUND of the
     // containment-join literature as a PRE-join prune via size classes:
     // class x by k = ⌊log₂ ca⌋ (exact integer form: length(bin(ca))−1)
     // and join on (token, class); y replicates a posting row ONLY into
@@ -1086,12 +1080,12 @@ object TextSimOps {
     // covers graph distance r, and near-dup components are near-cliques
     // (measured fixpoint depth 6-8 across SFs) — verified against the
     // oracle's exact recursive-CTE fixpoint at sf0.01. Convergence is
-    // CHECKED at runtime (checked = true appends one guard round and
-    // raises on any residual label change), so a deeper-than-budget
+    // CHECKED at runtime (ccCore appends one guard round and raises
+    // on any residual label change), so a deeper-than-budget
     // graph fails loudly instead of silently mis-clustering; min is
     // merge-order independent — the scale shape of GraphX CC.
     "dedup_cluster_cc" -> ((s: SparkSession, d: String) =>
-      clusterCC(s, d, CcRounds, checked = true)),
+      clusterCC(s, d, CcRounds)),
 
     // Canonical selection — the step a curation pipeline runs AFTER
     // clustering: keep the highest-quality document per near-dup cluster
@@ -1101,11 +1095,11 @@ object TextSimOps {
     // argmax — no window over the full corpus, the shuffle output is
     // cluster-count-sized.
     "dedup_keep_best" -> ((s: SparkSession, d: String) => {
-      // checked = true: the same non-convergence guard as the shipped
-      // dedup_cluster_cc — a silent mis-clustering here would silently
-      // DROP documents (wrong canonical per merged-but-unconverged
-      // cluster), the worst failure mode a dedup pipeline has
-      val clusters = clusterCC(s, d, CcRounds, checked = true)
+      // clusterCC's non-convergence guard matters most here: a
+      // mis-clustering would silently DROP documents (wrong canonical
+      // per merged-but-unconverged cluster), the worst failure mode a
+      // dedup pipeline has
+      val clusters = clusterCC(s, d, CcRounds)
       val q = t(s, d, "documents")
         .select(col("doc_id"), TextAnalysisOps.qualityCol.as("quality"))
       clusters.join(q, "doc_id")

@@ -9,7 +9,7 @@ class InvariantSpec extends SparkTestBase {
   test("dedup_cluster_cc reaches the fixpoint within its round budget") {
     // min-propagation (+ pointer jump) is monotone, so round N == round
     // N+1 proves the fixpoint was reached — the declared 6-round result
-    // IS the exact CC
+    // IS the exact CC (both runs also pass the convergence guard)
     val at6 = operators.TextSimOps.clusterCC(spark, sf, 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val at7 = operators.TextSimOps.clusterCC(spark, sf, 7)
@@ -92,7 +92,7 @@ class InvariantSpec extends SparkTestBase {
   }
 
   test("dedup_cluster_cc convergence guard raises on an exhausted budget") {
-    // the shipped key runs checked = true: one guard round compares
+    // clusterCC always appends one guard round: it compares
     // round N with round N+1 and raise_error()s on any label change, so
     // an unconverged clustering can never be silently emitted. Probed:
     // round 1 != round 2 at this SF, so a 1-round budget must raise…
@@ -100,7 +100,7 @@ class InvariantSpec extends SparkTestBase {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(_.toString).mkString("\n")
     val e = intercept[Exception] {
-      operators.TextSimOps.clusterCC(spark, sf, 1, checked = true).collect()
+      operators.TextSimOps.clusterCC(spark, sf, 1).collect()
     }
     assert(chain(e).contains("not converged"), chain(e))
     // …and the declared 6-round budget passes the same guard
@@ -122,91 +122,6 @@ class InvariantSpec extends SparkTestBase {
       assert(math.abs(a50 - p50) / p50 <= 0.05, s"$k p50: $a50 vs $p50")
       assert(math.abs(a90 - p90) / p90 <= 0.05, s"$k p90: $a90 vs $p90")
     }
-  }
-
-  test("groupPercentile sketch path: agg_mad/agg_percentile diverge " +
-    "boundedly from exact and keep the exact schema (r12)") {
-    // VERDICT r11 #4: the 100 TB claim for the exact-percentile family
-    // must be code, not prose. spark.graft.agg.approxPercentile=<acc>
-    // swaps every groupPercentile caller to the mergeable GK sketch;
-    // GK at accuracy `acc` bounds RANK error by n/acc, so at acc=100
-    // on this corpus the realized value error should sit within a few
-    // percent. Assert (a) identical schema on both paths (the sketch
-    // returns the input type — groupPercentile casts to DOUBLE), and
-    // (b) ≤5% relative divergence per emitted statistic; max_robust_z
-    // is rank-sensitive through BOTH median and MAD, so it gets 15%.
-    def run(k: String) = SparkEntry.queries(k)(spark, sf)
-    for (k <- Seq("agg_mad", "agg_percentile")) {
-      val exact = run(k)
-      val exactRows = exact.collect()
-      spark.conf.set("spark.graft.agg.approxPercentile", "100")
-      try {
-        val sk = run(k)
-        // (name, dataType) — nullability is plan metadata, not part of
-        // the output contract (count(lit(1)) is non-nullable where the
-        // count-based path's summed n is nullable; values identical)
-        assert(sk.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-          exact.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-          s"$k: sketch path changed the schema — " +
-            s"${sk.schema.simpleString} vs ${exact.schema.simpleString}")
-        val skRows = sk.collect()
-        assert(skRows.length == exactRows.length, s"$k: row count drift")
-        exactRows.zip(skRows).foreach { case (er, sr) =>
-          assert(er.getString(0) == sr.getString(0), s"$k: key order drift")
-          er.schema.fields.zipWithIndex.foreach { case (f, i) =>
-            if (f.dataType == org.apache.spark.sql.types.DoubleType &&
-                !er.isNullAt(i) && !sr.isNullAt(i)) {
-              val (e, a) = (er.getDouble(i), sr.getDouble(i))
-              val tol = if (f.name == "max_robust_z") 0.15 else 0.05
-              assert(math.abs(a - e) <= tol * math.abs(e).max(1e-9),
-                s"$k ${er.getString(0)}.${f.name}: sketch $a vs exact $e")
-            }
-          }
-        }
-      } finally spark.conf.unset("spark.graft.agg.approxPercentile")
-    }
-  }
-
-  test("groupPercentile sketch path: the two pipe callers keep schema " +
-    "and drift boundedly (r12)") {
-    // Completes the #6 evidence: ALL FOUR groupPercentile callers are
-    // exercised down the sketch path, not just the agg pair.
-    // pipe_dataset_card: only q_p50 flows through the percentile, so
-    // every other column must be EXACTLY equal and q_p50 within 5%.
-    // pipe_quality_cut: the p75 threshold gates the kept set, so the
-    // integer outcomes may shift — bound thr at 5% and kept at 15%
-    // relative per language.
-    def run(k: String) = SparkEntry.queries(k)(spark, sf)
-    val cardE = run("pipe_dataset_card").collect()
-    val cutE = run("pipe_quality_cut").collect()
-    spark.conf.set("spark.graft.agg.approxPercentile", "100")
-    try {
-      val cardS = run("pipe_dataset_card")
-      assert(cardS.schema == run("pipe_dataset_card").schema)
-      val (ce, cs) = (cardE.head, cardS.collect().head)
-      ce.schema.fields.zipWithIndex.foreach { case (f, i) =>
-        if (f.name == "q_p50") {
-          val (e, a) = (ce.getDouble(i), cs.getDouble(i))
-          assert(math.abs(a - e) <= 0.05 * math.abs(e).max(1e-9),
-            s"q_p50 sketch $a vs exact $e")
-        } else assert(ce.get(i) == cs.get(i),
-          s"${f.name} must be percentile-independent: ${cs.get(i)} " +
-            s"vs ${ce.get(i)}")
-      }
-      val cutS = run("pipe_quality_cut").collect()
-      assert(cutS.length == cutE.length)
-      cutE.zip(cutS).foreach { case (e, a) =>
-        assert(e.getString(0) == a.getString(0), "lang order drift")
-        val (te, ta) = (e.getDouble(e.fieldIndex("thr")),
-          a.getDouble(a.fieldIndex("thr")))
-        assert(math.abs(ta - te) <= 0.05 * math.abs(te).max(1e-9),
-          s"${e.getString(0)} thr sketch $ta vs exact $te")
-        val (ke, ka) = (e.getLong(e.fieldIndex("kept")),
-          a.getLong(a.fieldIndex("kept")))
-        assert(math.abs(ka - ke) <= 0.15 * ke.max(1L),
-          s"${e.getString(0)} kept sketch $ka vs exact $ke")
-      }
-    } finally spark.conf.unset("spark.graft.agg.approxPercentile")
   }
 
   test("countPercentiles == percentile() byte-for-byte on the " +
@@ -934,5 +849,23 @@ class InvariantSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(ok.length == n && ok.forall(_._2 == 0L),
       "chain did not converge to the single min-label component")
+    // The public edge-list API (the graph_cc path) carries the same
+    // guard: a 200-node path has diameter 199, so rounds=2 (radius 6)
+    // must RAISE and rounds=8 (radius 510) must converge to label 0.
+    val pn = 200L
+    val nodes = spark.range(pn).select(col("id").as("v"))
+    val pairs = spark.range(pn - 1)
+      .select(col("id").as("a"), (col("id") + 1).as("b"))
+    val pex = intercept[Exception] {
+      operators.GraftOps.connectedComponentsOf(nodes, pairs, rounds = 2)
+        .collect()
+    }
+    assert(rootMessages(pex).exists(_.contains("not converged")),
+      s"expected the edge-list non-convergence guard, got: $pex")
+    val pok = operators.GraftOps.connectedComponentsOf(nodes, pairs,
+        rounds = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pok.length == pn && pok.forall(_._2 == 0L),
+      "path did not converge to the single min-label component")
   }
 }

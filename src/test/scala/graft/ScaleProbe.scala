@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r10, extended r11): measured scaling evidence for the
@@ -36,22 +35,7 @@ object ScaleProbe {
       else Seq(1, 2, 4, 8)
     val mode = if (args.length > 3) args(3) else "closed"
     val spark = Harness.session(Harness.cpus)
-    @volatile var write = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) write += m.shuffleWriteMetrics.bytesWritten
-      }
-    })
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      // the listener bus is async — drain before the caller snapshots
-      // or resets the byte counters, or tail task-end events are lost
-      // / attributed to the next phase (r11 review finding)
-      Thread.sleep(500)
-      (r, dt)
-    }
+    val meter = new ShuffleWriteMeter(spark)
     val docs = Tables.t(spark, base, "documents")
     val nBase = docs.count()
     for (k <- ks) {
@@ -87,25 +71,18 @@ object ScaleProbe {
       // plan so the whole curve measures ONE code path
       if (mode == "open")
         spark.conf.set("spark.graft.sim.forceGeneral", "true")
-      write = 0
-      val (np, tp) = time(
+      val (np, tp, wPairs) = meter.measure(
         operators.TextSimOps.exactWordPairs(spark, dir, 90).count())
-      val wPairs = write
-      write = 0
-      val (nc, tc) = time(
-        operators.TextSimOps.clusterCC(spark, dir, 6, checked = true)
-          .count())
-      val wCc = write
+      val (nc, tc, wCc) = meter.measure(
+        operators.TextSimOps.clusterCC(spark, dir, 6).count())
       // r11: the banded-MinHash arm THE MODE SELECTS — under `open`
       // (forceGeneral above) the general path (signature + fingerprint
       // arrays in one groupBy, length-gated array-attach verify), the
       // curve DESIGN §12.1 publishes; under `closed` the bitset arm.
       // Label mh_ rows by the mode when reading them into tables.
-      write = 0
-      val (nm, tm) = time(
+      val (nm, tm, wMh) = meter.measure(
         operators.TextSimOps.minhashCandAndPairs(spark, dir, 4, 2)
           ._2.count())
-      val wMh = write
       spark.conf.unset("spark.graft.sim.forceGeneral")
       println(f"[scale-$mode] k=$k%d docs=${nBase * k}%7d pairs=$np%9d " +
         f"pairs_s=$tp%6.2f pairs_shufMiB=${wPairs / 1048576.0}%7.1f " +

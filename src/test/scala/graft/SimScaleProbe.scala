@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r15, VERDICT r14 #4): scaling ladder for the similarity
@@ -28,20 +27,7 @@ object SimScaleProbe {
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_sim_scale"
     val spark = Harness.session(Harness.cpus)
     spark.conf.set("spark.graft.sim.forceGeneral", "true")
-    @volatile var write = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) write += m.shuffleWriteMetrics.bytesWritten
-      }
-    })
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      // listener bus is async — drain before snapshotting byte counters
-      Thread.sleep(500)
-      (r, dt)
-    }
+    val meter = new ShuffleWriteMeter(spark)
     val docs = Tables.t(spark, base, "documents")
     val baseCols = docs.columns
     val baseN = docs.count()
@@ -62,8 +48,7 @@ object SimScaleProbe {
         for (key <- Seq("sim_containment_pairs", "sim_ngram_jaccard")) {
           // fresh frame per timed draw (shuffle reuse on a shared
           // DataFrame object would fake a repeat)
-          Thread.sleep(500); write = 0L
-          val (n, t) = time(
+          val (n, t, write) = meter.measure(
             SparkEntry.queries(key)(spark, dir)
               .queryExecution.toRdd.count())
           println(f"[simscale] k=$k%d docs=${baseN * k}%6d $key%-24s " +
