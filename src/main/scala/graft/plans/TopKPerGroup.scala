@@ -33,7 +33,13 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * Registered via `spark.experimental.extraStrategies` (see
   * [[graft.GraftExtensions.installStrategies]]); constructed from the
-  * public API by [[graft.operators.GraftOps.topKPerGroup]].
+  * public API by [[graft.operators.GraftOps.topKPerGroup]]. Callers: the
+  * keys `win_topk_physical`, `sample_stratified`, `text_tfidf_top` and
+  * `knn_per_label`, the kNN graph builder
+  * (`SimilarityOps.knnGraphFromPairs`), and
+  * [[graft.sources.KeyedUpsertSink]] with k = 1, where the heap map is a
+  * hash map of each key's best row and the pair replaces a two-sort
+  * `row_number` window.
   */
 case class TopKPerGroupPlan(
     groupExprs: Seq[Expression],
@@ -92,7 +98,9 @@ case class TopKPerGroupExec(
 
   /** Memory bound and the escape hatch: the per-partition heap map holds
     * ≤ k rows per DISTINCT group key seen in that partition, on-heap —
-    * right for the many-rows-per-group inputs this operator targets. If
+    * right for the many-rows-per-group inputs most callers have. With
+    * unique keys (KeyedUpsertSink over a deduplicated feed) it retains
+    * every row until the cap below. If
     * group cardinality per partition is high enough that the retained
     * rows exceed `spark.graft.topk.fallbackRows` (default 4M), the
     * partition switches to a spilling external sort on (group, order)

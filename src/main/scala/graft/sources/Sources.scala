@@ -1,9 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.operators.GraftOps
 
 /** Multi-format batch source surface: parquet (primary), csv, json, orc —
   * all schema-explicit (inference is never used, SURVEY §1.3). Exercised
@@ -154,28 +155,36 @@ final class CompactingParquetSink(root: String, targetBytes: Long)
 
 /** Idempotent keyed upsert semantics (the reference's Cassandra write
   * discipline): within a batch, exactly one row per key survives —
-  * deterministically the one with the highest `versionCol`, with
-  * equal-version duplicates tie-broken by every remaining payload column
-  * (keyCols are constant within the window partition, so they cannot
-  * break ties — the payload columns give the window a total order),
-  * never "whichever partition wrote last". Wrap any store-specific
-  * [[Sink]] with this to make re-ingestion runs idempotent.
+  * deterministically the one with the highest `versionCol` (NULL versions
+  * lose), with equal-version duplicates tie-broken by every remaining
+  * orderable payload column ascending (NULL first), never "whichever
+  * partition wrote last". Wrap any store-specific [[Sink]] with this to
+  * make re-ingestion runs idempotent.
+  *
+  * Shape: one hash top-1 per key ([[graft.operators.GraftOps.topKPerGroup]]
+  * with k = 1) — a per-partition hash map keeps each key's best row, ONE
+  * exchange on the key carries at most one row per key per partition, and
+  * a final hash map picks the survivor. No sort and no window.
+  *
+  * Memory: each hash map holds one copied row, one copied key and one
+  * queue per distinct key of its partition, on the JVM heap and outside
+  * Spark's memory manager — up to `spark.graft.topk.fallbackRows` rows
+  * (default 4M) per task. Past that the partition switches to a spilling
+  * external sort. Unique-key inputs (a deduplicated feed) retain every
+  * row up to that cap, where the window's sort used managed, spillable
+  * memory from the first row; lower the cap for large unique-key batch
+  * writes on a small heap.
+  * Unorderable payload columns (e.g. maps) do not take part in the
+  * tie-break: duplicates differing only in those stay unspecified.
   */
 final class KeyedUpsertSink(delegate: Sink, keyCols: Seq[String],
     versionCol: String) extends Sink {
   override def write(df: DataFrame, table: String): Unit = {
-    // only orderable payload columns can tie-break (a map column would
-    // make Window.orderBy throw); unorderable payloads simply don't
-    // participate — duplicates differing only in those stay unspecified
     val tieBreak = df.schema.fields.toSeq
       .filterNot(f => keyCols.contains(f.name) || f.name == versionCol)
-      .filter(f => org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(f.dataType))
-      .map(f => col(f.name))
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy((col(versionCol).desc +: tieBreak): _*)
-    val deduped = df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-    delegate.write(deduped, table)
+      .filter(f => RowOrdering.isOrderable(f.dataType))
+      .map(_.name)
+    delegate.write(GraftOps.topKPerGroup(df, keyCols,
+      (versionCol -> false) +: tieBreak.map(_ -> true), k = 1), table)
   }
 }

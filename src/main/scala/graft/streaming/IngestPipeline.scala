@@ -20,8 +20,12 @@ import graft.sources.Sink
   *  2. each batch lands under `table/batch=<id>` — an overwrite-mode
   *     Sink makes the replay idempotent (a torn first write is simply
   *     rewritten), exactly the Cassandra-upsert discipline;
-  *  3. [[graft.sources.KeyedUpsertSink]] adds deterministic per-key
-  *     last-writer-wins WITHIN the batch.
+  *  3. a [[graft.sources.KeyedUpsertSink]] keeps each key's
+  *     highest-version row within the batch. Keyed on `event_id`, the
+  *     dedup key, it never has to choose here: `dropDuplicates` has
+  *     already kept one row per `event_id`, so every row passes. The
+  *     resolution matters when the sink's key differs from the dedup
+  *     key (several events per key in one batch) and for batch writes.
   * Upstream dropDuplicates guarantees a key appears in only one epoch
   * (within the watermark), so per-key exactly-once holds end-to-end.
   * Readers see the union via partition discovery (`batch` becomes a

@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.sources._
 
 /** Multi-format round-trips (SURVEY §2.1 capability row) + sink
@@ -90,7 +94,7 @@ class SourceSinkSpec extends SparkTestBase {
     import ss.implicits._
     // two rows per key with the SAME version but different payloads —
     // the survivor must be the payload-order minimum, not whichever
-    // partition the window scanned first
+    // partition was scanned first
     val rows = (1 to 50).flatMap(k =>
       Seq((k.toLong, 1L, "b_payload"), (k.toLong, 1L, "a_payload")))
     val df = rows.toDF("k", "v", "payload").repartition(8)
@@ -104,6 +108,175 @@ class SourceSinkSpec extends SparkTestBase {
     assert(survivors.head.forall(_ == "a_payload"),
       "tie-break should order by payload columns ascending")
     assert(survivors.distinct.size == 1, "equal-version survivor varied across runs")
+  }
+
+  /** Sink that keeps the frame it is handed, so a test can inspect what
+    * a wrapping sink would have written. */
+  private final class CapturingSink extends Sink {
+    var last: DataFrame = _
+    override def write(df: DataFrame, table: String): Unit = last = df
+  }
+
+  private def upserted(df: DataFrame, keyCols: Seq[String],
+      versionCol: String): DataFrame = {
+    val cap = new CapturingSink
+    new KeyedUpsertSink(cap, keyCols, versionCol).write(df, "t")
+    cap.last
+  }
+
+  /** The window formulation KeyedUpsertSink used to run: the reference
+    * semantics its hash top-1 must reproduce row for row. */
+  private def windowReference(df: DataFrame, keyCols: Seq[String],
+      versionCol: String): DataFrame = {
+    val tieBreak = df.schema.fields.toSeq
+      .filterNot(f => keyCols.contains(f.name) || f.name == versionCol)
+      .filter(f => RowOrdering.isOrderable(f.dataType))
+      .map(f => col(f.name))
+    val w = Window.partitionBy(keyCols.map(col): _*)
+      .orderBy((col(versionCol).desc +: tieBreak): _*)
+    df.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1).drop("__rn")
+  }
+
+  private val upsertSchema = StructType(Seq(
+    StructField("k1", LongType), StructField("k2", StringType),
+    StructField("v", LongType), StructField("p1", StringType),
+    StructField("p2", IntegerType),
+    StructField("m", MapType(StringType, IntegerType))))
+
+  /** Seeded batch over a small key/version/payload domain, so keys repeat
+    * across partitions and versions tie; every column can be NULL except
+    * the map, and some rows are copies that differ only in the map. */
+  private def upsertBatch(seed: Long, n: Int): Seq[Row] = {
+    val rnd = new scala.util.Random(seed)
+    def orNull[T](p: Double)(v: => T): Any = if (rnd.nextDouble() < p) null else v
+    val base = (0 until n).map { i =>
+      Row(orNull(0.1)(rnd.nextInt(6).toLong), orNull(0.1)(s"g${rnd.nextInt(3)}"),
+        orNull(0.15)(rnd.nextInt(4).toLong), orNull(0.2)(s"p${rnd.nextInt(3)}"),
+        orNull(0.2)(rnd.nextInt(3)), Map("i" -> i))
+    }
+    val mapOnly = base.take(n / 10).map(r =>
+      Row.fromSeq(r.toSeq.init :+ Map("copy" -> rnd.nextInt(1000))))
+    rnd.shuffle(base ++ mapOnly)
+  }
+
+  private def batchFrame(rows: Seq[Row], schema: StructType,
+      partitions: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, partitions),
+      schema)
+
+  /** Row minus its map column, as a comparable string. */
+  private def orderablePart(r: Row): String =
+    r.toSeq.filterNot(_.isInstanceOf[scala.collection.Map[_, _]]).mkString("|")
+
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+    QueryStageExec}
+
+  /** Every node of an executed plan, through AQE's stage wrappers. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => planNodes(q.plan)
+    case other => other +: other.children.flatMap(planNodes)
+  }
+
+  /** Partitions of an executed frame that took the top-k sort fallback. */
+  private def sortFallbacks(df: DataFrame): Long =
+    planNodes(df.queryExecution.executedPlan).collect {
+      case e: graft.plans.TopKPerGroupExec =>
+        e.metrics("numSortFallbacks").value
+    }.sum
+
+  test("KeyedUpsertSink matches the row_number window reference on seeded " +
+    "batches (NULL keys/versions/payloads, composite key, -0.0 keys, map payload)") {
+    // once on the hash maps, once with every partition forced onto the
+    // external-sort fallback, which must honour the same NULL orderings
+    def check(forceFallback: Boolean): Unit = {
+      val mode = if (forceFallback) "sort fallback" else "hash"
+      def resolve(df: DataFrame, keys: Seq[String]): Seq[Row] = {
+        val out = upserted(df, keys, "v")
+        val rows = out.collect().toSeq
+        val fallbacks = sortFallbacks(out)
+        if (forceFallback) assert(fallbacks > 0, "no partition fell back")
+        else assert(fallbacks == 0, s"$fallbacks partitions fell back")
+        rows
+      }
+      (1 to 4).foreach { seed =>
+        val rows = upsertBatch(seed, 400)
+        val df = batchFrame(rows, upsertSchema, 6)
+        val keys = Seq("k1", "k2")
+        val spread = df.withColumn("pid", spark_partition_id())
+          .groupBy(keys.map(col): _*).agg(countDistinct("pid").as("np"))
+          .where(col("np") > 1).count()
+        assert(spread > 0, s"seed $seed: no key spans two partitions")
+        val got = resolve(df, keys)
+        val want = windowReference(df, keys, "v").collect().toSeq
+        // the map cannot order, so rows differing only in it may resolve
+        // either way: compare the rest as a multiset, then check that each
+        // surviving map belongs to an input row with the same other values
+        assert(got.map(orderablePart).sorted == want.map(orderablePart).sorted,
+          s"$mode, seed $seed: upsert diverged from the window reference")
+        val maps = rows.groupBy(orderablePart).map { case (k, rs) =>
+          k -> rs.map(_.getAs[scala.collection.Map[String, Int]](5)).toSet }
+        got.foreach { r =>
+          assert(maps(orderablePart(r)).contains(
+            r.getAs[scala.collection.Map[String, Int]](5)),
+            s"$mode, seed $seed: survivor $r carries a map from another row")
+        }
+        // the semantics the reference encodes, stated directly
+        assert(got.exists(r => r.isNullAt(0) && r.isNullAt(1)),
+          s"$mode, seed $seed: the NULL composite key formed no group")
+        val byKey = rows.groupBy(r => (r.get(0), r.get(1)))
+        var nullTies = 0
+        got.foreach { r =>
+          val group = byKey((r.get(0), r.get(1)))
+          if (r.isNullAt(2))
+            assert(group.forall(_.isNullAt(2)), s"$mode: NULL version won over $group")
+          val tied = group.filter(_.get(2) == r.get(2))
+          if (tied.exists(_.isNullAt(3))) {
+            assert(r.isNullAt(3), s"$mode: NULL payload lost a tie: $r")
+            if (tied.exists(!_.isNullAt(3))) nullTies += 1
+          }
+        }
+        assert(nullTies > 0, s"$mode, seed $seed: no tie between NULL and set payloads")
+      }
+      // float keys group like the window's partitioning: -0.0 and 0.0 are
+      // one key, and the unique payload fixes the survivor
+      val dSchema = StructType(Seq(StructField("d", DoubleType),
+        StructField("v", LongType), StructField("p", IntegerType)))
+      val rnd = new scala.util.Random(7)
+      val dRows = (0 until 200).map(i => Row(
+        Seq(0.0, -0.0, 1.5, Double.NaN, null)(rnd.nextInt(5)),
+        rnd.nextInt(3).toLong, i))
+      val ddf = batchFrame(dRows, dSchema, 5)
+      val dGot = resolve(ddf, Seq("d")).map(_.toString).sorted
+      val dWant = windowReference(ddf, Seq("d"), "v")
+        .collect().map(_.toString).toSeq.sorted
+      assert(dGot == dWant, s"$mode: ${dGot.mkString(",")} vs ${dWant.mkString(",")}")
+      assert(dGot.length == 4, s"$mode: 0.0/-0.0 (or NaN) split: ${dGot.mkString(", ")}")
+    }
+    check(forceFallback = false)
+    spark.conf.set("spark.graft.topk.fallbackRows", "1")
+    try check(forceFallback = true)
+    finally spark.conf.unset("spark.graft.topk.fallbackRows")
+  }
+
+  test("KeyedUpsertSink plans as hash top-1 around one exchange, no sort or window") {
+    val df = spark.range(0, 2000, 1, 4)
+      .select((col("id") % 97).as("k"), (col("id") % 5).as("v"),
+        col("id").cast("string").as("p"))
+    val out = upserted(df, Seq("k"), "v")
+    assert(out.collect().length == 97) // also lets AQE finalize the plan
+    val plan = out.queryExecution.executedPlan
+    val names = planNodes(plan).map(_.nodeName)
+    assert(names.contains("TopKPerGroupPartial") &&
+      names.contains("TopKPerGroupFinal"), s"no hash top-1 in:\n$plan")
+    assert(planNodes(plan).count(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) == 1,
+      s"expected exactly one exchange in:\n$plan")
+    val banned = names.filter(n =>
+      n == "Window" || n == "WindowGroupLimit" || n == "Sort")
+    assert(banned.isEmpty, s"${banned.mkString(", ")} in:\n$plan")
   }
 
   test("PartitionedParquetSink lays out partition directories") {
