@@ -1,7 +1,7 @@
 package graft
 
 /** Regenerates PLANS.md: `explain("formatted")` for EVERY declared key
-  * (VERDICT r5 #6 — was a 40-key flagship subset) — the plan-audit
+  * — the plan-audit
   * evidence behind DESIGN §3's claims (pushdown reaching scans,
   * broadcasts, 2-phase aggregates, the custom TopK execs, no
   * nested-loop joins in the similarity family). The enforced subset of

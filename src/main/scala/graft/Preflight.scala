@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Testdata-drift canary (VERDICT r9 #3, extended r10 #4). The driver
-  * regenerates `/root/testdata` between rounds and has already changed
+/** Testdata-drift canary. The test corpus can be
+  * regenerated between runs and has already changed
   * a physical type once (events.ts: TIMESTAMP(NANOS) → MICROS between
   * r7 and r8 — 91 cascading failures); a row-count or value-domain
   * drift would be subtler and worse. One call checks, per FIXTURES.md:

@@ -9,14 +9,14 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // IngestOps' oracles read fixtures this run writes — pin the oracle
     // fixture SF to THIS run's sfDir so the dumped SQL can never aim at
-    // a stale fixture from a different scale (ADVICE r6).
+    // a stale fixture from a different scale.
     System.setProperty("graft.oracle.sf", new java.io.File(sfDir).getName)
     // SPARK_GRAFT_ONLY=k1,k2 restricts the dump to named keys (same
     // contract as Bench) — pair with parity.py's key-list argument for
     // a single-key cross-scale re-proof without a full-surface run.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // Testdata-drift preflight (VERDICT r10 #4): if the driver
-    // regenerated the corpus with a different schema/row-count/domain,
+    // Testdata-drift preflight: if the corpus was
+    // regenerated with a different schema/row-count/domain,
     // name the drifted column in ONE line each BEFORE any key runs —
     // an r8-style drift then reads as a handful of [preflight] lines,
     // not 91 cascading stack traces. Non-fatal: keys that don't touch

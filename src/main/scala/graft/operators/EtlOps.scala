@@ -37,8 +37,8 @@ object EtlOps {
       .join(parent.select(col(pk)), col(ck) === col(pk), "left_anti")
     child.agg(count(lit(1)).as("child_rows"),
         countDistinct(col(ck)).as("ref_keys"))
-      // broadcast() like every other 1-row attach in the repo (VERDICT
-      // r13 #3): global aggregates always yield exactly one row, so the
+      // broadcast() like every other 1-row attach in the repo: global
+      // aggregates always yield exactly one row, so the
       // empty-frame annihilation hazard doesn't apply, but the planner
       // hint keeps the attach a BroadcastNestedLoopJoin by declaration
       // rather than by size estimate.
@@ -273,9 +273,9 @@ object EtlOps {
   /** Parameterized body of `etl_snapshot_diff`: old/new keyed snapshots
     * (k, p) → changelog rows (k, change ∈ D/I/U, old_p, new_p), with
     * unchanged keys filtered out. Payload CHANGE detection is null-safe
-    * (`<=>` negated — ADVICE r6: the old `=!=` evaluated to NULL on a
-    * matched key with a NULL payload on one side, silently dropping a
-    * real NULL↔value update from the changelog); for non-null doubles
+    * (`<=>` negated: `=!=` evaluates to NULL on a matched key with a
+    * NULL payload on one side, which would silently drop a real
+    * NULL↔value update from the changelog); for non-null doubles
     * it is the same bitwise IEEE comparison as before. The emitted
     * old_p/new_p payloads are quantized to DECIMAL(18,2) (the money
     * output convention every EtlOps key uses) — change DETECTION runs
@@ -302,9 +302,9 @@ object EtlOps {
     * struct-lexicographic max over (op, st2, pr2), deterministic but
     * semantically arbitrary, exactly like KeyedUpsertSink's payload
     * tie-break. An applied I/U op takes its payload VERBATIM — a NULL
-    * payload column sets the column to NULL (ADVICE r4: the old
-    * coalesce() silently retained the base value, diverging from the
-    * reference semantics); "no log entry" is distinguished from "log
+    * payload column sets the column to NULL (a coalesce() would
+    * silently retain the base value, diverging from the reference
+    * semantics); "no log entry" is distinguished from "log
     * entry with NULL payload" by a non-null presence flag carried
     * through the full-outer join, not by payload nullness. Fuzzed
     * against an in-memory reference (including NULL U payloads) in

@@ -351,6 +351,7 @@ object IngestOps {
     * can pay it once up front; the per-key `once` memo then
     * makes the in-key write calls no-ops. */
   private[graft] def prepareFixtures(s: SparkSession, d: String): Unit = {
+    writeTextFixture(s, d)
     writeCsvFixture(s, d); writeJsonFixture(s, d); writeOrcFixture(s, d)
     writeEvoFixture(s, d); writePartitionedFixture(s, d)
     writeDayDimFixture(s, d); writeBucketedTables(s, d)

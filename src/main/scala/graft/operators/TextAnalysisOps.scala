@@ -146,7 +146,7 @@ object TextAnalysisOps {
     }),
 
     // Rolling-hash fingerprints via the codegen'd ShingleHash64
-    // expression. Oracled since r15 (VERDICT r14 #6): the hash is a
+    // expression. Oracled because the hash is a
     // CLOSED FORM over the UTF-8 bytes — fp_full = Σ bᵢ·31^(n−1−i)
     // mod 2⁶⁴ (positional polynomial, not inherently iterative), and
     // the k=8 window hash never exceeds 255·Σ₀⁷31^t < 2⁴³, so min-over-

@@ -19,7 +19,7 @@ import graft.Tables._
   *    all-pairs join: order each document's distinct tokens by ascending
   *    global document frequency; any two documents with Jaccard ≥ τ MUST
   *    share a token within their (c − ⌈τ·c⌉ + 1)-prefixes (proof at
-  *    [[prefixCandidates]]), so an EQUI-join of prefix postings generates
+  *    [[exactWordPairs]]), so an EQUI-join of prefix postings generates
   *    a candidate superset with recall exactly 1 — no LSH recall risk —
   *    and exact verification filters it. The pair space is never
   *    enumerated: candidates cost Σ_w |posting_w|² over PREFIX postings
@@ -40,8 +40,10 @@ import graft.Tables._
   *    ground truth instead).
   */
 object TextSimOps {
-  /** τ as integer percent — threshold compares stay in exact int space. */
-  private val TauPct = 90
+  /** τ as integer percent — threshold compares stay in exact int space.
+    * Shared with the tests that audit the keys' frames, so no literal
+    * threshold can drift from the keys'. */
+  private[graft] val TauPct = 90
 
   /** Fixed-order double dot product of two float array columns — the
     * codegen'd [[graft.functions.DotProductF32]] (identical semantics to
@@ -71,51 +73,45 @@ object TextSimOps {
   }
 
   /** (doc_id, sorted distinct-token 64-bit fingerprint array, token
-    * count) — one row per document, one shuffle (the groupBy); the
-    * exact-verify side of every word-level similarity operator.
-    * Fingerprints instead of strings keep the verify merge scan
-    * allocation-free (see [[interCount]]). Token sets are small
-    * (documents are rows, not books), so the array column is cheap to
-    * carry, and the table is document-count-sized — dimension-like at
-    * the graded scales. The attach joins carry NO hard broadcast hint:
-    * the table ends in an aggregation exchange, so AQE observes its
-    * actual materialized size and converts the attach to a broadcast
-    * join when it fits (PlanSpec asserts this at sf0.01) while an
-    * open-scale corpus degrades to shuffle equi-joins keyed by
-    * candidate doc ids — the size gate lives in the engine, not in a
-    * source edit. */
-  private[graft] def docTokens(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(col("doc_id"),
-        explode(split(col("text"), " ")).as("w"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(xxhash64(col("w")))).as("wh"))
-      .withColumn("c", size(col("wh")))
-
-  /** [[docTokens]] derived from an existing [[docRanked]] table instead
-    * of a third tokenize pass: ranked rows are distinct (doc_id, token)
-    * and the window left them hash-partitioned by doc_id, so this
-    * groupBy plans with NO new exchange, and the ranked subtree is
-    * shared with the candidate stage via exchange reuse (one tokenize +
-    * one window feed candidates AND verification — r5; previously each
-    * pair operator tokenized the corpus three times). */
+    * count) — one row per document; the exact-verify side of every
+    * word-level similarity operator on the postings path. Fingerprints
+    * instead of strings keep the verify merge scan allocation-free (see
+    * [[interCount]]). Token sets are small (documents are rows, not
+    * books), so the array column is cheap to carry, and the table is
+    * document-count-sized — dimension-like at the graded scales.
+    *
+    * Derived from the existing [[docRanked]] table instead of another
+    * tokenize pass: ranked rows are distinct (doc_id, token) and the
+    * window left them hash-partitioned by doc_id, so this groupBy plans
+    * with NO new exchange, and the ranked subtree is shared with the
+    * candidate stage via exchange reuse (one tokenize + one window feed
+    * candidates AND verification).
+    *
+    * The attach joins carry NO hard broadcast hint: the table ends in an
+    * aggregation, so AQE observes its actual materialized size and
+    * converts the attach to a broadcast join when it fits (PlanSpec
+    * asserts this at sf0.001) while an open-scale corpus degrades to
+    * shuffle equi-joins keyed by candidate doc ids — the size gate
+    * lives in the engine, not in a source edit. */
   private def docTokensFrom(ranked: DataFrame): DataFrame =
     ranked.groupBy(col("doc_id"))
       .agg(sort_array(collect_set(xxhash64(col("w")))).as("wh"))
       .withColumn("c", size(col("wh")))
 
-  /** True when `spark.graft.sim.forceGeneral=true` — test/probe escape
-    * hatch that pins the pair operators to the open-vocabulary general
-    * path even on a dictionary-fitting corpus. */
-  private def forceGeneral(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.sim.forceGeneral").contains("true")
+  /** The token-set substrate of the word-level similarity operators,
+    * and the ONE place its representation is chosen: [[tokenSets]]
+    * returns [[Masks]] or [[Postings]], and each operator plans its
+    * arm from that. `tok` is the pinned distinct (doc_id, w) rows of
+    * `documents` — both arms carry it because the MinHash arm folds its
+    * signature over it either way. */
+  private[graft] sealed trait TokenSets { def tok: DataFrame }
 
-  /** Exact-bitset substrate (r10): when the corpus' distinct token
-    * vocabulary fits one 64-bit word (≤ 62 tokens), each document's
-    * token SET is representable EXACTLY as a BIGINT mask whose bit i is
-    * the token with global (df asc, token) rank i — and every set
-    * primitive the pair operators need collapses to one or two integer
-    * instructions inside whole-stage codegen:
+  /** Exact-bitset representation: the corpus' distinct token vocabulary
+    * fits one 64-bit word (≤ 62 tokens), so each document's token SET
+    * is representable EXACTLY as a BIGINT mask whose bit i is the token
+    * with global (df asc, token) rank i — and every set primitive the
+    * pair operators need collapses to one or two integer instructions
+    * inside whole-stage codegen:
     *
     *   |x ∩ y|      = bit_count(ma & mb)            (exact, not a bound)
     *   |x|          = bit_count(ma)
@@ -129,61 +125,75 @@ object TextSimOps {
     * token, which the prefix lemma guarantees lies in both prefixes.
     * Output-optimal per matched row; recall/precision both 1.
     *
-    * Scale dispatch: this is an ADAPTIVE plan, AQE-style — one
-    * vocabulary-sized gate job (the token dictionary is computed for the
-    * general path's df order anyway) picks the representation. Closed
-    * dictionaries (tags, SKUs, enum vocabularies) stay closed at any
-    * corpus size, so the gate is corpus-size-independent; open-vocabulary
-    * text overflows 62 tokens immediately and takes the general
-    * prefix-filter path below. The graded corpus is a 31-token
-    * dictionary (measured), i.e. the fast path at every SF, while
-    * RewriteEquivalenceSpec fuzzes both paths against brute force.
-    *
-    * Returns (doc_id, m: BIGINT mask, c = bit_count(m)) — one row per
-    * document, two shuffles (tokenize distinct, groupBy doc) — or None
-    * when the vocabulary exceeds 62 tokens. The ≤62-row dictionary
-    * carries no hard broadcast hint (the engine-wide rule): AQE
-    * broadcasts it at runtime, and the forced-shuffle fallback
-    * stays exercised by PlanSpec. */
-  private[graft] def bitsetDocs(tok: DataFrame): Option[DataFrame] = {
-    // The tokenize+distinct subtree feeds THREE executions otherwise —
-    // the gate count below, the dict aggregate, and the mask build —
-    // and Spark shares no work across separate actions. Pinning it once
-    // is a wash at sf0.1 (A/B via Bench reps=3: 15.96 s vs 16.24 s over
-    // the 5 pair-family keys — job latency dominates at local scale)
-    // but saves TWO full corpus tokenize+shuffle passes per operator at
-    // real scale, where the corpus scan is the cost. The pin is the
-    // (doc, token)-distinct table, the smallest frame in the pipeline.
-    //
-    // Pin retention: localCheckpoint blocks persist until
-    // the checkpointed RDD is GC'd and reaped by the ContextCleaner —
-    // there is no handle here to unpersist eagerly (the returned frame
-    // escapes into arbitrary downstream plans). Acceptable because the
-    // pin is the smallest frame in the pipeline (distinct (doc, token)
-    // rows, ~the corpus' token column) and each Verify/Bench key runs
-    // in its own query; a long-lived session that loops pair operators
-    // bounds retention via normal driver GC. A reliable
-    // `spark.graft.checkpointDir` run writes to DFS instead and is
-    // cleaned by `spark.cleaner.referenceTracking.cleanCheckpoints`.
-    val tp = tok.pinned
-    bitsetDict(tp).map { dict =>
-      tp.join(dict, "w")
-        .groupBy(col("doc_id"))
-        .agg(expr("bit_or(shiftleft(1L, grank))").as("m"))
-        .withColumn("c", expr("bit_count(m)"))
+    * `dict` is the ≤62-row global dictionary (w, grank). It carries no
+    * hard broadcast hint (the engine-wide rule): AQE broadcasts it at
+    * runtime, and the forced-shuffle fallback stays exercised by
+    * PlanSpec. [[minhashCandAndPairs]] joins it straight onto `tok` to
+    * fuse the mask build into the SAME groupBy that computes the MinHash
+    * signature, so it never builds [[docs]]. */
+  private[graft] final class Masks(val tok: DataFrame, val dict: DataFrame)
+      extends TokenSets {
+    /** (doc_id, m: BIGINT mask, c = bit_count(m)) — one row per
+      * document, pinned: every caller reads it twice (pair join plus
+      * expansion, or the two sides of the delta join). */
+    lazy val docs: DataFrame = tok.join(dict, "w")
+      .groupBy(col("doc_id"))
+      .agg(expr("bit_or(shiftleft(1L, grank))").as("m"))
+      .withColumn("c", expr("bit_count(m)"))
+      .pinned
+
+    /** (uniq, grp): the mask quotient ([[maskUniq]], pinned — the
+      * candidate join and the member expansion both read it) and its
+      * membership table ([[maskMembers]]). Built on first use only; the
+      * delta and MinHash arms never build it. */
+    lazy val quotient: (DataFrame, DataFrame) = {
+      val uniq = maskUniq(docs).pinned
+      (uniq, maskMembers(docs, uniq))
     }
   }
 
-  /** The ≤62-token global dictionary (w, grank) behind [[bitsetDocs]],
-    * or None when the vocabulary overflows one 64-bit word. Split out
-    * (r11) so [[minhashCandAndPairs]] can fuse the mask build into the
-    * SAME groupBy that computes the MinHash signature — one doc-keyed
-    * shuffle instead of two, and the exact verify rides the band join
-    * inline instead of two mask-attach joins. */
-  private def bitsetDict(tok: DataFrame): Option[DataFrame] = {
+  /** Vocabulary over 62 tokens: the open-vocabulary prefix-filter
+    * postings path ([[docRanked]]). */
+  private[graft] final class Postings(val tok: DataFrame) extends TokenSets
+
+  /** Tokenizes `documents` once, pins the distinct (doc_id, w) rows and
+    * picks the representation — the adaptive dispatch, AQE-style: one
+    * vocabulary-sized gate job (the token dictionary is computed for the
+    * general path's df order anyway). Closed dictionaries (tags, SKUs,
+    * enum vocabularies) stay closed at any corpus size, so the gate is
+    * corpus-size-independent; open-vocabulary text overflows 62 tokens
+    * immediately and takes the postings path. The graded corpus is a
+    * 31-token dictionary (measured), i.e. the mask path at every SF;
+    * tests reach the postings path on the same corpus by adding one
+    * document of 63 fresh tokens, and RewriteEquivalenceSpec fuzzes
+    * both paths against brute force.
+    *
+    * The distinct (doc, token) subtree feeds THREE executions otherwise
+    * — the gate count, the dictionary aggregate, and the mask build —
+    * and Spark shares no work across separate actions. Pinning it once
+    * is a wash at sf0.1 (A/B via Bench reps=3: 15.96 s vs 16.24 s over
+    * the 5 pair-family keys — job latency dominates at local scale) but
+    * saves TWO full corpus tokenize+shuffle passes per operator at real
+    * scale, where the corpus scan is the cost. The pin is the smallest
+    * frame in the pipeline.
+    *
+    * Pin retention: localCheckpoint blocks persist until the
+    * checkpointed RDD is GC'd and reaped by the ContextCleaner — there is
+    * no handle here to unpersist eagerly (the frames escape into
+    * arbitrary downstream plans). Acceptable because each Verify/Bench
+    * key runs in its own query and the harness sweeps its pins; a
+    * long-lived session that loops pair operators bounds retention via
+    * normal driver GC. A reliable `spark.graft.checkpointDir` run writes
+    * to DFS instead and is cleaned by
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`. */
+  private[graft] def tokenSets(s: SparkSession, d: String): TokenSets = {
+    val tok = t(s, d, "documents")
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .distinct()
+      .pinned
     val dfreq = tok.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    if (dfreq.limit(63).count() > 62) None
-    else Some(dfreq.select(col("w"),
+    if (dfreq.limit(63).count() > 62) new Postings(tok)
+    else new Masks(tok, dfreq.select(col("w"),
       (row_number().over(Window.orderBy("df", "w")) - 1).as("grank")))
   }
 
@@ -199,7 +209,7 @@ object TextSimOps {
         "filter(sequence(0, 61), g -> (m & shiftleft(1L, g)) != 0 AND " +
           s"bit_count(m & (shiftleft(1L, g) - 1)) < $rankLimitSql)")).as("g"))
 
-  /** Exact Jaccard pairs on the bitset substrate (see [[bitsetDocs]]):
+  /** Exact Jaccard pairs on the bitset substrate (see [[Masks]]):
     * prefix-posting equi-join on the token rank, every predicate —
     * length band, EXACT threshold via bit_count, first-shared-token
     * uniqueness — inline in the join condition. No verify stage, no
@@ -457,27 +467,16 @@ object TextSimOps {
     * output rows, so the trailing distinct is exact. */
   private[graft] def exactWordPairs(s: SparkSession, d: String,
       tauPct: Int): DataFrame = {
-    // Adaptive representation dispatch (r10, see bitsetDocs): a
+    // Adaptive representation dispatch (see tokenSets): a
     // dictionary-fitting corpus takes the exact-bitset path — identical
-    // output, no verify/dedup stages at all. Pinned for the same
-    // two-consumer reason as `ranked` below.
-    if (!forceGeneral(s)) {
-      val tok = t(s, d, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .distinct()
-      bitsetDocs(tok) match {
-        case Some(docs) =>
-          // Quotient by identical mask (r10, see maskUniq): the
-          // candidate join runs over distinct token SETS only; doc
-          // pairs regenerate by output-sized member expansion. Both
-          // substrate frames feed two consumers (pair join +
-          // expansion), hence the pins.
-          val bd = docs.pinned
-          val uniq = maskUniq(bd).pinned
-          val grp = maskMembers(bd, uniq)
-          return expandJaccard(bitsetJaccardPairs(uniq, tauPct), grp)
-        case None => ()
-      }
+    // output, no verify/dedup stages at all. The candidate join runs
+    // over the mask quotient (distinct token SETS only, see maskUniq);
+    // doc pairs regenerate by output-sized member expansion.
+    tokenSets(s, d) match {
+      case m: Masks =>
+        val (uniq, grp) = m.quotient
+        return expandJaccard(bitsetJaccardPairs(uniq, tauPct), grp)
+      case _: Postings => ()
     }
     // ranked feeds THREE consumers (x prefix, y prefix, verify arrays);
     // exchange/stage reuse across those branches is a lottery (see the
@@ -551,37 +550,30 @@ object TextSimOps {
     * byte-equal and fuzzed vs brute force in RewriteEquivalenceSpec. */
   private[graft] def deltaJaccardPairs(s: SparkSession, d: String,
       tauPct: Int, isDelta: Column => Column): DataFrame = {
-    val fast =
-      if (forceGeneral(s)) None
-      else {
-        val tok = t(s, d, "documents")
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-          .distinct()
-        bitsetDocs(tok).map { docs =>
-          val bd = docs.pinned
-          val x = bitBits(bd.where(isDelta(col("doc_id"))),
-              s"c - ($tauPct * c + 99) div 100 + 1")
-            .select(col("doc_id").as("xa"), col("m").as("ma"),
-              col("c").as("ca"), col("g"))
-          val y = bitBits(bd, "c")
-            .select(col("doc_id").as("xb"), col("m").as("mb"),
-              col("c").as("cb"), col("g").as("gy"))
-          x.join(y, col("g") === col("gy") && col("xa") =!= col("xb") &&
-              (!isDelta(col("xb")) || col("xa") < col("xb")) &&
-              lit(100) * col("ca") >= lit(tauPct) * col("cb") &&
-              lit(100) * col("cb") >= lit(tauPct) * col("ca") &&
-              expr("shiftleft(1L, g) = ((ma & mb) & -(ma & mb))") &&
-              expr(s"(100 + $tauPct) * bit_count(ma & mb) >= " +
-                s"$tauPct * (ca + cb)"))
-            .select(least(col("xa"), col("xb")).as("da"),
-              greatest(col("xa"), col("xb")).as("db"),
-              expr("bit_count(ma & mb)").as("inter"),
-              expr("ca + cb - bit_count(ma & mb)").as("uni"))
-        }
-      }
-    fast.getOrElse(
-      exactWordPairs(s, d, tauPct)
-        .where(isDelta(col("da")) || isDelta(col("db"))))
+    tokenSets(s, d) match {
+      case m: Masks =>
+        val x = bitBits(m.docs.where(isDelta(col("doc_id"))),
+            s"c - ($tauPct * c + 99) div 100 + 1")
+          .select(col("doc_id").as("xa"), col("m").as("ma"),
+            col("c").as("ca"), col("g"))
+        val y = bitBits(m.docs, "c")
+          .select(col("doc_id").as("xb"), col("m").as("mb"),
+            col("c").as("cb"), col("g").as("gy"))
+        x.join(y, col("g") === col("gy") && col("xa") =!= col("xb") &&
+            (!isDelta(col("xb")) || col("xa") < col("xb")) &&
+            lit(100) * col("ca") >= lit(tauPct) * col("cb") &&
+            lit(100) * col("cb") >= lit(tauPct) * col("ca") &&
+            expr("shiftleft(1L, g) = ((ma & mb) & -(ma & mb))") &&
+            expr(s"(100 + $tauPct) * bit_count(ma & mb) >= " +
+              s"$tauPct * (ca + cb)"))
+          .select(least(col("xa"), col("xb")).as("da"),
+            greatest(col("xa"), col("xb")).as("db"),
+            expr("bit_count(ma & mb)").as("inter"),
+            expr("ca + cb - bit_count(ma & mb)").as("uni"))
+      case _: Postings =>
+        exactWordPairs(s, d, tauPct)
+          .where(isDelta(col("da")) || isDelta(col("db")))
+    }
   }
 
   /** Per-row MinHash band keys (doc_id, band, bkey) — the dedup_minhash
@@ -617,9 +609,9 @@ object TextSimOps {
     * shuffle mover, 31 MiB at sf0.1):
     *  - ONE doc-keyed groupBy computes the signature and the verify
     *    payload together. On the bitset path (closed ≤62-token
-    *    vocabulary, [[bitsetDict]]) the payload is the exact BIGINT set
+    *    vocabulary, [[Masks]]) the payload is the exact BIGINT set
     *    mask, 8 bytes; the general path carries the sorted fingerprint
-    *    array it would otherwise rebuild in [[docTokens]].
+    *    array it would otherwise rebuild in [[docTokensFrom]].
     *  - The band rows carry the verify payload, so on the bitset path
     *    the EXACT threshold is evaluated INLINE in the band join —
     *    the candidate-pair exchange and both mask-attach joins are
@@ -637,10 +629,6 @@ object TextSimOps {
       nBands: Int, nRows: Int): (DataFrame, DataFrame) = {
     val tauPct = 75
     val nH = nBands * nRows
-    val tok = t(s, d, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .distinct()
-      .pinned
     val hAggs = (0 until nH).map(i =>
       min(xxhash64(col("w"), lit(i))).as(s"h$i"))
     val bkExprs = (0 until nBands).map(b =>
@@ -709,16 +697,15 @@ object TextSimOps {
       // the same pin was a wash — the fix unmasked it).
       .pinned
       .orderBy("da", "db")
-    val dictOpt = if (forceGeneral(s)) None else bitsetDict(tok)
-    dictOpt match {
-      case Some(dict) =>
+    tokenSets(s, d) match {
+      case m: Masks =>
         // pinned: BOTH band-join sides consume keyed — unpinned, each
         // side re-plans the dict window + signature agg (the subtree
         // would execute twice, and the ≤62-row dictionary's
         // single-partition rank window would leak into the key's own
         // plan; pinning keeps it a one-off dictionary-sized job, the
-        // same discipline as bitsetDocs' callers)
-        val keyed = tok.join(dict, "w")
+        // same discipline as Masks.docs)
+        val keyed = m.tok.join(m.dict, "w")
           .groupBy(col("doc_id"))
           .agg(expr("bit_or(shiftleft(1L, grank))").as("m"), hAggs: _*)
           .withColumn("c", expr("bit_count(m)"))
@@ -731,10 +718,10 @@ object TextSimOps {
           expr("bit_count(ma & mb)").as("inter"),
           col("ca"), col("cb"))
         (cand, finish(pairs))
-      case None =>
+      case p: Postings =>
         // pinned: three consumers (band rows + both verify attaches) —
         // one tokenize + one doc-keyed groupBy total
-        val keyed = tok.groupBy(col("doc_id"))
+        val keyed = p.tok.groupBy(col("doc_id"))
           .agg(hAggs.head,
             hAggs.tail :+
               sort_array(collect_set(xxhash64(col("w")))).as("wh"): _*)
@@ -763,12 +750,6 @@ object TextSimOps {
         (cand, finish(pairs))
     }
   }
-
-  /** The sim_jaccard_pairs pair frame BEFORE its presentation pin —
-    * ONE construction shared by the key and PlanSpec's broadcast/
-    * shuffle-fallback audit, so the test cannot drift from the key. */
-  private[graft] def jaccardPairsPrePin(s: SparkSession,
-      d: String): DataFrame = exactWordPairs(s, d, TauPct)
 
   /** Round budget of the dedup-family CC keys. ccCore's
     * propagate+jump covers converged radius 2^(r+1)−2, so 4 rounds
@@ -838,23 +819,16 @@ object TextSimOps {
     * set, unchanged. */
   private def connectivityPairs(s: SparkSession, d: String,
       tauPct: Int): DataFrame = {
-    if (!forceGeneral(s)) {
-      val tok = t(s, d, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .distinct()
-      bitsetDocs(tok) match {
-        case Some(docs) =>
-          val bd = docs.pinned
-          val uniq = maskUniq(bd).pinned
-          val memb = maskMembers(bd, uniq)
-            .where(col("doc_id") =!= col("rep"))
-            .select(col("doc_id").as("da"), col("rep").as("db"))
-          return bitsetJaccardPairs(uniq, tauPct)
-            .select(col("da"), col("db")).union(memb)
-        case None => ()
-      }
+    tokenSets(s, d) match {
+      case m: Masks =>
+        val (uniq, grp) = m.quotient
+        val memb = grp.where(col("doc_id") =!= col("rep"))
+          .select(col("doc_id").as("da"), col("rep").as("db"))
+        bitsetJaccardPairs(uniq, tauPct)
+          .select(col("da"), col("db")).union(memb)
+      case _: Postings =>
+        exactWordPairs(s, d, tauPct).select(col("da"), col("db"))
     }
-    exactWordPairs(s, d, tauPct).select(col("da"), col("db"))
   }
 
   /** Min-label CC over the near-dup pair graph (see the
@@ -947,7 +921,7 @@ object TextSimOps {
     // pipe_delta_dedup trade applied to the symmetric key; the pair set
     // materializes once and the sort reads blocks.
     "sim_jaccard_pairs" -> ((s: SparkSession, d: String) =>
-      pin(jaccardPairsPrePin(s, d)).orderBy("da", "db")),
+      pin(exactWordPairs(s, d, TauPct)).orderBy("da", "db")),
 
     // INCREMENTAL (delta) near-dedup — the shape a production ingest
     // actually runs: a new batch (delta = doc_id % 10 == 0, the
@@ -1036,22 +1010,16 @@ object TextSimOps {
     // form is direct here (inter ≥ ⌈τ·ca⌉ references inter once).
     "sim_containment_pairs" -> ((s: SparkSession, d: String) => {
       val tau = 95
-      // Adaptive representation dispatch (r10, see bitsetDocs): the
+      // Adaptive representation dispatch (see tokenSets): the
       // dictionary-fitting corpus takes the exact-bitset path.
-      val bitset = if (forceGeneral(s)) None else bitsetDocs(
-        t(s, d, "documents")
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-          .distinct())
-      bitset match {
-        case Some(docs) =>
-          // mask quotient + SORT-FUSED member expansion (r12, see
+      tokenSets(s, d) match {
+        case m: Masks =>
+          // mask quotient + SORT-FUSED member expansion (see
           // expandContainmentSorted): the range exchange runs on the
           // pre-expansion intermediate, not the 4.6 M-row output
-          val bd = docs.pinned
-          val uniq = maskUniq(bd).pinned
-          val grp = maskMembers(bd, uniq)
+          val (uniq, grp) = m.quotient
           expandContainmentSorted(bitsetContainmentPairs(uniq, tau), grp)
-        case None =>
+        case _: Postings =>
           // pinned once for the same three-consumer reason as
           // exactWordPairs
           val ranked = docRanked(s, d).pinned
@@ -1133,7 +1101,7 @@ object TextSimOps {
             GraftBridge.expression(col("text")), 5)).as("ng"))
       }
       // gram attaches unhinted: doc-count-sized table behind its own
-      // exchange — AQE broadcasts it when it fits (see docTokens note)
+      // exchange — AQE broadcasts it when it fits (see docTokensFrom)
       cand
         .join(grams.select(col("doc_id").as("da"),
           col("ng").as("ga")), "da")

@@ -33,7 +33,7 @@ object WindowOps {
     // plan is two exchanges — hashpartitioning(user_id, event_type) for
     // the first-seen window, then hashpartitioning(user_id) for the
     // running sum (Spark does not satisfy the coarser key from the
-    // finer one; ADVICE r6 corrected the old one-exchange claim) — but
+    // finer one, so one exchange is not enough) — but
     // both are KEYED: no global single-partition window at any scale.
     "win_running_distinct" -> ((s: SparkSession, d: String) => {
       val w1 = Window.partitionBy("user_id", "event_type")

@@ -124,9 +124,9 @@ final class CompactingParquetSink(root: String, targetBytes: Long)
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val tmp = new org.apache.hadoop.fs.Path(s"$root/__compact_$table")
     df.repartition(n).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // swap via rename-aside (ADVICE r4): the old delete-then-rename left
-    // a window where a crash stranded the data in __compact_<table> with
-    // NO live table path. Renaming the live directory aside first means
+    // swap via rename-aside: a delete-then-rename would leave a window
+    // where a crash strands the data in __compact_<table> with NO live
+    // table path. Renaming the live directory aside first means
     // every failure point leaves a recoverable directory: before the
     // second rename the table survives at __old_<table>; after it, the
     // swap is complete and __old is garbage. Rename is atomic per
@@ -141,8 +141,8 @@ final class CompactingParquetSink(root: String, targetBytes: Long)
     if (!fs.rename(tmp, path)) {
       // restore the original table; if THAT also fails the table is
       // absent at its live path, so the error must say where the data
-      // survives (ADVICE r5: a swallowed restore failure made the
-      // exception claim less than the operator knows)
+      // survives (a swallowed restore failure would make the exception
+      // claim less than the operator knows)
       if (!fs.rename(old, path))
         throw new java.io.IOException(
           s"compact swap: cannot install $tmp AND restore failed — " +

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface over the events table shape: file-source
@@ -15,15 +14,6 @@ import org.apache.spark.sql.types.StructType
   * the standard scale-out path; watermarks bound state size.
   */
 object EventStreams {
-  final case class Event(event_id: Long, ts_us: Long, user_id: Long,
-      event_type: String, value: Double)
-
-  final case class SessionState(var sid: Long, var lastTs: Long,
-      var count: Long, var start: Long)
-
-  final case class Session(user_id: Long, sid: Long, cnt: Long,
-      s_start: Long, dur_us: Long)
-
   /** Chronological file-source replay of an events directory. */
   def readEvents(spark: SparkSession, dir: String, schema: StructType,
       filesPerTrigger: Int = 1): DataFrame =
@@ -80,8 +70,8 @@ object EventStreams {
     * and the session merge runs as a regular aggregate; on a stream the
     * engine keeps per-(user, open-session) state, merges/extends on
     * arrival, and finalizes a session in append mode once the watermark
-    * passes its close — which is exactly the state-expiry contract the
-    * custom [[sessionize]] had to hand-roll. StreamingSpec proves
+    * passes its close, so state expires without hand-rolled timeouts
+    * and each user's last session is emitted too. StreamingSpec proves
     * replay equivalence of the two modes over the real readStream path.
     *
     * Boundary semantics: `session_window` ends a session at
@@ -103,38 +93,4 @@ object EventStreams {
       .agg(count(lit(1)).as("cnt"), min(col("ts_us")).as("s_start"),
         (max(col("ts_us")) - min(col("ts_us"))).as("dur_us"))
       .select(col("user_id"), col("s_start"), col("cnt"), col("dur_us"))
-
-  /** Stateful sessionization via flatMapGroupsWithState — the custom-state
-    * form of `window_session` (30-min gap). Emits a session as soon as a
-    * later event closes it; the group's final open session stays in state
-    * until event-time timeout (streaming) or — in batch mode, where
-    * timeouts never fire — is intentionally NOT emitted, which
-    * StreamingSpec asserts precisely (batch output = gaps-and-islands
-    * output minus each user's last session).
-    */
-  def sessionize(events: Dataset[Event],
-      gapUs: Long = 1800L * 1000000L): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[Event], state: GroupState[SessionState]) =>
-          val sorted = it.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Session]
-          var st = state.getOption.orNull
-          sorted.foreach { e =>
-            if (st == null) {
-              st = SessionState(1L, e.ts_us, 1L, e.ts_us)
-            } else if (e.ts_us - st.lastTs > gapUs) {
-              out += Session(user, st.sid, st.count, st.start,
-                st.lastTs - st.start)
-              st = SessionState(st.sid + 1, e.ts_us, 1L, e.ts_us)
-            } else {
-              st.count += 1; st.lastTs = e.ts_us
-            }
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
-  }
 }

@@ -441,27 +441,30 @@ class PlanSpec extends SparkTestBase {
     // plan); with broadcasts force-disabled the operator must still
     // produce the identical result through the shuffle fallback —
     // proving the 100 TB degradation path is exercised, not just
-    // documented. Both representation paths are held to the contract.
-    // sim_jaccard_pairs is inspected at its PRE-PIN pair frame (r15:
-    // the key pins the pair set before its presentation sort, so the
-    // key-level executed plan is Sort-over-ExistingRDD and the verify
-    // attach — the joins this test audits — happens inside the pin's
+    // documented. Both representation paths are held to the contract:
+    // the corpus takes the bitset path, and the same corpus plus one
+    // pad document of fresh tokens (PaddedCorpus) the general path.
+    // sim_jaccard_pairs is inspected at its PRE-PIN pair frame (the key
+    // pins the pair set before its presentation sort, so the key-level
+    // executed plan is Sort-over-ExistingRDD and the verify attach —
+    // the joins this test audits — happens inside the pin's
     // materialization, invisible to plan inspection from above).
-    def frame(k: String) =
+    val (padded, padId) = PaddedCorpus.of(spark, sf)
+    def frame(k: String, dir: String) =
       if (k == "sim_jaccard_pairs")
-        // the SHARED pre-pin builder the key itself pins (ADVICE r15:
-        // a hand-copied construction with a literal threshold drifts)
-        graft.operators.TextSimOps.jaccardPairsPrePin(spark, sf)
-          .orderBy("da", "db")
-      else SparkEntry.queries(k)(spark, sf)
-    for (forceGeneral <- Seq(false, true);
+        // the key's own builder and threshold, so the audit cannot
+        // drift from the key
+        graft.operators.TextSimOps.exactWordPairs(spark, dir,
+          graft.operators.TextSimOps.TauPct).orderBy("da", "db")
+      else SparkEntry.queries(k)(spark, dir)
+    for ((dir, arm) <- Seq(sf -> "masks", padded -> "postings");
          k <- Seq("sim_jaccard_pairs", "sim_containment_pairs")) {
-      if (forceGeneral)
-        spark.conf.set("spark.graft.sim.forceGeneral", "true")
-      else spark.conf.unset("spark.graft.sim.forceGeneral")
-      val df = frame(k)
+      assert(PaddedCorpus.arm(spark, dir) == arm, s"$dir: not the $arm arm")
+      val df = frame(k, dir)
       val rows = df.collect()
       val p = df.queryExecution.executedPlan.toString
+      assert(!rows.exists(r => r.getLong(0) == padId || r.getLong(1) == padId),
+        s"$k: the pad document $padId is in an output pair")
       assert(p.contains("BroadcastHashJoin"),
         s"$k: AQE did not broadcast the verify attach at test scale:\n$p")
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -470,7 +473,7 @@ class PlanSpec extends SparkTestBase {
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        val df2 = frame(k)
+        val df2 = frame(k, dir)
         val rows2 = df2.collect()
         val p2 = df2.queryExecution.executedPlan.toString
         assert(!p2.contains("BroadcastHashJoin"),
@@ -490,7 +493,6 @@ class PlanSpec extends SparkTestBase {
           case None => spark.conf
             .unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
         }
-        spark.conf.unset("spark.graft.sim.forceGeneral")
       }
     }
   }

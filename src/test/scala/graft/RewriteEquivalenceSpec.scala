@@ -17,6 +17,24 @@ import graft.functions.{ShingleGenerator, SortedIntersectCount}
 class RewriteEquivalenceSpec extends SparkTestBase {
   private val rnd = new scala.util.Random(20260812L)
 
+  /** `sf` plus one pad document (see [[PaddedCorpus]]): the same corpus
+    * on the postings arm. */
+  private lazy val (padded, padId) = PaddedCorpus.of(spark, sf)
+
+  /** `sf` takes the masks arm and [[padded]] the postings arm — so the
+    * "same corpus, both plans" tests below really compare two plans. */
+  private def assertArms(): Unit = {
+    assert(PaddedCorpus.arm(spark, sf) == "masks",
+      "the corpus did not take the masks arm")
+    assert(PaddedCorpus.arm(spark, padded) == "postings",
+      "the padded corpus did not take the postings arm")
+  }
+
+  private def padFree(what: String, pairs: Set[_ <: Product]): Unit =
+    assert(!pairs.exists(p => p.productElement(0) == padId ||
+        p.productElement(1) == padId),
+      s"$what: the pad document $padId is in an output pair")
+
   test("prefix-filtered exact Jaccard equals brute force on random corpora") {
     val ss = spark
     import ss.implicits._
@@ -89,30 +107,41 @@ class RewriteEquivalenceSpec extends SparkTestBase {
   }
 
   test("bitset fast path equals the general prefix-filter path (r10)") {
-    // the r10 adaptive dispatch: on a ≤62-token dictionary the pair
-    // operators run the exact-bitset plan; spark.graft.sim.forceGeneral
-    // pins the open-vocabulary plan. Same corpus, both plans, byte-equal
-    // pair sets — Jaccard AND containment.
-    def jac() = operators.TextSimOps.exactWordPairs(spark, sf, 90)
+    // the adaptive dispatch (TextSimOps.tokenSets): on a ≤62-token
+    // dictionary the pair operators run the exact-bitset plan; the same
+    // corpus plus one pad document of fresh tokens runs the
+    // open-vocabulary plan. The pad joins nothing, so both plans give
+    // byte-equal pair sets — Jaccard AND containment — and the same
+    // clusters apart from the pad's own singleton.
+    assertArms()
+    def jac(dir: String) = operators.TextSimOps.exactWordPairs(spark, dir, 90)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
       .toSet
-    def con() = SparkEntry.queries("sim_containment_pairs")(spark, sf)
+    def con(dir: String) = SparkEntry.queries("sim_containment_pairs")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
       .toSet
-    val (fastJ, fastC) = (jac(), con())
-    spark.conf.set("spark.graft.sim.forceGeneral", "true")
-    try {
-      val (genJ, genC) = (jac(), con())
-      assert(fastJ == genJ,
-        s"jaccard: onlyFast=${(fastJ -- genJ).take(5)} " +
-          s"onlyGeneral=${(genJ -- fastJ).take(5)}")
-      assert(fastC == genC,
-        s"containment: onlyFast=${(fastC -- genC).take(5)} " +
-          s"onlyGeneral=${(genC -- fastC).take(5)}")
-      assert(fastJ.nonEmpty && fastC.nonEmpty, "degenerate corpus")
-    } finally spark.conf.unset("spark.graft.sim.forceGeneral")
+    def cc(dir: String) = SparkEntry.queries("dedup_cluster_cc")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (fastJ, fastC, fastCC) = (jac(sf), con(sf), cc(sf))
+    val (genJ, genC, genCC) = (jac(padded), con(padded), cc(padded))
+    padFree("jaccard", genJ)
+    padFree("containment", genC)
+    assert(genCC.filter(r => r._1 == padId || r._2 == padId) ==
+        Set((padId, padId)),
+      "the pad document is not a singleton cluster")
+    assert(fastJ == genJ,
+      s"jaccard: onlyFast=${(fastJ -- genJ).take(5)} " +
+        s"onlyGeneral=${(genJ -- fastJ).take(5)}")
+    assert(fastC == genC,
+      s"containment: onlyFast=${(fastC -- genC).take(5)} " +
+        s"onlyGeneral=${(genC -- fastC).take(5)}")
+    assert(fastCC == genCC - ((padId, padId)),
+      s"clusters: onlyFast=${(fastCC -- genCC).take(5)} " +
+        s"onlyGeneral=${(genCC -- fastCC).take(5)}")
+    assert(fastJ.nonEmpty && fastC.nonEmpty, "degenerate corpus")
+    assert(fastCC.map(_._2).size < fastCC.size, "no multi-member cluster")
   }
 
   test("expandContainmentSorted: pre-expansion range exchange emits the " +
@@ -143,14 +172,10 @@ class RewriteEquivalenceSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft_contsort").toString
     dense.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     for (corpus <- Seq(sf, dir)) {
-      val tok = Tables.t(spark, corpus, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .distinct()
-      val docs = operators.TextSimOps.bitsetDocs(tok).get
-      import Tables.PinSyntax
-      val bd = docs.pinned
-      val uniq = operators.TextSimOps.maskUniq(bd).pinned
-      val grp = operators.TextSimOps.maskMembers(bd, uniq)
+      val (uniq, grp) = operators.TextSimOps.tokenSets(spark, corpus) match {
+        case m: operators.TextSimOps.Masks => m.quotient
+        case _ => fail(s"corpus $corpus did not take the masks arm")
+      }
       def rp() = operators.TextSimOps.bitsetContainmentPairs(uniq, 95)
       if (corpus != sf)
         assert(rp().limit(1).count() == 1,
@@ -168,41 +193,40 @@ class RewriteEquivalenceSpec extends SparkTestBase {
 
   test("dedup_minhash: inline-mask verify (bitset) equals the " +
     "array-attach verify (general path)") {
-    // r11: both paths share the SAME signature and banding (min
+    // both paths share the SAME signature and banding (min
     // seeded-xxhash64 over the distinct token set is representation-
-    // independent), so the candidate sets are identical and the exact
-    // verify — inline bit_count on the bitset path, sorted-fingerprint
-    // merge count on the general path — must produce byte-equal pairs.
-    def mh() = SparkEntry.queries("dedup_minhash")(spark, sf)
+    // independent), so the verified pairs among the corpus' documents
+    // are identical and the exact verify — inline bit_count on the
+    // bitset path, sorted-fingerprint merge count on the general path —
+    // must produce byte-equal pairs; the pad document verifies into none.
+    assertArms()
+    def mh(dir: String) = SparkEntry.queries("dedup_minhash")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
-    val fast = mh()
-    spark.conf.set("spark.graft.sim.forceGeneral", "true")
-    try {
-      val gen = mh()
-      assert(fast == gen,
-        s"onlyFast=${(fast -- gen).take(5)} onlyGeneral=${(gen -- fast).take(5)}")
-      assert(fast.nonEmpty, "degenerate corpus")
-    } finally spark.conf.unset("spark.graft.sim.forceGeneral")
+    val (fast, gen) = (mh(sf), mh(padded))
+    padFree("dedup_minhash", gen)
+    assert(fast == gen,
+      s"onlyFast=${(fast -- gen).take(5)} onlyGeneral=${(gen -- fast).take(5)}")
+    assert(fast.nonEmpty, "degenerate corpus")
   }
 
   test("pipe_delta_dedup: delta-restricted bitset join equals the " +
     "endpoint-filtered general path") {
     // the delta path never GENERATES base×base candidates; the general
-    // fallback filters the full pair set — same pair set required
-    def delta() = SparkEntry.queries("pipe_delta_dedup")(spark, sf)
+    // fallback (the padded corpus) filters the full pair set — same
+    // pair set required
+    assertArms()
+    def delta(dir: String) = SparkEntry.queries("pipe_delta_dedup")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
       .toSet
-    val fast = delta()
-    spark.conf.set("spark.graft.sim.forceGeneral", "true")
-    try {
-      val gen = delta()
-      assert(fast == gen,
-        s"onlyFast=${(fast -- gen).take(5)} onlyGeneral=${(gen -- fast).take(5)}")
-      // every pair touches the delta batch and base×base never appears
-      assert(fast.forall(p => p._1 % 10 == 0 || p._2 % 10 == 0))
-    } finally spark.conf.unset("spark.graft.sim.forceGeneral")
+    val (fast, gen) = (delta(sf), delta(padded))
+    padFree("pipe_delta_dedup", gen)
+    assert(fast == gen,
+      s"onlyFast=${(fast -- gen).take(5)} onlyGeneral=${(gen -- fast).take(5)}")
+    // every pair touches the delta batch and base×base never appears
+    assert(fast.forall(p => p._1 % 10 == 0 || p._2 % 10 == 0))
+    assert(fast.nonEmpty, "degenerate corpus")
   }
 
   test("tiledPairs enumerates every unordered pair exactly once") {

@@ -45,9 +45,9 @@ object ScaleProbe {
         mode match {
           case "open" =>
             // per-copy token suffixing: vocab grows k×, copies share
-            // no tokens — general path guaranteed for every k (the
-            // base corpus alone is 31 tokens; 2×31 > 62 already at
-            // k=2, and k=1 is forced below for a uniform plan)
+            // no tokens — general path for every k (the base corpus
+            // alone is 31 tokens; 2×31 > 62 already at k=2, and the pad
+            // document below takes k=1 there too, for a uniform plan)
             docs.select(renumbered.as("doc_id"),
               concat_ws(" ", expr(
                 s"transform(split(text, ' '), w -> concat(w, '_c$j'))"))
@@ -65,25 +65,24 @@ object ScaleProbe {
                 col("lang"), col("source"), col("n_chars"))
         }
       }
-      copies.reduce(_ union _).coalesce(4)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      // `open` at k=1 still has a ≤62-token vocab; force the general
-      // plan so the whole curve measures ONE code path
-      if (mode == "open")
-        spark.conf.set("spark.graft.sim.forceGeneral", "true")
+      val corpus = copies.reduce(_ union _).coalesce(4)
+      // `open` at k=1 still has a ≤62-token vocab; one pad document of
+      // fresh tokens (it joins no pair) puts every rung on the general
+      // plan, so the whole curve measures ONE code path
+      if (mode == "open") PaddedCorpus.write(corpus, dir)
+      else corpus.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val (np, tp, wPairs) = meter.measure(
         operators.TextSimOps.exactWordPairs(spark, dir, 90).count())
       val (nc, tc, wCc) = meter.measure(
         operators.TextSimOps.clusterCC(spark, dir, 6).count())
       // r11: the banded-MinHash arm THE MODE SELECTS — under `open`
-      // (forceGeneral above) the general path (signature + fingerprint
+      // (padded above) the general path (signature + fingerprint
       // arrays in one groupBy, length-gated array-attach verify), the
       // curve DESIGN §12.1 publishes; under `closed` the bitset arm.
       // Label mh_ rows by the mode when reading them into tables.
       val (nm, tm, wMh) = meter.measure(
         operators.TextSimOps.minhashCandAndPairs(spark, dir, 4, 2)
           ._2.count())
-      spark.conf.unset("spark.graft.sim.forceGeneral")
       println(f"[scale-$mode] k=$k%d docs=${nBase * k}%7d pairs=$np%9d " +
         f"pairs_s=$tp%6.2f pairs_shufMiB=${wPairs / 1048576.0}%7.1f " +
         f"cc_rows=$nc%6d cc_s=$tc%6.2f cc_shufMiB=${wCc / 1048576.0}%7.1f " +

@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   * a vocabulary bijection), so qualifying pairs grow exactly k× while
   * the pair space grows k²× — the regime that separates a
   * candidate-bound plan (linear) from a pair-space-bound one
-  * (quadratic). `spark.graft.sim.forceGeneral=true` for EVERY rung
-  * (k=1 included): the suffixed vocabulary leaves the ≤62-token
-  * bitset dictionary by k=3 anyway, and one dispatch arm per curve is
-  * the point — the closed/bitset arm's ladder is DESIGN §12.
+  * (quadratic). Every rung (k=1 included) carries one pad document of
+  * fresh tokens ([[PaddedCorpus]]), so every rung takes the general
+  * arm: the suffixed vocabulary leaves the ≤62-token bitset
+  * dictionary by k=3 anyway, and one dispatch arm per curve is the
+  * point — the closed/bitset arm's ladder is DESIGN §12.
   * Shuffle-write bytes (task-metrics listener, §12.1) are the scale
   * signal; wall at these sizes is latency-dominated.
   * Usage: SimScaleProbe [baseSfDir] [outRoot]. */
@@ -26,7 +27,6 @@ object SimScaleProbe {
     val base = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_sim_scale"
     val spark = Harness.session(Harness.cpus)
-    spark.conf.set("spark.graft.sim.forceGeneral", "true")
     val meter = new ShuffleWriteMeter(spark)
     val docs = Tables.t(spark, base, "documents")
     val baseCols = docs.columns
@@ -34,7 +34,7 @@ object SimScaleProbe {
     ProbeScratch.runWith(outRoot) {
       for (k <- Seq(1, 2, 4, 8)) {
         val dir = s"$outRoot/x$k"
-        (0 until k).map { j =>
+        PaddedCorpus.write((0 until k).map { j =>
           if (j == 0) docs
           else docs
             .withColumn("doc_id", col("doc_id") + lit(j * 10000000L))
@@ -42,8 +42,7 @@ object SimScaleProbe {
               transform(split(col("text"), " "),
                 w => concat(w, lit(s"_c$j"))), " "))
             .select(baseCols.map(col): _*)
-        }.reduce(_ union _).coalesce(4)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        }.reduce(_ union _).coalesce(4), dir)
         val pinsBefore = Harness.pinSnapshot(spark)
         for (key <- Seq("sim_containment_pairs", "sim_ngram_jaccard")) {
           // fresh frame per timed draw (shuffle reuse on a shared

@@ -4,6 +4,8 @@
     python3 tools/ab.py --workload ingest-stream --pairs 10 --seed0 1001
                         [--base HEAD] [--change WORKTREE]
                         [--traced] [--workdir DIR]
+    python3 tools/ab.py --keys k1,k2 [--data DIR]
+                        [--base HEAD] [--change WORKTREE] [--workdir DIR]
 
 Each side is copied into its own directory under --workdir (default: a new
 temporary directory): a git revision through `git archive` (its committed
@@ -26,6 +28,16 @@ run and the medians differ by more than the base's q3 - q1. With
 per-layer counts next to each other, plus the codegen compiles of each
 replay where the workload streams. The whole record goes to
 <workdir>/ab.json. Exit code 1 if any run failed or was not correct.
+
+With --keys, both copies are built the same way and each side runs ONE
+`graft.perfbench.Main mode=queries ... trace=1` JVM over the named
+`SparkEntry.queries` keys on the corpus in --data (default
+/root/testdata/sf0.1), on the classpath that perfbench/run.py's build
+produces inside that copy. For every key it prints the traced try's
+counts of both sides next to each other, marking each count that
+differs; it prints no verdict. The raw records go to
+<workdir>/<side>-keys/raw.json. Exit code 1 if any try of either side
+failed.
 """
 import argparse
 import json
@@ -41,6 +53,30 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKTREE = "WORKTREE"
 MIN_PAIRS = 10
+# Per-key counts of one traced try, as graft.perfbench.Main records them.
+KEY_COUNTS = ["rows", "sched.jobs", "sched.stages", "sched.tasks",
+              "pin.count", "pin.bytes", "plans.exchanges",
+              "shuffle.write_bytes"]
+KEYS_LIMIT_S = 1800
+# Runs inside one copy: builds it with perfbench/run.py's build and runs
+# one traced queries JVM with run.py's launcher.
+RUN_KEYS = """
+import json, os, sys
+sys.path.insert(0, "perfbench")
+import run
+work, data, keys, limit = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4]
+tables = sorted(f[:-len(".parquet")] for f in os.listdir(data)
+                if f.endswith(".parquet"))
+os.makedirs(work)
+try:
+    run.run_jvm(run.build(), work, {
+        "mode": "queries", "data": data, "work": work,
+        "out": os.path.join(work, "raw.json"), "seed": 1, "seconds": 0,
+        "passes": 0, "trace": 1, "keys": keys, "tables": ",".join(tables)},
+        os.path.join(work, "jvm.log"), float(limit))
+except run.BenchError as e:
+    sys.exit(str(e))
+"""
 
 
 def git(*args, **kw):
@@ -91,6 +127,59 @@ def run_bench(side_dir, workload, seed, seconds, trace):
     return s
 
 
+def run_keys(side_dir, work, data, keys):
+    """One traced queries JVM over `keys` in the copy `side_dir`; returns
+    its raw record, or None if it produced none."""
+    p = subprocess.run([sys.executable, "-c", RUN_KEYS, work, data,
+                        ",".join(keys), str(KEYS_LIMIT_S)], cwd=side_dir)
+    raw = os.path.join(work, "raw.json")
+    if p.returncode != 0 or not os.path.isfile(raw):
+        return None
+    with open(raw) as f:
+        return json.load(f)
+
+
+def key_failures(raw, keys):
+    """Failed tries of one side's record, as printable lines."""
+    if raw is None:
+        return ["no record (build or JVM failed)"]
+    bad = [f"{t['key']} pass {t['pass']}: {t['error']}"
+           for t in raw["tries"] if t["error"] is not None]
+    traced = raw.get("traced") or {}
+    bad += [f"{k} traced: {e}" for k, e in traced.get("errors", {}).items()]
+    bad += [f"{k}: no traced try" for k in keys
+            if k not in traced.get("keys", {})]
+    return bad
+
+
+def compare_keys(a, sides, workdir):
+    keys = a.keys.split(",")
+    data = os.path.abspath(a.data)
+    raws = {}
+    for side in ("base", "change"):
+        raws[side] = run_keys(sides[side]["dir"],
+                              os.path.join(workdir, f"{side}-keys"), data,
+                              keys)
+    print(f"\nkeys on {data}: base {sides['base']['label']}, "
+          f"change {sides['change']['label']} (one traced try each)")
+    print(f"{'key':26s} {'count':20s} {'base':>14s} {'change':>14s}")
+    for k in keys:
+        for i, m in enumerate(KEY_COUNTS):
+            vals = [((raws[s] or {}).get("traced") or {}).get("keys", {})
+                    .get(k, {}).get(m) for s in ("base", "change")]
+            shown = [f"{v:.0f}" if isinstance(v, (int, float)) else "-"
+                     for v in vals]
+            mark = "  *" if vals[0] != vals[1] else ""
+            print(f"{k if i == 0 else '':26s} {m:20s} {shown[0]:>14s} "
+                  f"{shown[1]:>14s}{mark}")
+    ok = True
+    for side in ("base", "change"):
+        for line in key_failures(raws[side], keys):
+            ok = False
+            print(f"{side} FAILED {line}")
+    return ok
+
+
 def quartiles(vals):
     if len(vals) == 1:
         return vals[0], vals[0]
@@ -134,9 +223,13 @@ def metric_values(runs, name):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--workload", required=True)
+    mode = ap.add_mutually_exclusive_group(required=True)
+    mode.add_argument("--workload")
+    mode.add_argument("--keys", help="k1,k2: per-key counts instead")
+    ap.add_argument("--data", default="/root/testdata/sf0.1",
+                    help="corpus of --keys (default /root/testdata/sf0.1)")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seed0", type=int, required=True)
+    ap.add_argument("--seed0", type=int)
     ap.add_argument("--base", default="HEAD",
                     help="git revision, or WORKTREE (default HEAD)")
     ap.add_argument("--change", default=WORKTREE,
@@ -145,6 +238,8 @@ def main():
                     help="also run one --trace 1 call per side")
     ap.add_argument("--workdir")
     a = ap.parse_args()
+    if a.workload and a.seed0 is None:
+        ap.error("--workload needs --seed0")
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -155,6 +250,8 @@ def main():
         d = os.path.join(workdir, side)
         sides[side] = {"rev": rev, "dir": d, "label": materialize(rev, d)}
         print(f"{side}: {rev} ({sides[side]['label']}) in {d}", flush=True)
+    if a.keys:
+        return 0 if compare_keys(a, sides, workdir) else 1
 
     runs = {"base": [], "change": []}
     for i in range(a.pairs):
