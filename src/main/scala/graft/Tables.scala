@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,17 +26,21 @@ object Tables {
   /** Driver-fixed query signature (SparkEntry contract). */
   type QFn = (SparkSession, String) => DataFrame
 
-  /** Leaf-relation memo (r11): `spark.read.parquet` lists the path and
-    * reads footers for schema on EVERY call — ~50-70 ms per table that
-    * each of the 161 keys re-paid on each invocation. A real deployment
-    * resolves a table through a catalog ONCE; this map is that catalog
-    * for the fixed corpus. Only the analyzed leaf plan is reused — each
-    * downstream query still builds its own QueryExecution, so conf
-    * changes (shuffle width, AQE) and pushdown/pruning apply per query
-    * exactly as before. Keyed by session so a restarted session
-    * re-resolves. The corpus is read-only (TESTDATA.md); anything
-    * engine-written goes through the sources/IngestOps readers, never
-    * this registry. */
+  /** Leaf-relation memo: `spark.read.parquet` lists the path and runs a
+    * one-task schema-inference job on EVERY call — ~30-70 ms per table
+    * that each key re-paid on each invocation. A real deployment
+    * resolves a table through a catalog ONCE; this map is that catalog.
+    * Only the analyzed leaf plan is reused — each downstream query still
+    * builds its own QueryExecution, so conf changes (shuffle width, AQE)
+    * and pushdown/pruning apply per query exactly as before.
+    *
+    * Keyed by session (a restarted session re-resolves) and by the
+    * qualified, normalized path, so any directory is memoized. A parquet
+    * read freezes its file listing, so a directory rewritten after the
+    * read would serve deleted files: each entry keeps a fingerprint of
+    * the path's files (name, size, mtime), taken before the read, and a
+    * lookup whose listing differs — or whose path vanished — reads the
+    * path again and replaces the entry. */
   // Stopped sessions are evicted EXPLICITLY on the next access, not
   // through a WeakHashMap: the memoized DataFrames strongly reference
   // their session, so weak keys could never be collected and stopped
@@ -44,7 +49,7 @@ object Tables {
   // needs no listener plumbing.
   // All access synchronizes on the map itself.
   private val leafMemo = new java.util.HashMap[SparkSession,
-    scala.collection.mutable.Map[(String, String), DataFrame]]()
+    scala.collection.mutable.Map[String, (Seq[(String, Long, Long)], DataFrame)]]()
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Source fan-out (repartition-after-read for the corpus' single-
@@ -57,33 +62,39 @@ object Tables {
     // the added full-row exchange + sort-before-repartition costs more
     // than the serial scan it relieves). OPTIMIZATION_r15.md has the
     // numbers.
-    def read() = {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$sfDir/$name.parquet")
-    }
-    // Sweep stopped sessions on EVERY lookup, not only memoized ones:
-    // a JVM whose last t() calls all take the
-    // non-memoized branch must still release a stopped session's
-    // cached plans. O(live sessions) — in practice 1.
+    val raw = new Path(s"$sfDir/$name.parquet")
+    val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val path = new Path(fs.makeQualified(raw).toUri.normalize)
+    // every file under the path, sorted; None once the path is gone.
+    // Plain listStatus, not listFiles: a LocatedFileStatus copies the
+    // permissions, which the local file system reads by forking a
+    // process per file.
+    def files(p: Path): Seq[(String, Long, Long)] =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        if (f.isDirectory) files(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    def fingerprint(): Option[Seq[(String, Long, Long)]] =
+      try Some(files(path).sorted)
+      catch { case _: java.io.FileNotFoundException => None }
     leafMemo.synchronized {
       val it = leafMemo.entrySet().iterator()
       while (it.hasNext)
         if (it.next().getKey.sparkContext.isStopped) it.remove()
-    }
-    // Memoize ONLY the read-only corpus root (trailing slash: sibling
-    // dirs like /root/testdata_scratch must NOT match): a parquet read
-    // freezes its file listing (InMemoryFileIndex), so memoizing a dir
-    // that a probe or test later OVERWRITES would serve deleted part
-    // files. Synthetic probe corpora (/tmp) and test fixtures
-    // (target/) are exactly those dirs — always re-resolve them.
-    if (sfDir.stripSuffix("/").startsWith("/root/testdata/") ||
-        sfDir.stripSuffix("/") == "/root/testdata")
-      leafMemo.synchronized {
-        leafMemo.computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty)
-          .getOrElseUpdate((sfDir, name), read())
+      val memo = leafMemo.computeIfAbsent(spark,
+        _ => scala.collection.mutable.Map.empty)
+      val key = path.toString
+      val now = fingerprint()
+      memo.get(key) match {
+        case Some((seen, df)) if now.contains(seen) => df
+        case _ =>
+          memo.remove(key)
+          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+          val df = spark.read.parquet(s"$sfDir/$name.parquet")
+          now.foreach(fp => memo(key) = (fp, df))
+          df
       }
-    else read()
+    }
   }
 
   /** events with `ts_us`: epoch-µs BIGINT, type-dispatched over the two

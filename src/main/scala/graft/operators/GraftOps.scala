@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-import graft.plans.TopKPerGroupPlan
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
+  Descending, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import graft.plans.{TopKPerGroupPlan, UniqueOn}
 
 /** Public entry points for the library's whole-operator extensions
   * (custom LogicalPlan + SparkStrategy + SparkPlan — SURVEY §4 recipe c). */
@@ -22,12 +24,39 @@ object GraftOps {
     * first-k-per-group from the sorted run (the ObjectHashAggregateExec
     * discipline), so high group cardinality degrades to sort cost
     * instead of OOM. The `numSortFallbacks` SQL metric counts
-    * partitions that switched. */
+    * partitions that switched. A frame known unique on a subset of
+    * `groupCols` (Catalyst `distinctKeys`, e.g. after a groupBy on them,
+    * or declared by [[uniqueOn]]) holds one row per group, so it plans
+    * as itself: no exec, no exchange, no heap. */
   def topKPerGroup(df: DataFrame, groupCols: Seq[String],
       orderCols: Seq[(String, Boolean)], k: Int): DataFrame = {
     require(groupCols.nonEmpty,
       "groupCols must be non-empty (for a global top-k use orderBy().limit(k))")
     require(orderCols.nonEmpty, "orderCols must be non-empty")
+    withPlan(df) { (plan, attr) =>
+      TopKPerGroupPlan(
+        groupCols.map(attr),
+        orderCols.map { case (n, asc) =>
+          SortOrder(attr(n), if (asc) Ascending else Descending) },
+        k, plan)
+    }
+  }
+
+  /** `df` declared unique on `keyCols`: the same rows, planned as `df`,
+    * with the columns added to Catalyst's `distinctKeys`
+    * ([[graft.plans.UniqueOn]]). A [[topKPerGroup]] grouped by a superset
+    * of them then passes the frame straight through. The caller vouches
+    * for the claim; nothing checks it. */
+  def uniqueOn(df: DataFrame, keyCols: Seq[String]): DataFrame = {
+    require(keyCols.nonEmpty, "keyCols must be non-empty")
+    withPlan(df)((plan, attr) => UniqueOn(keyCols.map(attr), plan))
+  }
+
+  /** A frame over the node `wrap` builds around `df`'s analyzed plan,
+    * given a column resolver; installs the planner strategy that plans
+    * the library's nodes. */
+  private def withPlan(df: DataFrame)(
+      wrap: (LogicalPlan, String => Attribute) => LogicalPlan): DataFrame = {
     graft.GraftExtensions.installStrategies(df.sparkSession)
     val plan = GraftBridge.analyzed(df)
     // resolve with the session's resolver (honors spark.sql.caseSensitive)
@@ -41,12 +70,7 @@ object GraftOps {
         s"ambiguous column '$n' (${many.size} matches: " +
           s"${many.mkString(", ")}) — disambiguate upstream")
     }
-    GraftBridge.ofRows(df.sparkSession,
-      TopKPerGroupPlan(
-        groupCols.map(attr),
-        orderCols.map { case (n, asc) =>
-          SortOrder(attr(n), if (asc) Ascending else Descending) },
-        k, plan))
+    GraftBridge.ofRows(df.sparkSession, wrap(plan, attr))
   }
 
   /** Nearest-within-tolerance join (pandas merge_asof "nearest"): each

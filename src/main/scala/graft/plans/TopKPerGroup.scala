@@ -4,14 +4,15 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
-  BindReferences, Expression, RowOrdering, SortOrder, SortPrefix,
-  UnsafeProjection, UnsafeRow}
+  BindReferences, Expression, ExpressionSet, RowOrdering, SortOrder,
+  SortPrefix, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
   Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy,
   UnaryExecNode, UnsafeExternalRowSorter}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Whole-operator extension (SURVEY §4 recipe c — the rung below custom
@@ -40,6 +41,15 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * [[graft.sources.KeyedUpsertSink]] with k = 1, where the heap map is a
   * hash map of each key's best row and the pair replaces a two-sort
   * `row_number` window.
+  *
+  * Over a frame already unique on a subset of the group keys every group
+  * holds one row, so with k ≥ 1 the top-k is the frame itself:
+  * [[TopKStrategy]] then plans the child alone, with no exec, no exchange
+  * and no hash map. Uniqueness is Catalyst's `distinctKeys` (an
+  * aggregate's grouping keys, a `distinct`, …) or a [[UniqueOn]]
+  * declaration; [[graft.streaming.IngestPipeline]] declares its
+  * deduplicated micro-batches unique on `event_id`, so the upsert of each
+  * batch writes straight through.
   */
 case class TopKPerGroupPlan(
     groupExprs: Seq[Expression],
@@ -52,9 +62,33 @@ case class TopKPerGroupPlan(
     copy(child = newChild)
 }
 
+/** Logical marker: the caller declares the child's rows unique on `keys`
+  * (no two rows share a value of all of them, NULL counting as a value).
+  * It changes no row and plans as its child; it only adds `keys` to
+  * Catalyst's `distinctKeys`, which projections and filters above carry
+  * on. Built by [[graft.operators.GraftOps.uniqueOn]]. The claim is
+  * trusted, not checked: rules that read `distinctKeys` (this file's
+  * top-k elision, Spark's redundant-aggregate removal) drop work that a
+  * false claim needed. */
+case class UniqueOn(keys: Seq[Expression], child: LogicalPlan)
+    extends UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  // same switch as LogicalPlanDistinctKeys: off means no distinct keys
+  override lazy val distinctKeys: Set[ExpressionSet] =
+    if (conf.getConf(SQLConf.PROPAGATE_DISTINCT_KEYS_ENABLED))
+      child.distinctKeys + ExpressionSet(keys)
+    else Set.empty
+  override protected def withNewChildInternal(newChild: LogicalPlan): UniqueOn =
+    copy(child = newChild)
+}
+
 /** Planner strategy: logical TopKPerGroupPlan → partial + final execs.
   * EnsureRequirements inserts the hash exchange between them because the
   * final exec demands ClusteredDistribution while the partial does not.
+  * A child unique on a subset of the group keys plans alone (see
+  * [[TopKPerGroupPlan]]); uniqueness is judged on the raw group keys,
+  * the ones `distinctKeys` is stated in. A [[UniqueOn]] plans as its
+  * child.
   *
   * Group keys are float-normalized (-0.0→0.0, canonical NaN) the same
   * way Catalyst's NormalizeFloatingNumbers rule does for Aggregate/
@@ -63,10 +97,14 @@ case class TopKPerGroupPlan(
   * in distinct heap-map entries. */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case TopKPerGroupPlan(g, _, _, child)
+        if child.distinctKeys.exists(_.subsetOf(ExpressionSet(g))) =>
+      planLater(child) :: Nil
     case TopKPerGroupPlan(g, o, k, child) =>
       val ng = g.map(org.apache.spark.sql.GraftBridge.normalizeFloats)
       TopKPerGroupExec(ng, o, k, partial = false,
         TopKPerGroupExec(ng, o, k, partial = true, planLater(child))) :: Nil
+    case UniqueOn(_, child) => planLater(child) :: Nil
     case _ => Nil
   }
 }
@@ -99,8 +137,9 @@ case class TopKPerGroupExec(
   /** Memory bound and the escape hatch: the per-partition heap map holds
     * ≤ k rows per DISTINCT group key seen in that partition, on-heap —
     * right for the many-rows-per-group inputs most callers have. With
-    * unique keys (KeyedUpsertSink over a deduplicated feed) it retains
-    * every row until the cap below. If
+    * unique keys it retains every row until the cap below; a frame
+    * KNOWN unique never gets here (the strategy elides the pair), so
+    * that case is a unique-key batch write nobody declared. If
     * group cardinality per partition is high enough that the retained
     * rows exceed `spark.graft.topk.fallbackRows` (default 4M), the
     * partition switches to a spilling external sort on (group, order)

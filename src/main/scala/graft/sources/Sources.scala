@@ -166,14 +166,20 @@ final class CompactingParquetSink(root: String, targetBytes: Long)
   * exchange on the key carries at most one row per key per partition, and
   * a final hash map picks the survivor. No sort and no window.
   *
+  * A frame declared unique on the key columns (or on a subset of them —
+  * [[graft.operators.GraftOps.uniqueOn]], as
+  * [[graft.streaming.IngestPipeline]] declares each deduplicated batch)
+  * has nothing to resolve: it is written straight through, with no
+  * exchange and no hash map.
+  *
   * Memory: each hash map holds one copied row, one copied key and one
   * queue per distinct key of its partition, on the JVM heap and outside
   * Spark's memory manager — up to `spark.graft.topk.fallbackRows` rows
   * (default 4M) per task. Past that the partition switches to a spilling
-  * external sort. Unique-key inputs (a deduplicated feed) retain every
-  * row up to that cap, where the window's sort used managed, spillable
-  * memory from the first row; lower the cap for large unique-key batch
-  * writes on a small heap.
+  * external sort. Unique-key inputs nobody declared unique (a batch
+  * write of a deduplicated table) retain every row up to that cap, where
+  * the window's sort used managed, spillable memory from the first row;
+  * lower the cap for large unique-key batch writes on a small heap.
   * Unorderable payload columns (e.g. maps) do not take part in the
   * tie-break: duplicates differing only in those stay unspecified.
   */

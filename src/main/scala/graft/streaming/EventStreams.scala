@@ -22,10 +22,13 @@ object EventStreams {
       .parquet(dir)
       .withColumn("tstamp", timestamp_micros(col("ts_us")))
 
+  /** The column [[dedup]] keeps one row per. */
+  val DedupKey = "event_id"
+
   /** Streaming form of `stream_dedup`: exactly-once per event_id within
     * the watermark horizon. */
   def dedup(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("tstamp", watermark).dropDuplicates("event_id")
+    events.withWatermark("tstamp", watermark).dropDuplicates(DedupKey)
 
   /** Stream-stream interval join — view→purchase attribution within
     * `windowUs` per user. The SAME plan serves the batch `stream_join`

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.operators.GraftOps
 import graft.sources.Sink
 
 /** The reference system's end-to-end role, Spark-first: a continuously
@@ -21,11 +22,13 @@ import graft.sources.Sink
   *     Sink makes the replay idempotent (a torn first write is simply
   *     rewritten), exactly the Cassandra-upsert discipline;
   *  3. a [[graft.sources.KeyedUpsertSink]] keeps each key's
-  *     highest-version row within the batch. Keyed on `event_id`, the
-  *     dedup key, it never has to choose here: `dropDuplicates` has
-  *     already kept one row per `event_id`, so every row passes. The
-  *     resolution matters when the sink's key differs from the dedup
-  *     key (several events per key in one batch) and for batch writes.
+  *     highest-version row within the batch. `dropDuplicates` has
+  *     already kept one row per `event_id`, and each batch is declared
+  *     unique on it ([[graft.operators.GraftOps.uniqueOn]]), so a sink
+  *     keyed on `event_id` (or on any key set containing it) plans as a
+  *     write-through: no top-1, no exchange, no hash map. A sink keyed
+  *     on another column (several events per key in one batch) still
+  *     resolves with the hash top-1.
   * Upstream dropDuplicates guarantees a key appears in only one epoch
   * (within the watermark), so per-key exactly-once holds end-to-end.
   * Readers see the union via partition discovery (`batch` becomes a
@@ -43,7 +46,9 @@ object IngestPipeline {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink.write(batch.drop("tstamp"), s"$table/batch=$batchId")
+        sink.write(
+          GraftOps.uniqueOn(batch, Seq(EventStreams.DedupKey)).drop("tstamp"),
+          s"$table/batch=$batchId")
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -318,6 +318,131 @@ class SourceSinkSpec extends SparkTestBase {
     assert(banned.isEmpty, s"${banned.mkString(", ")} in:\n$plan")
   }
 
+  private def topKExecs(p: SparkPlan): Seq[String] =
+    planNodes(p).map(_.nodeName).filter(_.startsWith("TopKPerGroup"))
+  private def topKExecs(df: DataFrame): Seq[String] =
+    topKExecs(df.queryExecution.executedPlan)
+
+  test("topKPerGroup over a frame unique on the group keys plans as the " +
+    "frame, with the rows of the resolved plan") {
+    def frames() = {
+      val agg = spark.range(0, 2000, 1, 4)
+        .select((col("id") % 97).as("k"), (col("id") % 5).as("v"),
+          col("id").cast("string").as("p"))
+        .groupBy("k").agg(max("v").as("v"), min("p").as("p"))
+      Seq(Seq("k"), Seq("k", "v")).map(g => g ->
+        operators.GraftOps.topKPerGroup(agg, g, Seq("v" -> false), 1))
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    val elided = frames()
+    val key = "spark.sql.optimizer.propagateDistinctKeys.enabled"
+    spark.conf.set(key, "false")
+    // built under the switch: a plan node caches its distinct keys
+    val resolved = try frames().map { case (g, df) => g -> (rows(df), df) }
+      finally spark.conf.unset(key)
+    elided.zip(resolved).foreach { case ((g, on), (_, (want, off))) =>
+      assert(rows(on) == want && want.length == 97,
+        s"group ${g.mkString(",")}: elided rows differ from the resolved plan")
+      assert(topKExecs(on).isEmpty,
+        s"group ${g.mkString(",")}: top-k planned over a unique frame:\n" +
+          on.queryExecution.executedPlan)
+      assert(topKExecs(off).nonEmpty,
+        s"group ${g.mkString(",")}: elided with distinct keys switched off")
+    }
+  }
+
+  test("topKPerGroup over a frame unique only on a superset of the group " +
+    "keys still resolves") {
+    // unique on (k1, k2), grouped by k1: each k1 holds several rows
+    val df = spark.range(0, 2000, 1, 4)
+      .select((col("id") % 7).as("k1"), (col("id") % 5).as("k2"),
+        col("id").as("v"))
+      .groupBy("k1", "k2").agg(max("v").as("v"))
+    val out = upserted(df, Seq("k1"), "v")
+    val got = out.collect().map(_.toString).toSeq.sorted
+    assert(topKExecs(out).nonEmpty, "top-1 elided over a non-unique key")
+    assert(got.length == 7 &&
+      got == windowReference(df, Seq("k1"), "v").collect()
+        .map(_.toString).toSeq.sorted, s"wrong survivors: $got")
+  }
+
+  test("IngestPipeline's upsert on event_id writes each batch straight " +
+    "through: no top-1, no exchange") {
+    // two chronological chunks; the second re-sends 50 events of the
+    // first, so the dedup drops rows and the sink sees each id once
+    val dir = tmp()
+    val ev = graft.Tables.events(spark, sf).orderBy("ts_us")
+      .select("event_id", "ts_us", "user_id", "event_type", "value")
+      .collect()
+    val (h1, h2) = ev.splitAt(ev.length / 2)
+    val schema = StructType(Seq(StructField("event_id", LongType),
+      StructField("ts_us", LongType), StructField("user_id", LongType),
+      StructField("event_type", StringType), StructField("value", DoubleType)))
+    Seq(h1.toSeq, h2.toSeq ++ h1.takeRight(50)).zipWithIndex.foreach {
+      case (rs, i) =>
+        val f = new java.io.File(dir, s"chunk$i")
+        batchFrame(rs, schema, 1).write.parquet(f.toString)
+        val ts = System.currentTimeMillis() - 60000 + i * 2000L
+        f.listFiles().foreach(_.setLastModified(ts))
+    }
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Seq[Long], SparkPlan)]
+    val capture = new Sink {
+      override def write(df: DataFrame, table: String): Unit = {
+        val ids = df.collect().map(_.getAs[Long]("event_id")).toSeq
+        seen.synchronized { seen += ids -> df.queryExecution.executedPlan }
+      }
+    }
+    val q = graft.streaming.IngestPipeline.start(
+      graft.streaming.EventStreams.readEvents(spark, s"$dir/*", schema),
+      new KeyedUpsertSink(capture, Seq("event_id"), "ts_us"), "events_raw",
+      s"${tmp()}/ckpt")
+    q.awaitTermination(120000)
+    q.exception.foreach(e => throw e)
+    // one batch per chunk, plus any no-data batch the watermark runs
+    assert(seen.count(_._1.nonEmpty) == 2, s"${seen.size} batches")
+    seen.foreach { case (_, plan) =>
+      assert(topKExecs(plan).isEmpty && !planNodes(plan).exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]),
+        s"batch write resolved instead of writing through:\n$plan")
+    }
+    val ids = seen.flatMap(_._1)
+    assert(ids.length == ids.distinct.length, "an event_id landed twice")
+    assert(ids.toSet == ev.map(_.getLong(0)).toSet, "events lost")
+  }
+
+  test("Tables.t memoizes any directory until its files change") {
+    val root = tmp()
+    def write(n: Int): Unit = spark.range(n).toDF("x").write
+      .mode("overwrite").parquet(s"$root/t.parquet")
+    val sc = spark.sparkContext
+    def jobs(group: String)(body: => Any): Unit = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    write(10)
+    val first = graft.Tables.t(spark, root, "t")
+    var second: DataFrame = null
+    jobs("memo-hit") { second = graft.Tables.t(spark, root, "t") }
+    // the status store applies job events in order: once the fence job
+    // shows, any job of the lookup before it shows too
+    jobs("memo-fence") { sc.parallelize(1 to 1, 1).count() }
+    val deadline = System.currentTimeMillis() + 10000
+    while (sc.statusTracker.getJobIdsForGroup("memo-fence").isEmpty &&
+      System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup("memo-fence").nonEmpty)
+    assert(second eq first, "an unchanged directory was read again")
+    assert(sc.statusTracker.getJobIdsForGroup("memo-hit").isEmpty,
+      "the memoized lookup ran a job")
+    write(20)
+    val third = graft.Tables.t(spark, root, "t")
+    assert(!(third eq first) && third.count() == 20,
+      "a rewritten directory was served from the memo")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val gone = intercept[org.apache.spark.sql.AnalysisException](
+      graft.Tables.t(spark, root, "t"))
+    assert(gone.getMessage.contains("t.parquet"), gone.getMessage)
+  }
+
   test("PartitionedParquetSink lays out partition directories") {
     val root = tmp()
     new PartitionedParquetSink(root, Seq("l_returnflag")).write(li, "li")

@@ -4,7 +4,7 @@
     python3 tools/ab.py --workload ingest-stream --pairs 10 --seed0 1001
                         [--base HEAD] [--change WORKTREE]
                         [--traced] [--workdir DIR]
-    python3 tools/ab.py --keys k1,k2 [--data DIR]
+    python3 tools/ab.py --keys k1,k2 [--data DIR] [--repeat N]
                         [--base HEAD] [--change WORKTREE] [--workdir DIR]
 
 Each side is copied into its own directory under --workdir (default: a new
@@ -29,15 +29,18 @@ per-layer counts next to each other, plus the codegen compiles of each
 replay where the workload streams. The whole record goes to
 <workdir>/ab.json. Exit code 1 if any run failed or was not correct.
 
-With --keys, both copies are built the same way and each side runs ONE
-`graft.perfbench.Main mode=queries ... trace=1` JVM over the named
-`SparkEntry.queries` keys on the corpus in --data (default
-/root/testdata/sf0.1), on the classpath that perfbench/run.py's build
-produces inside that copy. For every key it prints the traced try's
-counts of both sides next to each other, marking each count that
-differs; it prints no verdict. The raw records go to
-<workdir>/<side>-keys/raw.json. Exit code 1 if any try of either side
-failed.
+With --keys, both copies are built the same way and each side runs N
+(--repeat, default 1) `graft.perfbench.Main mode=queries ... trace=1`
+JVMs over the named `SparkEntry.queries` keys on the corpus in --data
+(default: the sf0.1 testdata corpus), on the classpath that
+perfbench/run.py's build produces inside that copy; the sides alternate, and which side
+runs first alternates from round to round. For every key and count it
+prints the set of values each side's traced tries showed, marking with
+`*` each count whose two sets differ and with `?` each count whose base
+values did not repeat (a count that moves between runs of one build is
+no evidence of a change); it prints no verdict. The raw records go to
+<workdir>/<side>-keys-<round>/raw.json. Exit code 1 if any try of
+either side failed.
 """
 import argparse
 import json
@@ -152,31 +155,46 @@ def key_failures(raw, keys):
     return bad
 
 
+def shown(vals):
+    """The distinct values of one count over a side's runs, as text."""
+    return ",".join("-" if v is None else f"{v:.0f}"
+                    for v in sorted(set(vals), key=lambda v: (v is None, v)))
+
+
 def compare_keys(a, sides, workdir):
     keys = a.keys.split(",")
     data = os.path.abspath(a.data)
-    raws = {}
-    for side in ("base", "change"):
-        raws[side] = run_keys(sides[side]["dir"],
-                              os.path.join(workdir, f"{side}-keys"), data,
-                              keys)
+    raws = {"base": [], "change": []}
+    for i in range(a.repeat):
+        order = ("base", "change") if i % 2 == 0 else ("change", "base")
+        for side in order:
+            raws[side].append(run_keys(
+                sides[side]["dir"],
+                os.path.join(workdir, f"{side}-keys-{i + 1}"), data, keys))
     print(f"\nkeys on {data}: base {sides['base']['label']}, "
-          f"change {sides['change']['label']} (one traced try each)")
-    print(f"{'key':26s} {'count':20s} {'base':>14s} {'change':>14s}")
+          f"change {sides['change']['label']} ({a.repeat} traced "
+          f"JVM{'s' if a.repeat > 1 else ''} each; values each side showed; "
+          f"* sides differ, ? base did not repeat)")
+    print(f"{'key':26s} {'count':20s} {'base':>20s} {'change':>20s}")
     for k in keys:
         for i, m in enumerate(KEY_COUNTS):
-            vals = [((raws[s] or {}).get("traced") or {}).get("keys", {})
-                    .get(k, {}).get(m) for s in ("base", "change")]
-            shown = [f"{v:.0f}" if isinstance(v, (int, float)) else "-"
-                     for v in vals]
-            mark = "  *" if vals[0] != vals[1] else ""
-            print(f"{k if i == 0 else '':26s} {m:20s} {shown[0]:>14s} "
-                  f"{shown[1]:>14s}{mark}")
+            vals = {s: [((r or {}).get("traced") or {}).get("keys", {})
+                        .get(k, {}).get(m) for r in raws[s]]
+                    for s in ("base", "change")}
+            mark = ""
+            if set(vals["base"]) != set(vals["change"]):
+                mark += " *"
+            if len(set(vals["base"])) > 1:
+                mark += " ?"
+            print(f"{k if i == 0 else '':26s} {m:20s} "
+                  f"{shown(vals['base']):>20s} "
+                  f"{shown(vals['change']):>20s}{mark}")
     ok = True
     for side in ("base", "change"):
-        for line in key_failures(raws[side], keys):
-            ok = False
-            print(f"{side} FAILED {line}")
+        for n, raw in enumerate(raws[side], 1):
+            for line in key_failures(raw, keys):
+                ok = False
+                print(f"{side} run {n} FAILED {line}")
     return ok
 
 
@@ -229,6 +247,8 @@ def main():
     ap.add_argument("--data", default="/root/testdata/sf0.1",
                     help="corpus of --keys (default /root/testdata/sf0.1)")
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--repeat", type=int, default=1,
+                    help="--keys: traced JVMs per side (default 1)")
     ap.add_argument("--seed0", type=int)
     ap.add_argument("--base", default="HEAD",
                     help="git revision, or WORKTREE (default HEAD)")
@@ -240,6 +260,8 @@ def main():
     a = ap.parse_args()
     if a.workload and a.seed0 is None:
         ap.error("--workload needs --seed0")
+    if a.repeat < 1:
+        ap.error("--repeat must be at least 1")
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
