@@ -45,6 +45,9 @@ object TextSimOps {
     * threshold can drift from the keys'. */
   private[graft] val TauPct = 90
 
+  /** A `documents` row's words, one row each as `w` (the oracles' split). */
+  private def words: Column = explode(split(col("text"), " ")).as("w")
+
   /** Fixed-order double dot product of two float array columns — the
     * codegen'd [[graft.functions.DotProductF32]] (identical semantics to
     * aggregate(zip_with(...)) but inside whole-stage codegen). */
@@ -80,12 +83,11 @@ object TextSimOps {
     * books), so the array column is cheap to carry, and the table is
     * document-count-sized — dimension-like at the graded scales.
     *
-    * Derived from the existing [[docRanked]] table instead of another
-    * tokenize pass: ranked rows are distinct (doc_id, token) and the
-    * window left them hash-partitioned by doc_id, so this groupBy plans
-    * with NO new exchange, and the ranked subtree is shared with the
-    * candidate stage via exchange reuse (one tokenize + one window feed
-    * candidates AND verification).
+    * Derived from [[TokenSets.ranked]] instead of another tokenize
+    * pass: ranked rows are distinct (doc_id, token) and the window left
+    * them hash-partitioned by doc_id, so this groupBy plans with NO new
+    * exchange, and it reads the same pinned blocks as the candidate
+    * stage (one tokenize + one window feed candidates AND verification).
     *
     * The attach joins carry NO hard broadcast hint: the table ends in an
     * aggregation, so AQE observes its actual materialized size and
@@ -103,8 +105,54 @@ object TextSimOps {
     * returns [[Masks]] or [[Postings]], and each operator plans its
     * arm from that. `tok` is the pinned distinct (doc_id, w) rows of
     * `documents` — both arms carry it because the MinHash arm folds its
-    * signature over it either way. */
-  private[graft] sealed trait TokenSets { def tok: DataFrame }
+    * signature over it either way. `dfreq` is their (w, df) document
+    * frequency table, the aggregate the ≤62-token gate counts; both
+    * arms order tokens by it ([[Masks.dict]], [[ranked]]). */
+  private[graft] sealed trait TokenSets {
+    def tok: DataFrame
+    def dfreq: DataFrame
+
+    /** Posting rows (doc_id, w, rnk, c, bm0, bm1) — each distinct (doc,
+      * token) with its rank in the global (df, w) order, the doc's token
+      * count and token bitmap: the postings arm's prefix-filter
+      * substrate, from `tok` and `dfreq` (no second tokenize). One
+      * shuffle, the doc_id window. NO hard broadcast hint: AQE
+      * broadcasts the df table when it is small (PlanSpec asserts it)
+      * and keeps the shuffle join on an open vocabulary.
+      *
+      * Pinned: it feeds THREE consumers (x prefix, y prefix or postings,
+      * verify arrays), and exchange reuse across those branches is a
+      * lottery (see the clusterCC design note). localCheckpoint keeps
+      * the blocks executor-local, so on a cluster a lost executor fails
+      * the job instead of recomputing them (clusterCC's contract, fine
+      * for a pin this small and cheap to rebuild on retry);
+      * `spark.graft.checkpointDir` makes the pin a reliable checkpoint. */
+    lazy val ranked: DataFrame = {
+      def bucketBits(lo: Int): Column = expr("bit_or(CASE WHEN " +
+        s"pmod(xxhash64(w), 128) BETWEEN $lo AND ${lo + 63} THEN shiftleft(" +
+        s"1L, CAST(pmod(xxhash64(w), 128) - $lo AS INT)) ELSE 0L END)")
+      val ord = Window.partitionBy("doc_id").orderBy("df", "w")
+      val full = ord.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      tok.join(dfreq, "w")
+        .withColumn("rnk", row_number().over(ord))
+        .withColumn("c", count(lit(1)).over(full).cast("int"))
+        // 128-bucket token bitmap in two BIGINTs (bucket = pmod(xxhash64(w),
+        // 128); bm0 holds buckets 0-63, bm1 64-127), the exact-prune
+        // substrate: intersection tokens share a bucket bit, so
+        // popcount(bm_x & ~bm_y) LOWER-bounds the x-tokens missing from y —
+        // an exact per-pair upper bound on |x∩y| for two AND+POPCNTs per
+        // matched row. 128 buckets, not 64: docs carry 40-80 distinct
+        // tokens, and at 64 bits the y side is ~70% dense and the bound
+        // blunt; at 128 it is ~45% dense and cuts ~2× more (measured at
+        // dfce344). Same window as rnk/c: no extra shuffle.
+        .withColumn("bm0", bucketBits(0).over(full))
+        .withColumn("bm1", bucketBits(64).over(full))
+        .select(col("doc_id"), col("w"), col("rnk"), col("c"),
+          col("bm0"), col("bm1"))
+        .pinned
+    }
+  }
 
   /** Exact-bitset representation: the corpus' distinct token vocabulary
     * fits one 64-bit word (≤ 62 tokens), so each document's token SET
@@ -131,8 +179,11 @@ object TextSimOps {
     * PlanSpec. [[minhashCandAndPairs]] joins it straight onto `tok` to
     * fuse the mask build into the SAME groupBy that computes the MinHash
     * signature, so it never builds [[docs]]. */
-  private[graft] final class Masks(val tok: DataFrame, val dict: DataFrame)
+  private[graft] final class Masks(val tok: DataFrame, val dfreq: DataFrame)
       extends TokenSets {
+    val dict: DataFrame = dfreq.select(col("w"),
+      (row_number().over(Window.orderBy("df", "w")) - 1).as("grank"))
+
     /** (doc_id, m: BIGINT mask, c = bit_count(m)) — one row per
       * document, pinned: every caller reads it twice (pair join plus
       * expansion, or the two sides of the delta join). */
@@ -153,29 +204,33 @@ object TextSimOps {
   }
 
   /** Vocabulary over 62 tokens: the open-vocabulary prefix-filter
-    * postings path ([[docRanked]]). */
-  private[graft] final class Postings(val tok: DataFrame) extends TokenSets
+    * postings path ([[TokenSets.ranked]]). */
+  private[graft] final class Postings(val tok: DataFrame,
+      val dfreq: DataFrame) extends TokenSets
 
-  /** Tokenizes `documents` once, pins the distinct (doc_id, w) rows and
-    * picks the representation — the adaptive dispatch, AQE-style: one
-    * vocabulary-sized gate job (the token dictionary is computed for the
-    * general path's df order anyway). Closed dictionaries (tags, SKUs,
-    * enum vocabularies) stay closed at any corpus size, so the gate is
-    * corpus-size-independent; open-vocabulary text overflows 62 tokens
-    * immediately and takes the postings path. The graded corpus is a
-    * 31-token dictionary (measured), i.e. the mask path at every SF;
-    * tests reach the postings path on the same corpus by adding one
-    * document of 63 fresh tokens, and RewriteEquivalenceSpec fuzzes
-    * both paths against brute force.
+  /** Tokenizes `documents` (the pair family's only tokenize), pins the
+    * distinct (doc_id, w) rows and picks the representation — the
+    * adaptive dispatch, AQE-style: one vocabulary-sized gate job over
+    * the df table that both arms order tokens by anyway. Closed
+    * dictionaries (tags, SKUs, enum vocabularies) stay closed at any
+    * corpus size, so the gate is corpus-size-independent;
+    * open-vocabulary text overflows 62 tokens immediately and takes the
+    * postings path. The graded corpus is a 31-token dictionary
+    * (measured), i.e. the mask path at every SF; tests reach the
+    * postings path on the same corpus by adding one document of 63
+    * fresh tokens, and RewriteEquivalenceSpec fuzzes both paths against
+    * brute force. Call it once per operator and pass the result down:
+    * every call is another gate job and another pin.
     *
-    * The distinct (doc, token) subtree feeds THREE executions otherwise
-    * — the gate count, the dictionary aggregate, and the mask build —
-    * and Spark shares no work across separate actions. Pinning it once
-    * is a wash at sf0.1 (A/B via Bench reps=3: 15.96 s vs 16.24 s over
-    * the 5 pair-family keys — job latency dominates at local scale) but
-    * saves TWO full corpus tokenize+shuffle passes per operator at real
-    * scale, where the corpus scan is the cost. The pin is the smallest
-    * frame in the pipeline.
+    * The distinct (doc, token) subtree feeds TWO executions otherwise —
+    * the gate count, then the arm's plan, which reads it twice (the df
+    * aggregate and the rows it masks or ranks) — and Spark shares no
+    * work across separate actions. Pinning it once is a wash at sf0.1
+    * (A/B via Bench reps=3: 15.96 s vs 16.24 s over the 5 pair-family
+    * keys — job latency dominates at local scale) but saves up to TWO
+    * corpus tokenize+shuffle passes per operator at real scale, where the
+    * corpus scan is the cost. The pin is the smallest frame in the
+    * pipeline.
     *
     * Pin retention: localCheckpoint blocks persist until the
     * checkpointed RDD is GC'd and reaped by the ContextCleaner — there is
@@ -187,14 +242,12 @@ object TextSimOps {
     * to DFS instead and is cleaned by
     * `spark.cleaner.referenceTracking.cleanCheckpoints`. */
   private[graft] def tokenSets(s: SparkSession, d: String): TokenSets = {
-    val tok = t(s, d, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+    val tok = t(s, d, "documents").select(col("doc_id"), words)
       .distinct()
       .pinned
     val dfreq = tok.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    if (dfreq.limit(63).count() > 62) new Postings(tok)
-    else new Masks(tok, dfreq.select(col("w"),
-      (row_number().over(Window.orderBy("df", "w")) - 1).as("grank")))
+    if (dfreq.limit(63).count() > 62) new Postings(tok, dfreq)
+    else new Masks(tok, dfreq)
   }
 
   /** Posting rows regenerated from the masks themselves — bit g of `m`
@@ -376,49 +429,6 @@ object TextSimOps {
       .sortWithinPartitions("da", "db")
   }
 
-  /** Full posting rows (doc_id, token, per-doc rank in the global
-    * (df, w) order, doc token count) — the substrate of prefix
-    * filtering. One shuffle (by doc_id, the window); the df dictionary
-    * is vocabulary-sized (a (token, count) table). NO hard broadcast
-    * hint: AQE converts the join to broadcast-hash at runtime when the
-    * materialized dictionary is small (it is, at every graded SF —
-    * PlanSpec asserts the conversion) and keeps the shuffle join on an
-    * open-vocabulary corpus where a forced broadcast would OOM the
-    * driver. */
-  private def docRanked(s: SparkSession, d: String): DataFrame = {
-    val tok = t(s, d, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .distinct()
-    val dfreq = tok.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val ord = Window.partitionBy("doc_id").orderBy("df", "w")
-    val full = ord.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    tok.join(dfreq, "w")
-      .withColumn("rnk", row_number().over(ord))
-      .withColumn("c", count(lit(1)).over(full).cast("int"))
-      // 128-bucket token bitmap in two BIGINTs (bucket =
-      // pmod(xxhash64(w), 128); bm0 holds buckets 0-63, bm1 64-127) —
-      // the exact-prune substrate (r9 item 9): intersection tokens
-      // share a bucket bit, so popcount(bm_x & ~bm_y) LOWER-bounds the
-      // x-tokens missing from y, giving the candidate joins an exact
-      // per-pair upper bound on |x∩y| for two AND+POPCNTs per matched
-      // row. 128 buckets (not 64) because corpus docs carry 40-80
-      // distinct tokens: at 64 bits the y-side density is ~70% and the
-      // bound goes blunt; at 128 it stays ~45% dense and cuts ~2× more
-      // (measured at dfce344). Same window partition as rnk/c → no
-      // extra shuffle, two BIGINTs wider.
-      .withColumn("bm0", expr(
-        "bit_or(CASE WHEN pmod(xxhash64(w), 128) < 64 THEN " +
-          "shiftleft(CAST(1 AS BIGINT), " +
-          "CAST(pmod(xxhash64(w), 128) AS INT)) ELSE 0L END)").over(full))
-      .withColumn("bm1", expr(
-        "bit_or(CASE WHEN pmod(xxhash64(w), 128) >= 64 THEN " +
-          "shiftleft(CAST(1 AS BIGINT), " +
-          "CAST(pmod(xxhash64(w), 128) - 64 AS INT)) ELSE 0L END)").over(full))
-      .select(col("doc_id"), col("w"), col("rnk"), col("c"),
-        col("bm0"), col("bm1"))
-  }
-
   /** Exact word-level Jaccard pairs at τ = tauPct/100 — identical output
     * to the all-pairs formulation, computed as PREFIX FILTERING
     * (Chaudhuri's SSJoin primitive / Bayardo's All-Pairs): candidates
@@ -466,30 +476,22 @@ object TextSimOps {
     * the r4 suite). Duplicate candidate rows verify to byte-identical
     * output rows, so the trailing distinct is exact. */
   private[graft] def exactWordPairs(s: SparkSession, d: String,
-      tauPct: Int): DataFrame = {
-    // Adaptive representation dispatch (see tokenSets): a
-    // dictionary-fitting corpus takes the exact-bitset path — identical
-    // output, no verify/dedup stages at all. The candidate join runs
-    // over the mask quotient (distinct token SETS only, see maskUniq);
-    // doc pairs regenerate by output-sized member expansion.
-    tokenSets(s, d) match {
+      tauPct: Int): DataFrame = exactWordPairsOf(tokenSets(s, d), tauPct)
+
+  /** [[exactWordPairs]] over a built [[TokenSets]]: the postings
+    * fallbacks of [[deltaJaccardPairs]] and [[connectivityPairs]] pass
+    * theirs here instead of tokenizing again. */
+  private def exactWordPairsOf(ts: TokenSets, tauPct: Int): DataFrame = {
+    // A dictionary-fitting corpus takes the exact-bitset path —
+    // identical output, no verify/dedup stages at all. The candidate
+    // join runs over the mask quotient (distinct token SETS only, see
+    // maskUniq); doc pairs regenerate by output-sized member expansion.
+    val ranked = ts match {
       case m: Masks =>
         val (uniq, grp) = m.quotient
         return expandJaccard(bitsetJaccardPairs(uniq, tauPct), grp)
-      case _: Postings => ()
+      case p: Postings => p.ranked
     }
-    // ranked feeds THREE consumers (x prefix, y prefix, verify arrays);
-    // exchange/stage reuse across those branches is a lottery (see the
-    // clusterCC design note), so pin the small posting table (one row
-    // per distinct (doc, token)) once, GraphX-style. Tradeoff:
-    // localCheckpoint truncates lineage into EXECUTOR-LOCAL block
-    // storage, so on a real cluster a lost executor fails the job
-    // instead of recomputing the postings — the same contract clusterCC
-    // documents for its per-round pins. Acceptable because the pin is
-    // small and cheap to rebuild on retry; a fault-tolerance-first
-    // deployment would swap in reliable checkpoint() at the cost of a
-    // distributed-FS write per run.
-    val ranked = docRanked(s, d).pinned
     val pfx = ranked
       .where(col("rnk") <= col("c") - expr(s"($tauPct * c + 99) div 100") + 1)
     val x = pfx.select(col("doc_id").as("da"), col("w"),
@@ -498,7 +500,7 @@ object TextSimOps {
     val y = pfx.select(col("doc_id").as("db"), col("w").as("wy"),
       col("rnk").as("rb"), col("c").as("cb"),
       col("bm0").as("bb0"), col("bm1").as("bb1"))
-    // Bitmap prune (exact; see docRanked.bm0/bm1): o ≤ ca −
+    // Bitmap prune (exact; see TokenSets.ranked's bm0/bm1): o ≤ ca −
     // popcount(ba&~bb) and o ≤ cb − popcount(bb&~ba); J ≥ τ forces
     // o·(100+τ) ≥ τ·(ca+cb), so either violated bound kills the
     // matched row before emission.
@@ -546,8 +548,9 @@ object TextSimOps {
     * all-corpus full postings, the asymmetric-prefix completeness
     * lemma; each pair emitted once), Θ(N·Δ) per ingest. The general
     * (open-vocabulary) fallback keeps identical semantics via an
-    * endpoint filter over [[exactWordPairs]]; both plans are proven
-    * byte-equal and fuzzed vs brute force in RewriteEquivalenceSpec. */
+    * endpoint filter over [[exactWordPairsOf]] on the same token sets;
+    * both plans are proven byte-equal and fuzzed vs brute force in
+    * RewriteEquivalenceSpec. */
   private[graft] def deltaJaccardPairs(s: SparkSession, d: String,
       tauPct: Int, isDelta: Column => Column): DataFrame = {
     tokenSets(s, d) match {
@@ -570,8 +573,8 @@ object TextSimOps {
             greatest(col("xa"), col("xb")).as("db"),
             expr("bit_count(ma & mb)").as("inter"),
             expr("ca + cb - bit_count(ma & mb)").as("uni"))
-      case _: Postings =>
-        exactWordPairs(s, d, tauPct)
+      case p: Postings =>
+        exactWordPairsOf(p, tauPct)
           .where(isDelta(col("da")) || isDelta(col("db")))
     }
   }
@@ -766,15 +769,11 @@ object TextSimOps {
   private[graft] val CcRounds = 4
 
   /** Class-banded containment candidate pairs (da, db) at τ = tauPct/100
-    * — duplicates possible (one row per class-meeting prefix token); see
-    * the `sim_containment_pairs` design note. Exposed so InvariantSpec
-    * can assert the candidate set is a superset of the qualifying
-    * pairs. */
-  private[graft] def containmentCandidates(s: SparkSession, d: String,
-      tauPct: Int): DataFrame =
-    containmentCandidatesFrom(docRanked(s, d), tauPct)
-
-  private def containmentCandidatesFrom(ranked: DataFrame,
+    * over [[TokenSets.ranked]] — duplicates possible (one row per
+    * class-meeting prefix token); see the `sim_containment_pairs` design
+    * note. InvariantSpec asserts the candidate set is a superset of the
+    * qualifying pairs. */
+  private[graft] def containmentCandidates(ranked: DataFrame,
       tauPct: Int): DataFrame = {
     val x = ranked
       .where(col("rnk") <= col("c") - expr(s"($tauPct * c + 99) div 100") + 1)
@@ -788,7 +787,7 @@ object TextSimOps {
         (length(bin(expr(s"(c - rnk + 1) * 100 div $tauPct"))) - 1)
           .cast("int"))).as("ky"),
       col("bm0").as("bb0"), col("bm1").as("bb1"))
-    // Bitmap prune (exact; see docRanked.bm0/bm1): containment only
+    // Bitmap prune (exact; see TokenSets.ranked's bm0/bm1): containment only
     // bounds x's missing tokens — o ≤ ca − popcount(ba & ~bb), and
     // C ≥ τ needs o·100 ≥ τ·ca. One-sided, two AND+POPCNTs per matched
     // row; r6 measured 20.7 M candidate rows surviving the positional
@@ -816,7 +815,7 @@ object TextSimOps {
     * while |edges| drops from Σ n_a·n_b to |rep pairs| + |docs|. CC
     * round cost then scales with DISTINCT token sets, not corpus
     * near-dup density. General (open-vocabulary) path: the full pair
-    * set, unchanged. */
+    * set of [[exactWordPairsOf]] on the same token sets. */
   private def connectivityPairs(s: SparkSession, d: String,
       tauPct: Int): DataFrame = {
     tokenSets(s, d) match {
@@ -826,8 +825,8 @@ object TextSimOps {
           .select(col("doc_id").as("da"), col("rep").as("db"))
         bitsetJaccardPairs(uniq, tauPct)
           .select(col("da"), col("db")).union(memb)
-      case _: Postings =>
-        exactWordPairs(s, d, tauPct).select(col("da"), col("db"))
+      case p: Postings =>
+        exactWordPairsOf(p, tauPct).select(col("da"), col("db"))
     }
   }
 
@@ -891,7 +890,7 @@ object TextSimOps {
   val queries: Map[String, QFn] = Map(
     "text_tokenize" -> ((s: SparkSession, d: String) =>
       t(s, d, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
+        .select(words)
         .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("w")).limit(100)),
 
@@ -937,9 +936,10 @@ object TextSimOps {
     // both bitset joins rest on), and each pair is emitted exactly
     // once: delta×base at its delta endpoint, delta×delta at the
     // smaller id. Exact threshold + first-shared-token uniqueness
-    // evaluate inline as in bitsetJaccardPairs. The general-path
-    // fallback keeps the semantics (endpoint filter over the full
-    // exact pair join) — correct everywhere, incremental only on the
+    // evaluate inline as in bitsetJaccardPairs. The postings fallback
+    // keeps the semantics: it filters the same exactWordPairsOf pairs
+    // that sim_jaccard_pairs computes, by endpoint, over the token sets
+    // it already built — correct everywhere, incremental only on the
     // bitset path.
     "pipe_delta_dedup" -> ((s: SparkSession, d: String) =>
       // pinned pre-sort: the sort's bound sampling would re-run the
@@ -969,7 +969,7 @@ object TextSimOps {
     // assumed.
     "sim_edit_neighbors" -> ((s: SparkSession, d: String) => {
       val docs = t(s, d, "documents")
-      val dict = docs.select(explode(split(col("text"), " ")).as("w"))
+      val dict = docs.select(words)
         .distinct()
       val typos = docs.where(pmod(col("doc_id"), lit(3)) === 0)
         .select(col("doc_id"), split(col("text"), " ").getItem(0).as("tw"))
@@ -1019,17 +1019,11 @@ object TextSimOps {
           // pre-expansion intermediate, not the 4.6 M-row output
           val (uniq, grp) = m.quotient
           expandContainmentSorted(bitsetContainmentPairs(uniq, tau), grp)
-        case _: Postings =>
-          // pinned once for the same three-consumer reason as
-          // exactWordPairs
-          val ranked = docRanked(s, d).pinned
-          val dt = docTokensFrom(ranked)
+        case p: Postings =>
+          val dt = docTokensFrom(p.ranked)
           // candidate dedup BEFORE the verify attach, post-verify
-          // distinct dropped — same r10 re-measurement as exactWordPairs
-          // (the dense regenerated corpus flipped r5's verify-first
-          // call): sf0.1 A/B 14.5 s dedup-first vs 17-25 s verify-first
-          // (measured at dfce344).
-          containmentCandidatesFrom(ranked, tau).distinct()
+          // distinct dropped: the trade measured in exactWordPairsOf
+          containmentCandidates(p.ranked, tau).distinct()
             .join(dt.select(col("doc_id").as("da"), col("wh").as("wa"),
               col("c").as("ca")), "da")
             .join(dt.select(col("doc_id").as("db"), col("wh").as("wb")),

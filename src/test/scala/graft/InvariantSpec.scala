@@ -400,7 +400,8 @@ class InvariantSpec extends SparkTestBase {
     // pre-verify candidate stream (recall-1 for the banding, independent
     // of the verify filter; RewriteEquivalenceSpec checks end-to-end
     // equality on random corpora, this pins the stage contract itself)
-    val cands = operators.TextSimOps.containmentCandidates(spark, sf, 95)
+    val cands = operators.TextSimOps.containmentCandidates(
+      operators.TextSimOps.tokenSets(spark, sf).ranked, 95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val out = SparkEntry.queries("sim_containment_pairs")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

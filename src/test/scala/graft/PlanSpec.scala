@@ -497,6 +497,38 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("the postings arm tokenizes once: pipe_delta_dedup runs as many " +
+    "jobs as sim_jaccard_pairs") {
+    // On the postings arm the two keys differ only by the delta
+    // endpoint filter over the same exact pair frame, so a second
+    // tokenSets call (one more gate job and pin) or a second tokenize
+    // of documents shows as extra jobs of pipe_delta_dedup.
+    val (padded, _) = PaddedCorpus.of(spark, sf)
+    // also warms the Tables.t memo, so neither key reads the listing
+    assert(PaddedCorpus.arm(spark, padded) == "postings",
+      "the padded corpus did not take the postings arm")
+    val sc = spark.sparkContext
+    def jobs(k: String): Int = {
+      sc.setJobGroup(k, k)
+      try SparkEntry.queries(k)(spark, padded).collect()
+      finally sc.clearJobGroup()
+      // the status store applies job events in order: once the fence
+      // job shows, every job of the key before it shows too
+      val fence = s"$k-fence"
+      sc.setJobGroup(fence, fence)
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(sc.statusTracker.getJobIdsForGroup(fence).nonEmpty)
+      sc.statusTracker.getJobIdsForGroup(k).length
+    }
+    val jac = jobs("sim_jaccard_pairs")
+    val delta = jobs("pipe_delta_dedup")
+    assert(delta == jac, s"pipe_delta_dedup ran $delta jobs, " +
+      s"sim_jaccard_pairs $jac: the delta fallback tokenized again")
+  }
+
   test("knn_per_label bounds the pair shuffle via TopKPerGroup execs") {
     val p = plan("knn_per_label")
     assert(p.contains("TopKPerGroupPartial") && p.contains("TopKPerGroupFinal"),

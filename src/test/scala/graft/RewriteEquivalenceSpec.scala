@@ -94,6 +94,29 @@ class RewriteEquivalenceSpec extends SparkTestBase {
       assert(gotD == wantD,
         s"delta trial $trial: missing=${(wantD -- gotD).take(5)} " +
           s"extra=${(gotD -- wantD).take(5)}")
+      // same corpus, CC clustering: the components of the brute-force
+      // pair graph (want is that graph: the key's TauPct is this test's
+      // 90), each doc labelled by its component's min doc_id — the mask
+      // quotient on vocab 15, the postings arm of connectivityPairs on
+      // 80/400. Union-find whose root is always its set's min id.
+      assert(operators.TextSimOps.TauPct == 90)
+      val root = scala.collection.mutable.Map[Long, Long]()
+      def find(v: Long): Long = root.get(v) match {
+        case Some(p) if p != v => val r = find(p); root(v) = r; r
+        case _ => v
+      }
+      want.foreach { case (a, b, _, _) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) root(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val wantCC = docs.map { case (id, _) => (id, find(id)) }.toSet
+      val gotCC = SparkEntry.queries("dedup_cluster_cc")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(gotCC == wantCC,
+        s"cc trial $trial: missing=${(wantCC -- gotCC).take(5)} " +
+          s"extra=${(gotCC -- wantCC).take(5)}")
+      assert(wantCC.exists { case (id, c) => id != c },
+        s"cc trial $trial degenerate (no multi-doc cluster)")
       // facade generality: an arbitrary (non-modular) delta predicate
       val gotR = operators.GraftOps
         .deltaJaccardPairs(spark, dir, 90, c => c < 50)
