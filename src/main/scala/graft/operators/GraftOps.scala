@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
-  Descending, SortOrder}
+  Descending, RowOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import graft.plans.{TopKPerGroupPlan, UniqueOn}
 
@@ -18,13 +18,13 @@ object GraftOps {
     *
     * Memory bound: each pass holds one ≤k-row heap PER DISTINCT GROUP
     * seen in a partition — O(groups-per-partition × k × row size) —
-    * and when that retained-row count exceeds
-    * `spark.graft.topk.fallbackRows` (default 4M) the partition
-    * switches to a spilling external sort on (group, order) and streams
-    * first-k-per-group from the sorted run (the ObjectHashAggregateExec
-    * discipline), so high group cardinality degrades to sort cost
-    * instead of OOM. The `numSortFallbacks` SQL metric counts
-    * partitions that switched. A frame known unique on a subset of
+    * charged to the task's execution memory; when Spark's memory manager
+    * denies the next page the partition switches to a spilling external
+    * sort on (group, order) and streams first-k-per-group from the sorted
+    * run (the hash aggregate's discipline), so high group cardinality
+    * degrades to sort cost instead of OOM. The `numSortFallbacks` SQL
+    * metric counts partitions that switched. Group columns must be
+    * orderable, as that sort needs. A frame known unique on a subset of
     * `groupCols` (Catalyst `distinctKeys`, e.g. after a groupBy on them,
     * or declared by [[uniqueOn]]) holds one row per group, so it plans
     * as itself: no exec, no exchange, no heap. */
@@ -34,8 +34,11 @@ object GraftOps {
       "groupCols must be non-empty (for a global top-k use orderBy().limit(k))")
     require(orderCols.nonEmpty, "orderCols must be non-empty")
     withPlan(df) { (plan, attr) =>
+      val groups = groupCols.map(attr)
+      groups.foreach(g => require(RowOrdering.isOrderable(g.dataType),
+        s"group column '${g.name}' has unorderable type ${g.dataType.simpleString}"))
       TopKPerGroupPlan(
-        groupCols.map(attr),
+        groups,
         orderCols.map { case (n, asc) =>
           SortOrder(attr(n), if (asc) Ascending else Descending) },
         k, plan)

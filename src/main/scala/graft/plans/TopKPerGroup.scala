@@ -1,19 +1,21 @@
 package graft.plans
 
-import org.apache.spark.SparkEnv
+import org.apache.spark.TaskContext
+import org.apache.spark.memory.{MemoryConsumer, MemoryMode, TaskMemoryManager}
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
-  BindReferences, Expression, ExpressionSet, RowOrdering, SortOrder,
-  SortPrefix, UnsafeProjection, UnsafeRow}
+  Expression, ExpressionSet, RowOrdering, SortOrder, UnsafeProjection,
+  UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
   Distribution, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy,
-  UnaryExecNode, UnsafeExternalRowSorter}
+import org.apache.spark.sql.execution.{LocalTableScanExec, SortExec,
+  SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Whole-operator extension (SURVEY §4 recipe c — the rung below custom
   * Expressions): top-k rows per group as a first-class physical operator,
@@ -136,132 +138,123 @@ case class TopKPerGroupExec(
 
   /** Memory bound and the escape hatch: the per-partition heap map holds
     * ≤ k rows per DISTINCT group key seen in that partition, on-heap —
-    * right for the many-rows-per-group inputs most callers have. With
-    * unique keys it retains every row until the cap below; a frame
-    * KNOWN unique never gets here (the strategy elides the pair), so
-    * that case is a unique-key batch write nobody declared. If
-    * group cardinality per partition is high enough that the retained
-    * rows exceed `spark.graft.topk.fallbackRows` (default 4M), the
-    * partition switches to a spilling external sort on (group, order)
-    * and streams the first k rows of each group from the sorted run —
-    * the same discipline as ObjectHashAggregateExec's sort fallback, so
-    * no input can OOM the task. Rows already evicted by a heap lost to
-    * ≥ k better rows that ARE in the sorter, so the switch is exact.
-    * (If a group type is not orderable the fallback is impossible; such
-    * types are not orderable by groupBy either, so this cannot arise via
-    * the public [[graft.operators.GraftOps.topKPerGroup]] API.) */
-  override protected def doExecute(): RDD[InternalRow] = {
+    * right for the many-rows-per-group inputs most callers have; with
+    * unique keys it retains every row. The maps are charged to the task's
+    * execution memory ([[HeapCharge]]); when the memory manager grants
+    * less than the next page, the partition frees its grant, switches to
+    * a spilling external sort on (group, order) and streams the first k
+    * rows of each group from the sorted run, as Spark's hash aggregate
+    * hands over to its external sorter. Rows already evicted by a heap
+    * lost to ≥ k better rows that ARE in the sorter: the switch is exact. */
+  override protected def doExecute(): RDD[InternalRow] =
+    child.execute().mapPartitions(partitionTopK(), preservesPartitioning = true)
+
+  /** The per-partition pass of `doExecute`; it closes over values, not
+    * the plan, and runs inside a task, whose memory it charges. */
+  private[graft] def partitionTopK(): Iterator[InternalRow] => Iterator[InternalRow] = {
     val gExprs = groupExprs
     val ord = ordering
     val out = child.output
     val limit = k
     val emitSorted = !partial
-    val fallbackRows = conf.getConfString(
-      "spark.graft.topk.fallbackRows", "4194304").toLong
-    val canFallback = RowOrdering.isOrderable(gExprs)
-    val schema = StructType(out.map(a =>
-      StructField(a.name, a.dataType, a.nullable)))
+    // the fallback's sorter on group-cluster ++ rank order, wired by
+    // SortExec itself (prefix on the leading key, full-row comparator)
+    val sortExec = SortExec(gExprs.map(SortOrder(_, Ascending)) ++ ord,
+      global = false, LocalTableScanExec(out, Nil, None))
     val numSortFallbacks = longMetric("numSortFallbacks")
-    child.execute().mapPartitions({ iter =>
+    iter => {
+      val ctx = TaskContext.get()
+      val mem = new HeapCharge(GraftBridge.taskMemoryManager(ctx))
+      ctx.addTaskCompletionListener[Unit](_ => mem.release())
       val groupProj = UnsafeProjection.create(gExprs, out)
-      // lt(a, b) == "a ranks strictly better than b"
-      val rowOrd = RowOrdering.create(ord, out)
+      val toUnsafe = UnsafeProjection.create(out, out)
+      def unsafe(r: InternalRow) = r match { case u: UnsafeRow => u; case o => toUnsafe(o) }
+      // lt(a, b) == "a ranks strictly better than b"; orderings only read
+      // rows, so the InternalRow ordering serves the heaps' UnsafeRows
+      val rowOrd = RowOrdering.create(ord, out).asInstanceOf[Ordering[UnsafeRow]]
       // max-heap per group under rowOrd: head is the WORST kept row, so
       // a full heap admits a new row by evicting its head
       val heaps = new java.util.HashMap[UnsafeRow,
-        scala.collection.mutable.PriorityQueue[InternalRow]]()
-      var retained = 0L
+        scala.collection.mutable.PriorityQueue[UnsafeRow]]()
       var overflow = false
       while (iter.hasNext && !overflow) {
-        val row = iter.next()
+        val row = unsafe(iter.next())
         val key = groupProj(row)
         var heap = heaps.get(key)
+        var grew = 0L
         if (heap == null) {
           heap = scala.collection.mutable.PriorityQueue.empty(rowOrd)
           heaps.put(key.copy(), heap)
+          grew = key.getSizeInBytes + HeapCharge.GroupOverhead
         }
         if (heap.size < limit) {
           heap.enqueue(row.copy())
-          retained += 1
-          overflow = canFallback && retained > fallbackRows
+          grew += row.getSizeInBytes + HeapCharge.RowOverhead
         } else if (rowOrd.lt(row, heap.head)) {
-          heap.dequeue(); heap.enqueue(row.copy())
+          grew += row.getSizeInBytes - heap.dequeue().getSizeInBytes
+          heap.enqueue(row.copy())
         }
+        overflow = !mem.charge(grew)
       }
       if (!overflow) {
-        val groups = heaps.values().iterator()
-        new Iterator[InternalRow] {
-          private var current: Iterator[InternalRow] = Iterator.empty
-          override def hasNext: Boolean = {
-            while (!current.hasNext && groups.hasNext) {
-              val rows = groups.next().toArray
-              current =
-                if (emitSorted) rows.sorted(rowOrd).iterator else rows.iterator
-            }
-            current.hasNext
-          }
-          override def next(): InternalRow = current.next()
-        }
+        // drained maps give their memory back before the task ends
+        heaps.values().iterator().asScala.flatMap { h =>
+          if (emitSorted) h.toArray.sorted(rowOrd).iterator else h.iterator
+        } ++ { heaps.clear(); mem.release(); Iterator.empty }
       } else {
         numSortFallbacks += 1
-        // External (spilling) sort on group-cluster ++ rank order, then a
-        // single streaming pass emitting the first k rows of each group.
-        // Same sorter wiring as SortExec: radix-eligible prefix on the
-        // leading key, full-row comparator for ties.
-        val sortOrder = gExprs.map(SortOrder(_, Ascending)) ++ ord
-        val sortOrd = RowOrdering.create(sortOrder, out)
-        val boundHead = BindReferences.bindReference(sortOrder.head, out)
-        val prefixExpr = SortPrefix(boundHead)
-        val prefixProj = UnsafeProjection.create(Seq(prefixExpr))
-        val prefixComputer = new UnsafeExternalRowSorter.PrefixComputer {
-          private val result = new UnsafeExternalRowSorter.PrefixComputer.Prefix
-          override def computePrefix(row: InternalRow)
-              : UnsafeExternalRowSorter.PrefixComputer.Prefix = {
-            val p = prefixProj(row)
-            result.isNull = p.isNullAt(0)
-            result.value =
-              if (result.isNull) prefixExpr.nullValue else p.getLong(0)
-            result
-          }
-        }
-        val sorter = UnsafeExternalRowSorter.create(
-          schema, sortOrd,
-          org.apache.spark.sql.execution.SortPrefixUtils
-            .getPrefixComparator(boundHead),
-          prefixComputer, SparkEnv.get.memoryManager.pageSizeBytes,
-          /* canUseRadixSort = */ false)
-        val toUnsafe = UnsafeProjection.create(out, out)
-        def insert(r: InternalRow): Unit = r match {
-          case u: UnsafeRow => sorter.insertRow(u)
-          case other => sorter.insertRow(toUnsafe(other))
-        }
-        heaps.values().forEach(h => h.foreach(insert))
-        heaps.clear()
-        while (iter.hasNext) insert(iter.next())
-        val sorted = sorter.sort()
-        new Iterator[InternalRow] {
-          private var prevKey: UnsafeRow = null
-          private var emitted = 0
-          private var pending: InternalRow = null
-          override def hasNext: Boolean = {
-            while (pending == null && sorted.hasNext) {
-              val row = sorted.next()
-              val key = groupProj(row)
-              if (prevKey == null || key != prevKey) {
-                prevKey = key.copy(); emitted = 0
-              }
-              if (emitted < limit) { emitted += 1; pending = row }
-            }
-            pending != null
-          }
-          override def next(): InternalRow = {
-            val r = pending; pending = null; r
-          }
+        mem.release()
+        val sorter = sortExec.createSorter()
+        // each group leaves the map as it enters the sorter
+        heaps.values().removeIf { h => h.foreach(sorter.insertRow); true }
+        while (iter.hasNext) sorter.insertRow(unsafe(iter.next()))
+        // the first k rows of each group of the sorted run
+        var prevKey: UnsafeRow = null
+        var emitted = 0
+        sorter.sort().filter { row =>
+          val key = groupProj(row)
+          if (prevKey == null || key != prevKey) { prevKey = key.copy(); emitted = 0 }
+          emitted += 1
+          emitted <= limit
         }
       }
-    }, preservesPartitioning = true)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerGroupExec =
     copy(child = newChild)
+}
+
+/** Task execution memory charged for one partition's heap maps: JVM
+  * objects, so ON_HEAP whatever the Tungsten mode. `charge` adds the bytes
+  * the maps grew by, acquires a page whenever they pass what is held, and
+  * answers false once a page is granted short. */
+private final class HeapCharge(tmm: TaskMemoryManager)
+    extends MemoryConsumer(tmm, MemoryMode.ON_HEAP) {
+  private var charged = 0L
+
+  def charge(bytes: Long): Boolean = {
+    charged += bytes
+    val step = math.max(tmm.pageSizeBytes, charged - used)
+    charged <= used || acquireMemory(step) >= step
+  }
+
+  def release(): Unit = { freeMemory(used); charged = 0L }
+
+  // A group's top-k needs every row it has kept, so the maps cannot be
+  // written out in part: the exact way out is the switch to the sorter,
+  // taken when this consumer's own next page is denied (Spark's
+  // BytesToBytesMap likewise refuses to spill while it is being built).
+  override def spill(size: Long, trigger: MemoryConsumer): Long = 0L
+}
+
+private object HeapCharge {
+  // JVM bytes beyond the UnsafeRow bytes (compressed oops): a kept row's
+  // UnsafeRow object and byte[] header; a new group's key object, HashMap
+  // node and slot, and PriorityQueue with its 16-slot buffer. Measured as
+  // the heap after System.gc() holding the maps of 2M (k BIGINT, v BIGINT,
+  // p STRING) rows: 352 B per unique-key group (48 + 16 row and key bytes)
+  // and 104 B per further kept row.
+  val RowOverhead = 56L
+  val GroupOverhead = 232L
 }

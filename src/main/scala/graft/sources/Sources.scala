@@ -11,7 +11,7 @@ import graft.operators.GraftOps
   * end-to-end by SourceSinkSpec round-trips. (No avro: the spark-avro
   * DATASOURCE jar is absent from /opt/spark/jars — only avro core libs
   * ship — so `format("avro")` fails to resolve; SURVEY §0's env table
-  * overstated this. The case arm stays as the extension point.)
+  * overstated this.)
   */
 object Sources {
   def read(spark: SparkSession, format: String, path: String,
@@ -173,13 +173,12 @@ final class CompactingParquetSink(root: String, targetBytes: Long)
   * exchange and no hash map.
   *
   * Memory: each hash map holds one copied row, one copied key and one
-  * queue per distinct key of its partition, on the JVM heap and outside
-  * Spark's memory manager — up to `spark.graft.topk.fallbackRows` rows
-  * (default 4M) per task. Past that the partition switches to a spilling
-  * external sort. Unique-key inputs nobody declared unique (a batch
-  * write of a deduplicated table) retain every row up to that cap, where
-  * the window's sort used managed, spillable memory from the first row;
-  * lower the cap for large unique-key batch writes on a small heap.
+  * queue per distinct key of its partition, on the JVM heap, charged to
+  * the task's execution memory. When Spark's memory manager denies the
+  * next page, the partition switches to a spilling external sort, as the
+  * window's sort spilled; unique-key inputs nobody declared unique (a
+  * batch write of a deduplicated table) take that sort once their rows
+  * fill the task's share of the pool.
   * Unorderable payload columns (e.g. maps) do not take part in the
   * tie-break: duplicates differing only in those stay unspecified.
   */

@@ -1,13 +1,15 @@
 package org.apache.spark.sql
 
+import org.apache.spark.TaskContext
+import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into the `private[sql]` Column↔Expression converters of Spark 4
-  * (Column is a ColumnNode wrapper since 4.0; `new Column(expr)` is gone).
-  * Lives inside the org.apache.spark.sql package tree for access — the
-  * standard extension-library technique (see SNIPPETS.md [1]/[2]); only
-  * these two one-line forwarders live here, nothing else reaches into
-  * Spark internals.
+/** Bridge into the `private[sql]`/`private[spark]` Spark 4 members the
+  * library's plan nodes need: Column↔Expression (Column wraps a ColumnNode
+  * since 4.0), analyzed plans, float normalization, the name resolver and
+  * the task's memory manager. Lives inside the org.apache.spark.sql package
+  * tree for access — the standard extension-library technique (see
+  * SNIPPETS.md [1]/[2]); nothing else reaches into Spark internals.
   */
 object GraftBridge {
   def column(e: Expression): Column =
@@ -41,4 +43,7 @@ object GraftBridge {
     * column names with the same rule the analyzer uses. */
   def resolver(spark: SparkSession): (String, String) => Boolean =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.resolver
+
+  /** The task's memory manager, for operators that charge what they keep. */
+  def taskMemoryManager(ctx: TaskContext): TaskMemoryManager = ctx.taskMemoryManager()
 }

@@ -151,43 +151,54 @@ class PlanSpec extends SparkTestBase {
       s"stratified sampler should use the bounded-shuffle operator:\n$p")
   }
 
-  test("topKPerGroup falls back to a spilling sort past the retained-row cap") {
+  test("topKPerGroup falls back to a spilling sort when memory is denied") {
     val ss = spark
     import ss.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    // High group cardinality (5000 groups × 4 rows): the heap map would
-    // retain ~one row per group — exactly the shape ADVICE r3 flagged as
-    // an OOM risk. With the cap forced low, every partition must switch
-    // to the external-sort path and still return the exact answer.
-    val df = (1 to 20000).map(i => (i % 5000, i, (i * 37 % 101).toDouble))
+    // Each pass runs as tasks on a small pool of its own (TopKTasks). High
+    // group cardinality (5000 groups × 4 rows, shuffled so groups repeat
+    // before the switch) charges a heap map about 1.5-2 MB: with a 1.5 MB
+    // pool the second 1 MB page is denied part-way through every partition.
+    // The 12-row edge-case frame (k > group size, all-tie groups) charges
+    // a few KB: a 256 KB pool denies it the first page. Either way the
+    // freed pool still holds the sorter's first page, and the result must
+    // equal the window formulation with no memory left held.
+    val rnd = new scala.util.Random(11)
+    val wide = rnd.shuffle((1 to 20000).map(i => (i % 5000, i, (i * 37 % 101).toDouble)))
       .toDF("g", "id", "v").repartition(3)
-    spark.conf.set("spark.graft.topk.fallbackRows", "100")
-    try {
-      val out = operators.GraftOps.topKPerGroup(
-        df, Seq("g"), Seq(("v", false), ("id", true)), 2)
-      val got = out.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-      // AQE wraps every stage (incl. the result stage since Spark 4) in
-      // leaf QueryStageExec nodes — recurse through them to the execs
-      def execs(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[plans.TopKPerGroupExec] = p.collect {
-        case e: plans.TopKPerGroupExec => Seq(e)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          execs(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          execs(q.plan)
-      }.flatten
-      val found = execs(out.queryExecution.executedPlan)
-      assert(found.nonEmpty, "no TopKPerGroupExec in the executed plan")
-      val fallbacks = found.map(_.metrics("numSortFallbacks").value).sum
-      assert(fallbacks > 0, "no partition took the sort fallback")
+    val edge = Seq(
+      ("a", 1, 10.0), ("a", 2, 20.0),
+      ("b", 1, 5.0), ("b", 2, 4.0), ("b", 3, 3.0), ("b", 4, 2.0), ("b", 5, 1.0),
+      ("c", 9, 7.0),
+      ("d", 1, 6.0), ("d", 2, 6.0), ("d", 3, 6.0), ("d", 4, 6.0))
+      .toDF("g", "id", "v").repartition(5)
+    val mb = 1L << 20
+    for ((df, k, deniedPool) <- Seq((wide, 2, 3 * mb / 2), (edge, 3, mb / 4),
+        (edge, 1, mb / 4)); (pool, fallBack) <- Seq((64 * mb, false),
+        (deniedPool, true))) {
+      val run = TopKTasks.run(operators.GraftOps.topKPerGroup(
+        df, Seq("g"), Seq(("v", false), ("id", true)), k), pool, mb)
+      val label = s"k=$k, pool ${pool / 1024} KB"
+      if (fallBack) assert(run.fallbacks > 0, s"$label: no partition fell back")
+      else assert(run.fallbacks == 0, s"$label: ${run.fallbacks} fell back")
+      assert(run.held == 0, s"$label: ${run.held} B still held after draining")
+      val got = run.rows.map(r => (r.get(0), r.getInt(1))).sortBy(_.toString)
       val expected = df.withColumn("rn", row_number().over(
           Window.partitionBy("g").orderBy(col("v").desc, col("id"))))
-        .filter(col("rn") <= 2)
-        .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+        .filter(col("rn") <= k)
+        .collect().map(r => (r.get(0), r.getInt(1))).toSeq.sortBy(_.toString)
       assert(got == expected,
-        s"fallback path diverged: ${got.size} vs ${expected.size} rows")
-    } finally spark.conf.unset("spark.graft.topk.fallbackRows")
+        s"$label: ${got.size} rows vs the window's ${expected.size}")
+    }
+  }
+
+  test("topKPerGroup rejects an unorderable group column by name") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(3).select(map(lit("a"), col("id")).as("tags"), col("id"))
+    val e = intercept[IllegalArgumentException](operators.GraftOps.topKPerGroup(
+      df, Seq("tags"), Seq(("id", true)), 1))
+    assert(e.getMessage.contains("'tags'"), e.getMessage)
   }
 
   test("topKPerGroup merges -0.0 and 0.0 group keys like GROUP BY does") {

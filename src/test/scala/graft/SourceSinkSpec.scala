@@ -219,26 +219,27 @@ class SourceSinkSpec extends SparkTestBase {
     case other => other +: other.children.flatMap(planNodes)
   }
 
-  /** Partitions of an executed frame that took the top-k sort fallback. */
-  private def sortFallbacks(df: DataFrame): Long =
-    planNodes(df.queryExecution.executedPlan).collect {
-      case e: graft.plans.TopKPerGroupExec =>
-        e.metrics("numSortFallbacks").value
-    }.sum
-
   test("KeyedUpsertSink matches the row_number window reference on seeded " +
     "batches (NULL keys/versions/payloads, composite key, -0.0 keys, map payload)") {
-    // once on the hash maps, once with every partition forced onto the
-    // external-sort fallback, which must honour the same NULL orderings
+    // The top-k passes run as tasks on a pool of their own (TopKTasks):
+    // once on the hash maps (64 MB pool), once with every task denied its
+    // first 1 MB page by a 256 KB pool, so it takes the external-sort
+    // fallback, which must honour the same NULL orderings. The hash arm
+    // also matches the planned query (partial → exchange → final).
     def check(forceFallback: Boolean): Unit = {
       val mode = if (forceFallback) "sort fallback" else "hash"
       def resolve(df: DataFrame, keys: Seq[String]): Seq[Row] = {
         val out = upserted(df, keys, "v")
-        val rows = out.collect().toSeq
-        val fallbacks = sortFallbacks(out)
-        if (forceFallback) assert(fallbacks > 0, "no partition fell back")
-        else assert(fallbacks == 0, s"$fallbacks partitions fell back")
-        rows
+        val mb = 1L << 20
+        val run = TopKTasks.run(out, if (forceFallback) mb / 4 else 64 * mb, mb)
+        if (forceFallback) assert(run.fallbacks > 0, "no partition fell back")
+        else {
+          assert(run.fallbacks == 0, s"${run.fallbacks} partitions fell back")
+          assert(out.collect().map(orderablePart).sorted.toSeq ==
+            run.rows.map(orderablePart).sorted, "tasks and planned query differ")
+        }
+        assert(run.held == 0, s"$mode: ${run.held} B still held after draining")
+        run.rows
       }
       (1 to 4).foreach { seed =>
         val rows = upsertBatch(seed, 400)
@@ -295,9 +296,7 @@ class SourceSinkSpec extends SparkTestBase {
       assert(dGot.length == 4, s"$mode: 0.0/-0.0 (or NaN) split: ${dGot.mkString(", ")}")
     }
     check(forceFallback = false)
-    spark.conf.set("spark.graft.topk.fallbackRows", "1")
-    try check(forceFallback = true)
-    finally spark.conf.unset("spark.graft.topk.fallbackRows")
+    check(forceFallback = true)
   }
 
   test("KeyedUpsertSink plans as hash top-1 around one exchange, no sort or window") {
