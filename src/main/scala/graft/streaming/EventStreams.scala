@@ -25,10 +25,16 @@ object EventStreams {
   /** The column [[dedup]] keeps one row per. */
   val DedupKey = "event_id"
 
-  /** Streaming form of `stream_dedup`: exactly-once per event_id within
-    * the watermark horizon. */
+  /** Keeps the first row of each event_id: exactly-once per event_id
+    * within the watermark horizon. A re-send carries the first copy's
+    * event time t, so it is dropped either by the id's state, which lives
+    * until the watermark passes t + `watermark`, or as late data once the
+    * watermark is past t. A copy whose event time is more than the
+    * horizon after the first copy's is a new arrival. State holds the ids
+    * of about one horizon, not every id the stream has seen. */
   def dedup(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("tstamp", watermark).dropDuplicates(DedupKey)
+    events.withWatermark("tstamp", watermark)
+      .dropDuplicatesWithinWatermark(DedupKey)
 
   /** Stream-stream interval join — view→purchase attribution within
     * `windowUs` per user. The SAME plan serves the batch `stream_join`

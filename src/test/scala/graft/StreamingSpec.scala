@@ -1,12 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException,
+  Trigger}
 
 /** SURVEY §5.5 / §2.9 ⊘ rows: the real Structured Streaming path —
   * chronological file-chunk replay of events with maxFilesPerTrigger=1 —
-  * asserting (a) streaming dropDuplicates matches batch dedup semantics,
+  * asserting (a) `EventStreams.dedup` keeps one row per event_id with
+  * state bounded by the watermark,
   * (b) a brand-new row older than the watermark is DROPPED (late-data
   * semantics of `stream_late_data`), while a fresh row is kept,
   * (c) append-mode tumbling windows emit exactly the batch counts.
@@ -18,8 +21,12 @@ class StreamingSpec extends SparkTestBase {
   /** Writes events (ordered by ts) into two chronological halves plus —
     * when `withLate` — a third chunk holding one very-late new row and one
     * fresh row, with strictly increasing file mtimes so the file source
-    * replays in order. Returns (dir, lateId, freshId, baseCount). */
-  private def stageChunks(withLate: Boolean = true): (String, Long, Long, Long) = {
+    * replays in order. Chunk `resendChunk` also carries `resend(h1)`: rows
+    * of chunk 1 sent again with their own event time. Returns (dir,
+    * lateId, freshId, baseCount). */
+  private def stageChunks(withLate: Boolean = true,
+      resend: Seq[Row] => Seq[Row] = _ => Nil,
+      resendChunk: Int = 3): (String, Long, Long, Long) = {
     val dir = freshDir()
     val ev = graft.Tables.events(spark, sf).orderBy("ts_us")
       .select("event_id", "ts_us", "user_id", "event_type", "value")
@@ -40,33 +47,47 @@ class StreamingSpec extends SparkTestBase {
       f.listFiles().foreach(_.setLastModified(ts))
       f.setLastModified(ts)
     }
-    def tup(r: org.apache.spark.sql.Row) =
+    def tup(r: Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3), r.getDouble(4))
+    val again = resend(h1.toSeq).map(tup)
+    def extra(i: Int) = if (i == resendChunk) again else Nil
     writeChunk(h1.map(tup).toSeq, 1)
-    writeChunk(h2.map(tup).toSeq, 2)
+    writeChunk(h2.map(tup).toSeq ++ extra(2), 2)
     if (withLate)
       writeChunk(Seq((lateId, minTs, 1L, "late", 0.0),
-        (freshId, maxTs + 60L * 1000000L, 1L, "fresh", 0.0)), 3)
+        (freshId, maxTs + 60L * 1000000L, 1L, "fresh", 0.0)) ++ extra(3), 3)
     (dir, lateId, freshId, n.toLong)
   }
 
+  /** event_ids that chunk `i` of `dir` sends again after chunk 1. */
+  private def resentIds(dir: String, i: Int): Set[Long] =
+    spark.read.parquet(s"$dir/chunk1").select("event_id")
+      .intersect(spark.read.parquet(s"$dir/chunk$i").select("event_id"))
+      .collect().map(_.getLong(0)).toSet
+
   test("streaming dropDuplicates+watermark drops late rows, keeps fresh") {
-    val (dir, lateId, freshId, n) = stageChunks()
+    // EventStreams.dedup over the chunk replay; chunk 3 re-sends a
+    // chunk-1 row with its own event time, which must land once
+    val (dir, lateId, freshId, n) = stageChunks(resend = _.take(1))
+    val again = resentIds(dir, 3)
+    assert(again.size == 1)
     val schema = spark.read.parquet(s"$dir/chunk1").schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/*")
-      .withColumn("tstamp", timestamp_micros(col("ts_us")))
-      .withWatermark("tstamp", "10 minutes")
-      .dropDuplicates("event_id")
+    val q = graft.streaming.EventStreams.dedup(
+        graft.streaming.EventStreams.readEvents(spark, s"$dir/*", schema))
       .writeStream.format("memory").queryName("dedup_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val ids = spark.table("dedup_out").select("event_id")
-      .collect().map(_.getLong(0)).toSet
+      .collect().map(_.getLong(0))
     assert(!ids.contains(lateId), "late row survived the watermark")
     assert(ids.contains(freshId), "fresh row was dropped")
-    assert(ids.size == n + 1, s"expected ${n + 1} rows, got ${ids.size}")
+    assert(ids.count(again.contains) == 1, "re-sent row did not land once")
+    assert(ids.length == ids.toSet.size && ids.length == n + 1,
+      s"expected ${n + 1} distinct rows, got ${ids.length}")
+    // the watermark evicts the ids of the past: state holds the ids of
+    // about one horizon, not every id the stream has seen
+    val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    assert(stateRows < n / 10, s"dedup state holds $stateRows of $n ids")
   }
 
   test("RocksDB state store runs the session_window replay identically") {
@@ -124,32 +145,46 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("IngestPipeline kill/restart recovers from checkpoint exactly-once") {
-    // the reference's operational contract: stop ingestion mid-stream,
+    // the reference's operational contract: kill ingestion mid-stream,
     // restart from the checkpoint, and the keyed store still holds each
     // key exactly once (epoch replay is idempotent: same batch id →
-    // same batch=<id> directory, overwritten)
-    val (dir, lateId, freshId, n) = stageChunks()
+    // same batch=<id> directory, overwritten). Chunk 2 re-sends chunk
+    // 1's last rows with their own event time, inside the horizon of
+    // chunk 1's watermark: only the dedup state restored from the
+    // checkpoint can drop them.
+    val (dir, lateId, freshId, n) = stageChunks(resendChunk = 2,
+      resend = h1 => {
+        val last = h1.last.getLong(1)
+        h1.filter(_.getLong(1) > last - 5L * 60 * 1000000).takeRight(3)
+      })
+    val again = resentIds(dir, 2)
+    assert(again.nonEmpty)
     val schema = spark.read.parquet(s"$dir/chunk1").schema
     val sinkRoot = freshDir()
     val ckpt = s"${freshDir()}/ckpt"
     val sink = new graft.sources.KeyedUpsertSink(
       new graft.sources.ParquetSink(sinkRoot), Seq("event_id"), "ts_us")
-    def run(): org.apache.spark.sql.streaming.StreamingQuery =
+    def run(s: graft.sources.Sink): StreamingQuery =
       graft.streaming.IngestPipeline.start(
         graft.streaming.EventStreams.readEvents(spark, s"$dir/*", schema),
-        sink, "events_raw", ckpt)
-    // phase 1: stop as soon as the first micro-batch has committed —
-    // with 3 chunks at maxFilesPerTrigger=1 this lands mid-stream
-    val q1 = run()
-    val deadline = System.currentTimeMillis() + 60000
-    while (q1.isActive && q1.recentProgress.isEmpty &&
-      System.currentTimeMillis() < deadline) Thread.sleep(25)
-    q1.stop()
-    q1.awaitTermination(60000)
-    // phase 2: restart from the same checkpoint; AvailableNow drains the
-    // remaining (and any replayed) epochs
-    val q2 = run()
+        s, "events_raw", ckpt)
+    // phase 1: the ingest dies in its second micro-batch (chunk 2),
+    // before that batch writes or commits
+    val dying: graft.sources.Sink = (df, table) =>
+      if (table.endsWith("batch=1")) throw new IllegalStateException("killed")
+      else sink.write(df, table)
+    val q1 = run(dying)
+    intercept[StreamingQueryException](q1.awaitTermination(120000))
+    // phase 2: restart from the same checkpoint; AvailableNow replays
+    // batch 1 under its id and drains the rest
+    val q2 = run(sink)
     q2.awaitTermination(120000)
+    val progress = q2.recentProgress
+    assert(progress.head.batchId == 1, "batch 1 was not replayed")
+    val dropped = progress.flatMap(_.stateOperators)
+      .map(_.customMetrics.get("numDroppedDuplicateRows").longValue).sum
+    assert(dropped == again.size,
+      s"restored state dropped $dropped of ${again.size} re-sent rows")
     val ids = spark.read.parquet(s"$sinkRoot/events_raw")
       .select("event_id").collect().map(_.getLong(0))
     assert(ids.length == ids.toSet.size,
