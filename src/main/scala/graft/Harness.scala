@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The launch decisions every harness entry point shares — `Bench`,
-  * `Verify`, `PlanDump`, the test session and the scale probes: the
+  * `Verify`, `PlanDump`, the test session and the corpus writers: the
   * session config, the corpus warm-up, the ingest-fixture prep and the
   * end-of-key pin sweep. */
 object Harness {

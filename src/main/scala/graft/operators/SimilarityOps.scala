@@ -161,7 +161,7 @@ object SimilarityOps {
     // SCALE CONTRACT: recall-1 at cos ≥ 0.3 on
     // near-uniform unit vectors is Θ(N²) compute BY SEMANTICS — the
     // plan bounds memory, nothing can bound work. The measured
-    // renegotiation trade (KnnScaleProbe, DESIGN §3/§11): the
+    // renegotiation trade (DESIGN §3/§11/§14.2): the
     // IVF-cell-partitioned form stays near-flat where exact grows
     // quadratically (2.6→7.2 s vs 3.3→34.7 s over 4k→16k vectors,
     // crossover ≈4k at nlist=16) at 0.83 cross-cell edge recall
@@ -206,7 +206,7 @@ object SimilarityOps {
     // exact graph (2.0 s vs 1.7 s steady at p=3) — the fixed training
     // agg outweighs the N²→N²/nlist·p² pair cut at tiny N; the
     // crossover is where N²·d work dominates the (cell × dim)
-    // training agg (measured ≈4k vectors, KnnScaleProbe).
+    // training agg (measured ≈4k vectors, DESIGN §14.2).
     "knn_graph_ivf" -> ((s: SparkSession, d: String) => {
       val emb = t(s, d, "embeddings")
       knnGraphMultiProbe(emb, 3).orderBy("node", "rn")

@@ -138,11 +138,11 @@ class ExtOpsSpec extends SparkTestBase {
     // observation (ADVICE r10: 0.05 was nearly vacuous) so a
     // cell-assignment or probe regression actually fails while
     // leaving headroom for corpus regeneration.
-    // Recall-at-SCALE (r13, VERDICT r12 #6; KnnScaleProbe, fixed
-    // nlist=16/p=3 over perturbed-copy corpora): 2k 0.800, 4k 0.809,
+    // Recall-at-SCALE (r13, VERDICT r12 #6; fixed nlist=16/p=3 over
+    // perturbed-copy corpora): 2k 0.800, 4k 0.809,
     // 8k 0.817, 16k 0.902 — stable-to-rising with corpus size, so
     // this floor is a policy property, not a small-SF artifact
-    // (DESIGN §14.2 carries the curve).
+    // (DESIGN §14.2 carries the curve and how to reproduce it).
     val hits = ivf.count(r => exact((r.getLong(0), r.getLong(1))))
     val recall = hits.toDouble / exact.size
     info(f"knn_graph_ivf edge recall vs exact: $recall%.3f")

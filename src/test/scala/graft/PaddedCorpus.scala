@@ -10,17 +10,15 @@ import org.apache.spark.sql.functions._
   * [[PadTokens]] fresh tokens — past the 62-token mask gate on its own —
   * and a doc_id no other document has. It shares no token with any
   * document, so it joins no pair and no multi-member cluster: the two
-  * arms' outputs must be equal.
-  *
-  * Usage (a padded copy for a command-line run):
-  * Test/runMain graft.PaddedCorpus <sfDir> <outDir> */
+  * arms' outputs must be equal. `Test/runMain graft.Corpora padded
+  * <sfDir> <outDir>` writes a padded copy for a command-line run. */
 object PaddedCorpus {
   val PadTokens = 63
   private val Prefix = "graftpad"
 
   /** Writes `docs` plus the pad document to `dir`/documents.parquet
-    * (overwriting) in as many files as `docs` has partitions, and
-    * returns the pad document's doc_id. */
+    * (which must not exist yet) in as many files as `docs` has
+    * partitions, and returns the pad document's doc_id. */
   def write(docs: DataFrame, dir: String): Long = {
     val clash = docs.select(explode(split(col("text"), " ")).as("w"))
       .where(col("w").startsWith(Prefix)).limit(1).count()
@@ -36,8 +34,7 @@ object PaddedCorpus {
       }).cast(f.dataType).as(f.name)
     }: _*)
     docs.union(pad).coalesce(docs.rdd.getNumPartitions)
-      .write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
+      .write.parquet(s"$dir/documents.parquet")
     padId
   }
 
@@ -55,14 +52,4 @@ object PaddedCorpus {
       case _: operators.TextSimOps.Masks => "masks"
       case _: operators.TextSimOps.Postings => "postings"
     }
-
-  def main(args: Array[String]): Unit = {
-    require(args.length == 2, "usage: PaddedCorpus <sfDir> <outDir>")
-    val spark = Harness.session(Harness.cpus)
-    try {
-      val id = write(Tables.t(spark, args(0), "documents"), args(1))
-      println(s"[padded] ${args(1)}/documents.parquet: pad doc_id $id, " +
-        s"arm ${arm(spark, args(1))}")
-    } finally spark.stop()
-  }
 }

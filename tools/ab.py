@@ -38,7 +38,9 @@ runs first alternates from round to round. For every key and count it
 prints the set of values each side's traced tries showed, marking with
 `*` each count whose two sets differ and with `?` each count whose base
 values did not repeat (a count that moves between runs of one build is
-no evidence of a change); it prints no verdict. The raw records go to
+no evidence of a change); then each side's traced `total_s` and `cpu_s`
+per key, the median over its runs (min-max when N > 1); it prints no
+verdict. The raw records go to
 <workdir>/<side>-keys-<round>/raw.json. Exit code 1 if any try of
 either side failed.
 """
@@ -60,6 +62,8 @@ MIN_PAIRS = 10
 KEY_COUNTS = ["rows", "sched.jobs", "sched.stages", "sched.tasks",
               "pin.count", "pin.bytes", "plans.exchanges",
               "shuffle.write_bytes"]
+# Per-key seconds of one traced try, printed after the counts.
+KEY_TIMES = ["total_s", "cpu_s"]
 KEYS_LIMIT_S = 1800
 # Runs inside one copy: builds it with perfbench/run.py's build and runs
 # one traced queries JVM with run.py's launcher.
@@ -161,6 +165,25 @@ def shown(vals):
                     for v in sorted(set(vals), key=lambda v: (v is None, v)))
 
 
+def traced_values(raws, key, m):
+    """Per side, metric `m` of `key` in each run's traced record."""
+    return {s: [((r or {}).get("traced") or {}).get("keys", {})
+                .get(key, {}).get(m) for r in raws[s]]
+            for s in ("base", "change")}
+
+
+def timed(vals):
+    """One time over a side's runs, as text: the median, and min-max
+    when there was more than one run."""
+    vals = [v for v in vals if v is not None]
+    if not vals:
+        return "-"
+    med = f"{statistics.median(vals):.2f}"
+    if len(vals) == 1:
+        return med
+    return f"{med} ({min(vals):.2f}-{max(vals):.2f})"
+
+
 def compare_keys(a, sides, workdir):
     keys = a.keys.split(",")
     data = os.path.abspath(a.data)
@@ -178,9 +201,7 @@ def compare_keys(a, sides, workdir):
     print(f"{'key':26s} {'count':20s} {'base':>20s} {'change':>20s}")
     for k in keys:
         for i, m in enumerate(KEY_COUNTS):
-            vals = {s: [((r or {}).get("traced") or {}).get("keys", {})
-                        .get(k, {}).get(m) for r in raws[s]]
-                    for s in ("base", "change")}
+            vals = traced_values(raws, k, m)
             mark = ""
             if set(vals["base"]) != set(vals["change"]):
                 mark += " *"
@@ -189,6 +210,10 @@ def compare_keys(a, sides, workdir):
             print(f"{k if i == 0 else '':26s} {m:20s} "
                   f"{shown(vals['base']):>20s} "
                   f"{shown(vals['change']):>20s}{mark}")
+        for m in KEY_TIMES:
+            vals = traced_values(raws, k, m)
+            print(f"{'':26s} {m:20s} {timed(vals['base']):>20s} "
+                  f"{timed(vals['change']):>20s}")
     ok = True
     for side in ("base", "change"):
         for n, raw in enumerate(raws[side], 1):
