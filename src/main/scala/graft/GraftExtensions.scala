@@ -9,7 +9,12 @@ import graft.functions.DotProductF32
 
 /** Session extension installing the library's native SQL functions
   * (`spark.sql.extensions=graft.GraftExtensions`, or call [[install]] on
-  * a live session). Currently: `dot_f32(array<float>, array<float>)`.
+  * a live session): `dot_f32(array<float>, array<float>)`,
+  * `bloom_filter_agg` and `might_contain`; the `DotProductRewrite`
+  * optimizer rule; and the planner strategies `graft.plans.TopKStrategy`
+  * (top-k per group) and `graft.plans.LongKeyBroadcastJoin` (broadcast
+  * hash joins on string or composite keys planned on one long key), which
+  * [[GraftExtensions.installStrategies]] adds to a live session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -17,7 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.bloomFilterAgg)
     ext.injectFunction(GraftExtensions.mightContain)
     ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    GraftExtensions.Strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
   }
 }
 
@@ -61,13 +66,18 @@ object GraftExtensions {
       spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3)
     }
 
+  private val Strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    Seq(graft.plans.TopKStrategy, graft.plans.LongKeyBroadcastJoin)
+
   /** Adds the custom planner strategies to a live session (extensions
     * configured at session build do this automatically — the planner
     * check covers both injection paths, so this never double-registers). */
-  def installStrategies(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.planner.strategies.contains(graft.plans.TopKStrategy))
+  def installStrategies(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val missing = Strategies.filterNot(spark.sessionState.planner.strategies.contains)
+    if (missing.nonEmpty)
       spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKStrategy
+        spark.experimental.extraStrategies ++ missing
+  }
 
   /** Adds the declarative→codegen rewrite rules to a live session
     * (extensions configured at session build do this automatically). */

@@ -51,7 +51,13 @@ object Tables {
   private val leafMemo = new java.util.HashMap[SparkSession,
     scala.collection.mutable.Map[String, (Seq[(String, Long, Long)], DataFrame)]]()
 
+  /** The table `name` under `sfDir`, through the leaf-relation memo
+    * above. It first installs the graft planner strategies on `spark`
+    * ([[GraftExtensions.installStrategies]]; a no-op once they are
+    * there), so every query over a table gets them, whichever code built
+    * the session. */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    GraftExtensions.installStrategies(spark)
     // Source fan-out (repartition-after-read for the corpus' single-
     // row-group files — guide §2.5 "input skew: one huge unsplittable
     // file") was TRIED and REVERTED in r15: every table ships as one

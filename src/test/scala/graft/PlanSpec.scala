@@ -574,4 +574,105 @@ class PlanSpec extends SparkTestBase {
       spark.sql("DROP TABLE IF EXISTS ord_bkt")
     }
   }
+
+  test("a broadcast join on a string or (string, bigint) key builds a " +
+    "long-keyed relation; Spark's own relation holds a whole page") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      EqualTo}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      BroadcastRelations}
+    import org.apache.spark.sql.functions.broadcast
+    import org.apache.spark.sql.types.LongType
+    val ss = spark
+    import ss.implicits._
+    GraftExtensions.installStrategies(spark)
+    val fact = spark.range(0, 1000).select(($"id" % 4).cast("string").as("k"),
+      ($"id" % 2).as("n"), $"id")
+    val dim = Seq(("0", 0L, "a"), ("1", 1L, "b"), ("2", 0L, "c"))
+      .toDF("k", "n", "name")
+    /** The one join of the executed plan, and its relation's class name,
+      * driver-side size and deserialized size. */
+    def relation(keys: Seq[String])
+        : (BroadcastHashJoinExec, (String, Long, Long)) = {
+      val df = fact.join(broadcast(dim), keys)
+      assert(df.count() == 750, s"$keys")
+      val j = SparkTestBase.broadcastJoins(df.queryExecution.executedPlan) match {
+        case Seq(j) => j
+        case js => fail(s"expected one broadcast hash join, got ${js.size}:\n" +
+          df.queryExecution.executedPlan)
+      }
+      (j, BroadcastRelations.of(j))
+    }
+    val page = org.apache.spark.SmallMemoryTask.pageSizeBytes
+    for (keys <- Seq(Seq("k"), Seq("k", "n"))) {
+      val (j, (rel, driver, remote)) = relation(keys)
+      assert(SparkTestBase.longKeyed(j) &&
+        j.leftKeys.map(_.dataType) == Seq(LongType) &&
+        j.rightKeys.map(_.dataType) == Seq(LongType), s"$keys: $j")
+      val equal = j.condition.toSeq.flatMap(_.collect {
+        case EqualTo(l: AttributeReference, r: AttributeReference)
+          if l.name == r.name => l.name
+      })
+      assert(equal.sorted == keys.sorted,
+        s"$keys: key equalities missing from the condition ${j.condition}")
+      assert(rel == "LongHashedRelation", s"$keys: $rel")
+      // the driver's copy keeps the 1 MB page it was built in (local
+      // mode's tasks probe that copy); a deserialized one holds the rows
+      assert(remote < (1L << 20) && driver <= (1L << 20) + 1024 &&
+        driver < page,
+        s"$keys: long-keyed relation of 3 rows holds $driver B on the " +
+          s"driver, $remote B deserialized (page $page B)")
+      withoutLongKeyJoin {
+        val (sj, (srel, sdriver, sremote)) = relation(keys)
+        assert(!SparkTestBase.longKeyed(sj) && sj.leftKeys.size == keys.size)
+        assert(srel == "UnsafeHashedRelation", s"$keys: $srel")
+        // the waste the strategy removes: a whole page for 3 rows
+        assert(sdriver >= page && sremote >= page,
+          s"$keys: Spark's relation holds $sdriver B on the driver, " +
+            s"$sremote B deserialized (page $page B)")
+      }
+    }
+  }
+
+  test("an AQE re-plan joins a broadcast stage on one long key only when " +
+    "the stage was broadcast on it") {
+    import org.apache.spark.sql.catalyst.expressions.EqualTo
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      BroadcastQueryStageExec, LogicalQueryStage, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.functions.broadcast
+    val ss = spark
+    import ss.implicits._
+    GraftExtensions.installStrategies(spark)
+    val l = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("k", "v")
+    val r = Seq(("a", 10), ("c", 30)).toDF("k", "w")
+    /** The broadcast stage of `l` joined with `r` on `k`, as AQE ran it. */
+    def stage(): BroadcastQueryStageExec = {
+      val df = l.join(broadcast(r), "k")
+      df.collect()
+      def stages(p: SparkPlan): Seq[BroadcastQueryStageExec] = p.collect {
+        case s: BroadcastQueryStageExec => Seq(s)
+        case a: AdaptiveSparkPlanExec => stages(a.executedPlan)
+        case q: QueryStageExec => stages(q.plan)
+      }.flatten
+      stages(df.queryExecution.executedPlan).headOption.getOrElse(
+        fail(s"no broadcast stage:\n${df.queryExecution.executedPlan}"))
+    }
+    val (la, ra) = (org.apache.spark.sql.GraftBridge.analyzed(l),
+      org.apache.spark.sql.GraftBridge.analyzed(r))
+    /** What the strategy plans for the join once `r` is the stage `s`. */
+    def replan(s: BroadcastQueryStageExec) = plans.LongKeyBroadcastJoin(
+      Join(la, LogicalQueryStage(ra, s), Inner,
+        Some(EqualTo(la.output.head, ra.output.head)), JoinHint.NONE))
+    assert(replan(stage()).collect {
+      case j: BroadcastHashJoinExec if SparkTestBase.longKeyed(j) => j.buildSide
+    } == Seq(BuildRight))
+    // a stage broadcast on the string key is left to Spark: planning it on
+    // h would ask the stage for a second broadcast mode
+    assert(replan(withoutLongKeyJoin(stage())).isEmpty)
+  }
 }

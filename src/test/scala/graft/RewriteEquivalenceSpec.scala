@@ -651,4 +651,124 @@ class RewriteEquivalenceSpec extends SparkTestBase {
         gen.zip(decl).zipWithIndex.find(p => p._1._1 != p._1._2))
     }
   }
+
+  /** `df`'s rows with [[graft.plans.LongKeyBroadcastJoin]] equal its rows
+    * as Spark plans it (both sorted); returns the joins planned on `h`. */
+  private def asSpark(what: String, df: => org.apache.spark.sql.DataFrame)
+      : Int = {
+    GraftExtensions.installStrategies(spark)
+    val ours = df
+    val got = ours.collect().map(_.toString).sorted.toSeq
+    val want = withoutLongKeyJoin(df.collect().map(_.toString).sorted.toSeq)
+    assert(got == want, s"$what: ${got.size} rows vs Spark's ${want.size}, " +
+      s"first difference ${got.zip(want).find(p => p._1 != p._2)}")
+    SparkTestBase.broadcastJoins(ours.queryExecution.executedPlan)
+      .count(SparkTestBase.longKeyed)
+  }
+
+  test("long-keyed broadcast joins return Spark's rows: join types, NULL " +
+    "and <=> keys, NaN and signed zeros, seeded repeats") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("k", StringType),
+      StructField("n", LongType), StructField("d", DoubleType),
+      StructField("i", IntegerType), StructField("j", IntegerType),
+      StructField("v", IntegerType)))
+    val ks = Seq("a", "A", "b", "c", "a much longer key than the others", "",
+      null)
+    val ns = Seq[java.lang.Long](0L, 1L, 2L, Long.MinValue, null)
+    val ds = Seq[java.lang.Double](Double.NaN, -0.0, 0.0, 1.5,
+      java.lang.Double.longBitsToDouble(0x7ff8000000000123L), null)
+    val rnd = new scala.util.Random(20261019L)
+    def rows(n: Int): Seq[Row] = Seq.tabulate(n)(v => Row(
+      ks(rnd.nextInt(ks.size)), ns(rnd.nextInt(ns.size)),
+      ds(rnd.nextInt(ds.size)), rnd.nextInt(4), rnd.nextInt(4), v))
+    val l = spark.createDataFrame(java.util.Arrays.asList(rows(400): _*),
+      schema)
+    val r = spark.createDataFrame(java.util.Arrays.asList(rows(60): _*),
+      schema)
+    val byK = l("k") === r("k")
+    val byKN = byK && l("n") === r("n")
+    for (jt <- Seq("inner", "left_outer", "right_outer", "left_semi",
+        "left_anti"); (name, on) <- Seq("k" -> byK, "(k, n)" -> byKN))
+      assert(asSpark(s"$jt on $name", l.join(r, on, jt)) == 1,
+        s"$jt on $name was not planned on one long key")
+    val rewritten = Seq(
+      "k <=> k, n <=> n" -> l.join(r, l("k") <=> r("k") && l("n") <=> r("n")),
+      "d = d" -> l.join(r, l("d") === r("d")),
+      "d = d, left outer" -> l.join(r, l("d") === r("d"), "left_outer"),
+      "k = k and v < v" -> l.join(r, byK && l("v") < r("v")))
+    rewritten.foreach { case (what, df) =>
+      assert(asSpark(what, df) == 1, s"$what was not planned on one long key")
+    }
+    // NaN matches NaN and -0.0 matches 0.0, as in Spark's own join
+    val zeros = l.where(l("d") === 0.0).count() * r.where(r("d") === 0.0)
+      .count()
+    val nans = l.where(l("d").isNaN).count() * r.where(r("d").isNaN).count()
+    assert(l.join(r, l("d") === r("d")).where(l("d") === 0.0 || l("d").isNaN)
+      .count() == zeros + nans)
+    l.createOrReplaceTempView("lkbj_l")
+    r.createOrReplaceTempView("lkbj_r")
+    // a NULL in the subquery empties NOT IN, and AQE then drops the join:
+    // the plan is asserted on a subquery without NULLs
+    def notIn(where: String) = spark.sql(
+      s"SELECT * FROM lkbj_l WHERE k NOT IN (SELECT k FROM lkbj_r $where)")
+    val naaj = notIn("WHERE k IS NOT NULL")
+    naaj.collect()
+    assert(SparkTestBase.broadcastJoins(naaj.queryExecution.executedPlan)
+      .exists(_.isNullAwareAntiJoin), "NOT IN is no null-aware anti join")
+    val kept = Seq(
+      "NOT IN" -> notIn(""),
+      "NOT IN, no NULL" -> notIn("WHERE k IS NOT NULL"),
+      "(i, j)" -> l.join(r, l("i") === r("i") && l("j") === r("j")),
+      // the hint plans no outer join, so Spark falls back to a broadcast
+      // by size; the strategy follows only JoinSelection's first,
+      // hint-only choice
+      "hint fallback" -> l.join(r.hint("shuffle_replicate_nl"), byK,
+        "left_outer"))
+    kept.foreach { case (what, df) =>
+      assert(asSpark(what, df) == 0, s"$what was planned on one long key")
+    }
+    // Spark's analyzer joins collated strings on their binary collation
+    // key, which is binary-stable; a collated key that reached the
+    // planner as is would stay Spark's
+    def lcase(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("k", collate(df("k"), "UTF8_LCASE"))
+    assert(asSpark("UTF8_LCASE k", lcase(l).as("a")
+      .join(lcase(r).as("b"), col("a.k") === col("b.k"))) == 1)
+    def planned(side: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): Int = {
+      import org.apache.spark.sql.catalyst.expressions.EqualTo
+      import org.apache.spark.sql.catalyst.plans.Inner
+      import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+      val (a, b) = (GraftBridge.analyzed(side(l).select("k")),
+        GraftBridge.analyzed(side(r).select("k")))
+      plans.LongKeyBroadcastJoin(Join(a, b, Inner,
+        Some(EqualTo(a.output.head, b.output.head)), JoinHint.NONE)).size
+    }
+    assert(planned(identity) == 1 && planned(lcase) == 0,
+      "a collated key was planned on one long key")
+  }
+
+  test("a date-keyed join under a dynamic partition pruning filter stays " +
+    "Spark's, and still prunes") {
+    val ss = spark
+    import ss.implicits._
+    val dir = Files.createTempDirectory("graft_lkbj_dpp").toString
+    spark.range(0, 300).select(($"id" % 7).as("v"),
+      date_add(lit("2024-01-01").cast("date"), ($"id" % 10).cast("int"))
+        .as("day"))
+      .write.partitionBy("day").parquet(s"$dir/fact")
+    spark.range(0, 10).select(
+      date_add(lit("2024-01-01").cast("date"), $"id".cast("int")).as("day"),
+      ($"id" % 3).as("tag")).write.parquet(s"$dir/dim")
+    def q = spark.read.parquet(s"$dir/fact")
+      .join(spark.read.parquet(s"$dir/dim").where($"tag" === 1L), "day")
+    val df = q
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    assert(p.toString.contains("dynamicpruning"), s"no pruning filter:\n$p")
+    assert(asSpark("date key under DPP", q) == 0,
+      s"a join under a pruning filter was planned on one long key:\n$p")
+  }
 }

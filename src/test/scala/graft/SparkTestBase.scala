@@ -15,4 +15,35 @@ object TestSession {
 abstract class SparkTestBase extends AnyFunSuite {
   def spark: SparkSession = TestSession.spark
   def sf: String = TestSession.sf
+
+  /** Runs `body` with [[graft.plans.LongKeyBroadcastJoin]] out of the
+    * session's planner, so every join is planned as Spark plans it. */
+  def withoutLongKeyJoin[T](body: => T): T = {
+    GraftExtensions.installStrategies(spark)
+    val all = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies =
+      all.filterNot(_ == graft.plans.LongKeyBroadcastJoin)
+    try body finally spark.experimental.extraStrategies = all
+  }
+}
+
+object SparkTestBase {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+    QueryStageExec}
+  import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+
+  /** The broadcast hash joins of a plan, inside AQE and its stages. */
+  def broadcastJoins(p: SparkPlan): Seq[BroadcastHashJoinExec] = p.collect {
+    case j: BroadcastHashJoinExec => Seq(j)
+    case a: AdaptiveSparkPlanExec => broadcastJoins(a.executedPlan)
+    case q: QueryStageExec => broadcastJoins(q.plan)
+  }.flatten
+
+  /** Is this join planned on the one long key `h(keys)`? */
+  def longKeyed(j: BroadcastHashJoinExec): Boolean = j.leftKeys match {
+    case Seq(k) => k.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.XxHash64])
+    case _ => false
+  }
 }

@@ -29,4 +29,8 @@ object SmallMemoryTask {
       tmm.cleanUpAllAllocatedMemory()
     }
   }
+
+  /** The page size of this JVM's memory manager: the first page every
+    * `BytesToBytesMap` it builds allocates. */
+  def pageSizeBytes: Long = SparkEnv.get.memoryManager.pageSizeBytes
 }

@@ -39,7 +39,9 @@ prints the set of values each side's traced tries showed, marking with
 `*` each count whose two sets differ and with `?` each count whose base
 values did not repeat (a count that moves between runs of one build is
 no evidence of a change); then each side's traced `total_s` and `cpu_s`
-per key, the median over its runs (min-max when N > 1); it prints no
+per key, and the `live_heap_mb` of the key's untraced tries (the live heap
+after the try, read after a full GC with its plan and pins still held),
+each the median over its runs (min-max when N > 1); it prints no
 verdict. The raw records go to
 <workdir>/<side>-keys-<round>/raw.json. Exit code 1 if any try of
 either side failed.
@@ -64,6 +66,8 @@ KEY_COUNTS = ["rows", "sched.jobs", "sched.stages", "sched.tasks",
               "shuffle.write_bytes"]
 # Per-key seconds of one traced try, printed after the counts.
 KEY_TIMES = ["total_s", "cpu_s"]
+# Per-key values of the untraced try records, printed after the times.
+KEY_TRIES = ["live_heap_mb"]
 KEYS_LIMIT_S = 1800
 # Runs inside one copy: builds it with perfbench/run.py's build and runs
 # one traced queries JVM with run.py's launcher.
@@ -172,9 +176,16 @@ def traced_values(raws, key, m):
             for s in ("base", "change")}
 
 
+def try_values(raws, key, m):
+    """Per side, metric `m` of each try record of `key` in each run."""
+    return {s: [t.get(m) for r in raws[s] for t in (r or {}).get("tries", [])
+                if t["key"] == key]
+            for s in ("base", "change")}
+
+
 def timed(vals):
-    """One time over a side's runs, as text: the median, and min-max
-    when there was more than one run."""
+    """One time or size over a side's runs, as text: the median, and
+    min-max when there was more than one value."""
     vals = [v for v in vals if v is not None]
     if not vals:
         return "-"
@@ -210,8 +221,8 @@ def compare_keys(a, sides, workdir):
             print(f"{k if i == 0 else '':26s} {m:20s} "
                   f"{shown(vals['base']):>20s} "
                   f"{shown(vals['change']):>20s}{mark}")
-        for m in KEY_TIMES:
-            vals = traced_values(raws, k, m)
+        for m, vals in ([(m, traced_values(raws, k, m)) for m in KEY_TIMES]
+                        + [(m, try_values(raws, k, m)) for m in KEY_TRIES]):
             print(f"{'':26s} {m:20s} {timed(vals['base']):>20s} "
                   f"{timed(vals['change']):>20s}")
     ok = True
