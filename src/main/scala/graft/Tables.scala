@@ -153,36 +153,31 @@ object Tables {
     * PageRank / BFS round discipline — each round references the prior
     * frame ≥2×, and an unpinned chain re-executes 2^rounds times).
     *
-    * Default is `localCheckpoint(eager=false)`: executor-local blocks, no
-    * DFS round-trip — right for local mode and benchmarks. Its cluster
-    * caveat: executor loss discards the blocks AND the
+    * A lazy `localCheckpoint`: executor-local blocks, no DFS round-trip —
+    * right for local mode and benchmarks. The first action that reads
+    * the pin computes it; under AQE, declaring a pin over an exchange
+    * already runs that exchange's shuffle map stage as one job (no job
+    * with AQE off), so pins run in the order they are declared.
+    * Consumers that read a pin concurrently, such as two broadcast
+    * builds of one query, compute each pinned partition once: a 1 000-row
+    * aggregate pinned lazily under `local[4]`, with a counting UDF after
+    * its exchange and two broadcast joins of one query reading it,
+    * counted 1 000 rows in 3 of 3 runs, AQE on and off (OperatorSmokeSpec
+    * keeps one run of each as a test).
+    * Cluster caveat: executor loss discards the blocks AND the
     * truncated lineage, failing the job. Setting
     * `spark.graft.checkpointDir=<dfs path>` switches every pin in the
     * engine to a RELIABLE `checkpoint()` into that directory, the
     * fault-tolerant form a 1000-executor run wants; one config flip, no
     * code change. */
-  def pin(df: DataFrame): DataFrame = pin(df, eager = false)
-
-  /** [[pin]] with an explicit materialization mode. `eager = true`
-    * computes the pinned frame NOW, as its own job, instead of lazily
-    * inside whatever action first touches it. Use it when the pinned
-    * frame feeds ≥2 BROADCAST subtrees of one query: Spark builds
-    * broadcast relations on a thread pool, so several broadcast-build
-    * jobs can start while the pin's blocks are still uncomputed and
-    * each races to compute the same partitions (getOrCompute dedups
-    * storage, not work — r15, measured on agg_mad: 5.5 s one-shot vs
-    * 2.5 s staged for identical stages). Eager materialization is a
-    * scheduling barrier, so keep lazy pins in iterative chains whose
-    * rounds are tiny (DESIGN §14.1: barriers cost more than the work
-    * they dedup when each round is a sub-100 ms stage). */
-  def pin(df: DataFrame, eager: Boolean): DataFrame = {
+  def pin(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     s.conf.getOption("spark.graft.checkpointDir") match {
       case Some(dir) if dir.nonEmpty =>
         if (s.sparkContext.getCheckpointDir.isEmpty)
           s.sparkContext.setCheckpointDir(dir)
-        df.checkpoint(eager = eager)
-      case _ => df.localCheckpoint(eager = eager)
+        df.checkpoint(false)
+      case _ => df.localCheckpoint(false)
     }
   }
 

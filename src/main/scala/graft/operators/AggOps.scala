@@ -17,65 +17,47 @@ import graft.Tables._
 object AggOps {
   import org.apache.spark.sql.expressions.Window
 
-  private val PrefixInternalCols = Set("bk", "lprev")
+  /** Column names [[countPercentiles]] builds internally: a `grp` of
+    * one of these names would be silently overwritten. */
+  private val ReservedCols = Seq("bk", "lprev", "v", "cnt", "n", "nr",
+    "vmax", "btot", "boff", "pa", "wh", "f", "r", "rr", "pos")
 
   /** Bucket width of [[countPercentiles]]' rank pruning and
     * `agg_gini`'s decomposed rank sum (v div 2¹⁶): sized so the
     * (group, bucket) total table stays dimension-bounded on the cents
     * domains the callers use; a caller over a much wider value domain
-    * would widen it (or recurse once more). (The r13 exclusivePrefix
-    * primitive — cprev for EVERY block via a bucket window + offset
-    * broadcast re-attach — was retired in r15: countPercentiles'
-    * rank lookup is bucket-pruned point selection and gini's Σ i·x
-    * decomposes into bucket-local terms, so no caller needs a full
-    * prefix column anymore.) */
+    * would widen it (or recurse once more). */
   private[graft] val SelBucket = 65536L
 
   /** Exact linear-interpolation percentiles over a NON-NEGATIVE
     * integer-domain value column WITHOUT percentile()'s one-reducer
-    * buffering contract (r12 — the last single-reducer shape in the
-    * agg family, removed the same way agg_gini's rank was): rows
-    * hash-collapse to (group, value, cnt) tie blocks (the only
-    * row-scaled shuffle, map-side combinable); rank lookup is then
-    * BUCKET-PRUNED selection (r15 — replaces the r12–r14 full
-    * two-level prefix sum, which computed an exclusive running count
-    * for EVERY block: a row-scaled (group, bucket)-keyed window sort
-    * plus an offset broadcast re-attached to every block, the two most
-    * expensive stages of the r14 plan, paid to answer what is only a
-    * per-rank point query): bucket totals collapse the blocks to a
-    * (group, v div 2¹⁶) table (map-side combinable, the only other
-    * row-scaled pass); a bucket-count-sized running sum per group
-    * locates, for each requested rank, THE one bucket containing it;
-    * and only that bucket's blocks (value-domain-bounded, corpus-
-    * independent) are ordered — a tiny window — to select the boundary
-    * block. No task ever orders a group's full value set, and no
-    * row-scaled window or broadcast-to-all-blocks attach exists at
-    * all. Interpolation happens in the CALLER's domain:
-    * boundary values first rescale as fl(v/scale) — one correctly-
-    * rounded division, bit-identical to the double the oracle's
-    * quantile_cont sees — and then the shared (1-f)·lo + f·hi
-    * definition applies, so the whole chain is the SAME sequence of
-    * IEEE ops as percentile() over the rescaled column (r12
-    * self-review: interpolating in the integer domain and dividing
-    * AFTER adds a rounding step the oracle doesn't share, which can
-    * flip round6 exactly at its half boundary). Input: (grp,
-    * v BIGINT ≥ 0); nulls are ignored for ranks like percentile(),
-    * but `n` counts ALL input rows (count(*) parity — a group whose
-    * values are all NULL still emits its row, with NULL percentiles).
-    * Output: one row per group — n, vmax (the group max, free from
-    * the prefix-sum table), and one DOUBLE per requested (alias, p).
+    * buffering contract. Input: (grp, v BIGINT ≥ 0, cnt) tie blocks,
+    * each weighing `cnt` occurrences of `v`; raw rows collapse to them
+    * with `pin(rows.groupBy(grp, v).agg(count(lit(1)).as("cnt")))`.
+    * Every consumer below scans the input, so pass a pinned or cheap
+    * frame. Blocks need no (grp, v) uniqueness: duplicate blocks of one
+    * value sum into the same bucket total, and the boundary window's
+    * crossing row yields the same v whichever duplicate crosses.
     *
-    * Pre-counted input: with `preCounted =
-    * true` the input must carry a `cnt` column and each row is a
-    * PRE-AGGREGATED tie block weighing `cnt` occurrences of `v`. An
-    * EXPLICIT parameter, not a cnt-column sniff (r13 review: an
-    * unrelated column that happens to be named cnt must never
-    * silently switch the semantics). A NULL-v block's cnt still feeds
-    * `n` (count(*) parity as above). Since r15's bucket-pruned
-    * selection, pre-counted input is consumed as-is and needs NO
-    * (grp, v) uniqueness — duplicate blocks of one value sum into the
-    * same bucket total and the boundary window's crossing row yields
-    * the same v whichever duplicate crosses.
+    * Rank lookup is BUCKET-PRUNED selection: bucket totals collapse the
+    * blocks to a (group, v div 2¹⁶) table (map-side combinable); a
+    * bucket-count-sized running sum per group locates, for each
+    * requested rank, THE one bucket containing it; and only that
+    * bucket's blocks (value-domain-bounded, corpus-independent) are
+    * ordered — a tiny window — to select the boundary block. No task ever orders a group's full value set, and no
+    * row-scaled window or broadcast-to-all-blocks attach exists.
+    * Interpolation happens in the CALLER's domain: boundary values
+    * first rescale as fl(v/scale) — one correctly-rounded division,
+    * bit-identical to the double the oracle's quantile_cont sees — and
+    * then the shared (1-f)·lo + f·hi definition applies, so the whole
+    * chain is the SAME sequence of IEEE ops as percentile() over the
+    * rescaled column (interpolating in the integer domain and dividing
+    * AFTER would add a rounding step the oracle doesn't share, which
+    * can flip round6 exactly at its half boundary). NULL-v blocks are
+    * ignored for ranks like percentile(), but their cnt feeds `n`
+    * (count(*) parity — a group whose values are all NULL still emits
+    * its row, with NULL percentiles). Output: one row per group — n,
+    * vmax (the group max), and one DOUBLE per requested (alias, p).
     *
     * Boundary-equality note: the finish ALWAYS computes
     * (1−f)·lo + f·hi, even when vlo == vhi, because DuckDB's
@@ -85,29 +67,21 @@ object AggOps {
     * (round6-flippable only at an exact half boundary); the
     * InvariantSpec byte-equality tests are therefore corpus/seed-
     * pinned regressions, not a universal theorem. */
-  private[graft] def countPercentiles(vals0: org.apache.spark.sql.DataFrame,
-      grp: String, ps: Seq[(String, Double)], scale: Double = 1.0,
-      preCounted: Boolean = false): org.apache.spark.sql.DataFrame = {
-    require(preCounted == vals0.columns.contains("cnt"),
-      if (preCounted)
-        "countPercentiles: preCounted input must carry a cnt column"
-      else
-        "countPercentiles: input carries a cnt column but preCounted " +
-          "is false — pass preCounted = true or drop/rename the column")
+  private[graft] def countPercentiles(blocks: org.apache.spark.sql.DataFrame,
+      grp: String, ps: Seq[(String, Double)],
+      scale: Double = 1.0): org.apache.spark.sql.DataFrame = {
+    // Reserved-name guard: grp is threaded through the internal
+    // bucket/selection frames and this method's own n/nr/vmax
+    // attachments — a collision silently overwrites it. Lower-cased:
+    // column resolution is case-insensitive by default.
+    require(!ReservedCols.contains(grp.toLowerCase(java.util.Locale.ROOT)),
+      s"countPercentiles: grp column '$grp' collides with a reserved " +
+        s"column name (${ReservedCols.mkString(", ")})")
+    require(blocks.columns.contains("cnt"),
+      "countPercentiles: input must carry a cnt column of tie-block " +
+        "weights; collapse raw rows with groupBy(grp, v) and count")
     require(scale > 0 && !scale.isInfinite,
       s"countPercentiles: scale must be a positive finite double, got $scale")
-    // Reserved-name guard: grp is threaded through the
-    // internal bucket/selection frames and this method's own
-    // n/nr/vmax attachments — a collision silently overwrites it.
-    // Lower-cased like exclusivePrefix's guard (r14 review: column
-    // resolution is case-insensitive by default).
-    require(!PrefixInternalCols(grp.toLowerCase(java.util.Locale.ROOT)) &&
-      !Set("v", "cnt", "n", "nr", "vmax",
-        "btot", "boff", "pa", "wh", "f", "r", "rr", "pos")(
-        grp.toLowerCase(java.util.Locale.ROOT)),
-      s"countPercentiles: grp column '$grp' collides with a reserved " +
-        "column name (bk, lprev, v, cnt, n, nr, vmax, " +
-        "btot, boff, pa, wh, f, r, rr, pos)")
     // An empty request list would die at aggs.head during plan
     // construction — fail loud and named instead.
     require(ps.nonEmpty,
@@ -118,44 +92,22 @@ object AggOps {
       "countPercentiles: aliases must be distinct and none of " +
         s"($grp, n, vmax), got $aliases")
     // weights are a RUNTIME contract: a zero/negative/NULL cnt block
-    // would silently corrupt ranks, n, and vmax (r13 review) — one
-    // codegen'd branch per block raises instead
+    // would silently corrupt ranks, n, and vmax — one codegen'd branch
+    // per block raises instead
     val cntOk = when(col("cnt").isNull || col("cnt") <= 0L,
         raise_error(concat(
           lit("countPercentiles: cnt must be a positive count, got "),
           coalesce(col("cnt").cast("string"), lit("NULL"))))
           .cast("long"))
       .otherwise(col("cnt"))
-    // The tie-block collapse fans out to every consumer below (ntab,
-    // bucket totals, boundary detail), whose exchange subtrees differ
-    // (the NULL-v filter pushes below one aggregate but not the
-    // other), so ReuseExchange cannot dedupe them — unpinned, the
-    // row-scaled collapse re-executed once per consumer (agg_mad's
-    // deviation pass read 1.9 s steady vs 0.12 s for the same work over
-    // a pinned input, measured at 8b67029). Pin the collapse:
-    // the value-domain-sized block table writes once and every
-    // consumer reads blocks. EAGER (r15): two of the consumers are
-    // BROADCAST subtrees, whose build jobs run concurrently on the
-    // broadcast thread pool — with a lazy pin they start while the
-    // collapse blocks are still uncomputed and each re-executes the
-    // row-scaled collapse (getOrCompute dedups storage, not in-flight
-    // work). Materializing the collapse first costs one scheduling
-    // barrier and removes the duplicated pass.
-    // preCounted inputs are consumed AS-IS, duplicates included (r15):
-    // unlike the retired prefix-sum design, nothing below requires
-    // (grp, v) uniqueness — bucket totals are sums, and the boundary
-    // window's crossing row selects the same v whichever of two
-    // equal-valued blocks crosses — so the former internal re-collapse
-    // (a second row-scaled shuffle + pin per pass; agg_mad's deviation
-    // pass paid it on every run) is gone. The caller's own frame
-    // (pinned or cheap) is scanned map-side by each consumer instead.
-    val cnts =
-      if (preCounted) vals0.select(col(grp), col("v"), cntOk.as("cnt"))
-      else
-        pin(vals0.groupBy(col(grp), col("v")).agg(count(lit(1)).as("cnt")),
-          eager = true)
+    // cnts fans out to ntab, the bucket totals and the boundary detail,
+    // whose exchange subtrees differ (the NULL-v filter pushes below one
+    // aggregate but not the other), so ReuseExchange cannot dedupe
+    // them: each scans the caller's frame map-side, which is why a
+    // row-scaled caller pins its collapse.
+    val cnts = blocks.select(col(grp), col("v"), cntOk.as("cnt"))
     // vmax rides the same pass as n/nr (max ignores NULL v) instead of
-    // a second all-blocks aggregate. Pinned (r15): ntab feeds the
+    // a second all-blocks aggregate. Pinned: ntab feeds the
     // request frame AND the final left join; column pruning narrows
     // the two subtrees differently (reqs keeps only nr), so exchange
     // reuse cannot dedupe them and the blocks-scan aggregate ran
@@ -165,9 +117,8 @@ object AggOps {
       max(col("v")).as("vmax")))
     val nn = cnts.where(col("v").isNotNull)
       .withColumn("bk", expr(s"v div $SelBucket"))
-    // Bucket totals: the only other row-scaled pass, a map-side
-    // combinable hash agg to a (group, bucket) table whose size is
-    // value-domain-, not corpus-, bounded.
+    // Bucket totals: a map-side combinable hash agg to a (group,
+    // bucket) table whose size is value-domain-, not corpus-, bounded.
     val btot = nn.groupBy(col(grp), col("bk"))
       .agg(sum(col("cnt")).as("btot"))
     val wOff = Window.partitionBy(grp).orderBy("bk")
@@ -326,8 +277,10 @@ object AggOps {
     // one-reducer value buffering at any group width.
     "agg_percentile" -> ((s: SparkSession, d: String) =>
       countPercentiles(
-          t(s, d, "orders").select(col("o_orderstatus"),
-            (dec2(col("o_totalprice")) * 100).cast("long").as("v")),
+          pin(t(s, d, "orders").select(col("o_orderstatus"),
+              (dec2(col("o_totalprice")) * 100).cast("long").as("v"))
+            .groupBy(col("o_orderstatus"), col("v"))
+            .agg(count(lit(1)).as("cnt"))),
           "o_orderstatus", Seq(("p50", 0.5), ("p90", 0.9)), scale = 100)
         .select(col("o_orderstatus"),
           round6(col("p50")).as("p50"),
@@ -568,34 +521,23 @@ object AggOps {
       val xc = (dec2(col("l_extendedprice")) * 100).cast("long")
       val base = t(s, d, "lineitem")
         .select(col("l_returnflag"), xc.as("xc"))
-      // The raw corpus crosses the wire ONCE.
-      // Both percentile passes consume the SAME pinned tie-collapsed
-      // (group, value, cnt) table — dev2 = |2·xc − 2·med| depends
-      // only on xc, so pass 2's blocks derive from pass 1's with the
-      // counts carried over (two xc blocks symmetric around the
-      // median map to ONE dev2 value; countPercentiles' bucket-pruned
-      // selection consumes such duplicate blocks as-is — their bucket totals sum and the boundary window's
-      // crossing row yields the same v either way — so no re-collapse
-      // exchange exists anywhere in pass 2). Pinning the collapsed
-      // table is what makes the fusion real: unpinned, the dev2
-      // subtree would re-execute the row-scaled collapse.
-      // eager: blocks feeds pass 1's THREE consumers, two of
-      // them broadcast-build jobs that run concurrently — a lazy pin
-      // lets those jobs race to re-execute the row-scaled collapse
-      // before any block lands (see countPercentiles' internal-pin
-      // note); materializing it first is the staged-floor schedule
+      // The raw corpus crosses the wire ONCE: both percentile passes
+      // consume the SAME pinned (group, value, cnt) table. dev2 =
+      // |2·xc − 2·med| depends only on xc, so pass 2's blocks derive
+      // from pass 1's with the counts carried over (two xc blocks
+      // symmetric around the median map to ONE dev2 value, which
+      // countPercentiles takes as duplicate blocks), and no exchange
+      // in pass 2 re-collapses rows. Unpinned, every consumer of both
+      // passes would re-execute the row-scaled collapse.
       val blocks = pin(base
         .groupBy(col("l_returnflag"), col("xc"))
-        .agg(count(lit(1)).as("cnt")), eager = true)
-      // pinned: the group-count-sized median dim feeds BOTH the
-      // deviation pass and the final attach (both broadcasts — same
-      // race, and eager here also forces pass 1 to finish before
-      // pass 2's jobs start instead of interleaving on the pool)
+        .agg(count(lit(1)).as("cnt")))
+      // pinned: the group-count-sized median dim feeds both the
+      // deviation pass and the final attach
       val med = pin(countPercentiles(
         blocks.select(col("l_returnflag"), col("xc").as("v"),
           col("cnt")),
-        "l_returnflag", Seq(("med", 0.5)),
-        preCounted = true), eager = true)
+        "l_returnflag", Seq(("med", 0.5))))
       val dev2 = blocks
         .join(broadcast(med.select(col("l_returnflag"), col("med"))),
           "l_returnflag")
@@ -605,9 +547,7 @@ object AggOps {
       // scale = 2: boundary values rescale as fl(dev2/2) = the exact
       // |xc − med| doubles percentile() would interpolate — identical
       // IEEE chain, no post-hoc halving of the interpolant
-      countPercentiles(dev2,
-          "l_returnflag", Seq(("mad", 0.5)), scale = 2,
-          preCounted = true)
+      countPercentiles(dev2, "l_returnflag", Seq(("mad", 0.5)), scale = 2)
         .select(col("l_returnflag"), col("n"),
           (col("vmax") / lit(2.0)).as("maxdev"), col("mad"))
         .join(broadcast(med.select(col("l_returnflag"), col("med"))),

@@ -18,12 +18,14 @@ object GraftOps {
     *
     * Memory bound: each pass holds one ≤k-row heap PER DISTINCT GROUP
     * seen in a partition — O(groups-per-partition × k × row size) —
-    * charged to the task's execution memory; when Spark's memory manager
-    * denies the next page the partition switches to a spilling external
-    * sort on (group, order) and streams first-k-per-group from the sorted
-    * run (the hash aggregate's discipline), so high group cardinality
-    * degrades to sort cost instead of OOM. The `numSortFallbacks` SQL
-    * metric counts partitions that switched. Group columns must be
+    * charged to the task's execution memory. When Spark's memory manager
+    * denies the next page, that partition switches to a spilling
+    * external sort on (group, order) and streams first-k-per-group from
+    * the sorted run (the hash aggregate's discipline), so high group
+    * cardinality degrades to sort cost instead of OOM; a partial-pass
+    * partition that has dropped no row yet passes its input through to
+    * the exchange instead. The `numSortFallbacks` and `numPassThroughs`
+    * SQL metrics count those partitions. Group columns must be
     * orderable, as that sort needs. A frame known unique on a subset of
     * `groupCols` (Catalyst `distinctKeys`, e.g. after a groupBy on them,
     * or declared by [[uniqueOn]]) holds one row per group, so it plans
@@ -127,29 +129,27 @@ object GraftOps {
   }
 
   /** Exact grouped linear-interpolation percentiles with NO
-    * single-reducer value buffering (r12/r13): the `percentile()` /
-    * `quantile_cont` order statistic computed count-based — rows
-    * hash-collapse to (group, value, cnt) tie blocks, ranks resolve
-    * through bucket-pruned selection (r15 — bucket totals locate each
-    * rank's one boundary bucket; only that bucket's blocks are ever
-    * ordered), boundary values rescale as fl(v/scale) BEFORE
-    * interpolating. Input: `grp` column + a non-negative BIGINT `v`
-    * column; `ps` = (output alias, fraction). Output per group: `n`
-    * (count(*) over ALL rows — NULLs included; ranks ignore NULLs
-    * like percentile()), `vmax`, one DOUBLE per requested fraction.
-    * `preCounted = true` reads an existing `cnt` column as tie-block
-    * weights (multi-pass callers scan their corpus once), duplicates
-    * of one (grp, v) allowed. Byte-parity notes in
-    * [[AggOps.countPercentiles]]. */
-  def countPercentiles(vals: DataFrame, grp: String,
-      ps: Seq[(String, Double)], scale: Double = 1.0,
-      preCounted: Boolean = false): DataFrame = {
+    * single-reducer value buffering: the `percentile()` /
+    * `quantile_cont` order statistic computed count-based from
+    * (grp, v, cnt) tie blocks — ranks resolve through bucket-pruned
+    * selection (bucket totals locate each rank's one boundary bucket;
+    * only that bucket's blocks are ever ordered), boundary values
+    * rescale as fl(v/scale) BEFORE interpolating. Input: a `grp`
+    * column, a non-negative BIGINT `v` column and a positive `cnt`
+    * weight per block, duplicates of one (grp, v) allowed; collapse raw
+    * rows with `pin(rows.groupBy(grp, v).agg(count(lit(1)).as("cnt")))`.
+    * `ps` = (output alias, fraction). Output per group: `n` (Σcnt over
+    * ALL blocks — NULL `v` included; ranks ignore NULLs like
+    * percentile()), `vmax`, one DOUBLE per requested fraction.
+    * Byte-parity notes in [[AggOps.countPercentiles]]. */
+  def countPercentiles(blocks: DataFrame, grp: String,
+      ps: Seq[(String, Double)], scale: Double = 1.0): DataFrame = {
     require(ps.nonEmpty, "at least one (alias, fraction) is required")
     ps.foreach { case (_, p) =>
       require(p >= 0.0 && p <= 1.0, s"fraction $p outside [0, 1]") }
     // scale/alias domains and the cnt weight contract are validated
     // inside AggOps.countPercentiles (shared with internal callers)
-    AggOps.countPercentiles(vals, grp, ps, scale, preCounted)
+    AggOps.countPercentiles(blocks, grp, ps, scale)
   }
 
   /** Approximate k-NN cosine graph via top-2 multi-probe IVF (r11):

@@ -154,8 +154,9 @@ object JoinOps {
         .agg(count(lit(1)).as("cnt"),
           sumDec(col("l_extendedprice")).as("sum_price"))
         .orderBy("l_returnflag")
-      // DataFrame analysis is eager, so the subquery is resolved by now;
-      // drop the view or a long-lived session's catalog grows per call
+      // a DataFrame is analyzed when it is built, so the subquery is
+      // resolved by now; drop the view or a long-lived session's
+      // catalog grows per call
       s.catalog.dropTempView(view)
       out
     }),

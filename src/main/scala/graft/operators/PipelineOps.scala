@@ -554,24 +554,21 @@ object PipelineOps {
         .agg(count(lit(1)).as("c"))
         .agg(count(lit(1)).as("n_uniq"))
       // count-based exact global median of the integral q6 domain
-      // (AggOps.countPercentiles, r12 — prefix-sum parallel across
-      // value buckets even for this single global group). scale = 1e6:
-      // boundary values rescale as fl(q6/1e6) — the exact quality
-      // doubles percentile() would interpolate, so the IEEE chain is
-      // identical to the oracle's quantile_cont (r12 self-review: an
-      // integer-domain interpolation divided AFTER would add a
-      // rounding step that can flip round6 at its half boundary).
-      // r13 (§15.2.1 discipline): the card stats and the median share
-      // ONE corpus scan — docs collapse to (lang, q6) blocks carrying
-      // cnt + token aggregates (every card stat is block-decomposable:
-      // n_docs = Σcnt, n_langs = countDistinct over blocks, token
-      // min/max/sum fold through the per-block folds, sum_q6 = Σ q6·cnt),
-      // pinned because the quant and card subtrees both consume it.
-      // Only the exact-dup scan stays row-scaled — md5(text) cannot
-      // decompose over quality blocks. quant's group key is the
-      // constant 1, so (g, v) is NOT unique across languages — fine
-      // since r15: countPercentiles' bucket-pruned selection consumes
-      // duplicate pre-counted blocks as-is (bucket totals sum them).
+      // (AggOps.countPercentiles). scale = 1e6: boundary values rescale
+      // as fl(q6/1e6) — the exact quality doubles percentile() would
+      // interpolate, so the IEEE chain is identical to the oracle's
+      // quantile_cont (an integer-domain interpolation divided AFTER
+      // would add a rounding step that can flip round6 at its half
+      // boundary). The card stats and the median share ONE corpus
+      // scan: docs collapse to (lang, q6) blocks carrying cnt + token
+      // aggregates (every card stat is block-decomposable: n_docs =
+      // Σcnt, n_langs = countDistinct over blocks, token min/max/sum
+      // fold through the per-block folds, sum_q6 = Σ q6·cnt), pinned
+      // because the quant and card subtrees both consume it. Only the
+      // exact-dup scan stays row-scaled — md5(text) cannot decompose
+      // over quality blocks. quant's group key is the constant 1, so
+      // (g, v) is NOT unique across languages; countPercentiles sums
+      // duplicate blocks of one value.
       val blocks = pin(docs
         .groupBy(col("lang"), col("q6"))
         .agg(count(lit(1)).as("cnt"),
@@ -581,7 +578,7 @@ object PipelineOps {
       val quant = AggOps.countPercentiles(
           blocks.select(lit(1).as("g"), col("q6").as("v"),
             col("cnt")), "g",
-          Seq(("q6p", 0.5)), scale = 1e6, preCounted = true)
+          Seq(("q6p", 0.5)), scale = 1e6)
         .select(round6(col("q6p")).as("q_p50"))
       val card = blocks.agg(
         // coalesce: count(*) over an empty corpus is 0, and
@@ -654,12 +651,12 @@ object PipelineOps {
     // threshold dim (broadcast) → map-side gate → summary agg; the
     // corpus crosses exactly two lang-keyed shuffles. The threshold is
     // round6'd BEFORE the comparison in both engines, so an
-    // interpolation ulp can never flip a boundary document. r12: the
+    // interpolation ulp can never flip a boundary document. The
     // exact p75 threshold is COUNT-BASED (AggOps.countPercentiles over
     // the integral quality·10⁶ domain — no per-language value
     // buffering; scale = 1e6 rescales the boundary values to the
     // exact quality doubles BEFORE interpolating, so the IEEE chain
-    // is identical to percentile(quality) — r12 self-review); n_docs
+    // is identical to percentile(quality)); n_docs
     // is countPercentiles' all-rows n (count(*) parity even when a
     // doc's quality is NULL).
     "pipe_quality_cut" -> ((s: SparkSession, d: String) => {
@@ -669,8 +666,8 @@ object PipelineOps {
       // The corpus crosses the wire ONCE —
       // one row-scaled collapse to (lang, q6) tie blocks carrying
       // cnt + token sums, pinned; the p75 threshold consumes the
-      // blocks pre-counted (countPercentiles sum(cnt) path) and the
-      // gate + summary run over the SAME blocks, value-domain-sized.
+      // blocks and the gate + summary run over the SAME blocks,
+      // value-domain-sized.
       // Valid because every kept-side stat is block-decomposable:
       // kept = Σcnt, kept_tokens = Σtok, min_kept_q = fl(min q6/1e6)
       // (÷1e6 is monotone and q6 ↦ fl(q6/1e6) is EXACTLY the round6'd
@@ -679,7 +676,7 @@ object PipelineOps {
       // the gate compares that same double, so a block is kept iff
       // each of its documents would have been.
       // q6Of(quality), not q6Col: gate and threshold must flow from
-      // the ONE quality derivation bound above (r13 review)
+      // the ONE quality derivation bound above
       val blocks = pin(docs
         .groupBy(col("lang"),
           TextAnalysisOps.q6Of(col("quality")).as("q6"))
@@ -687,8 +684,7 @@ object PipelineOps {
           sum(col("n_tokens")).cast("long").as("tok")))
       val thr = AggOps.countPercentiles(
           blocks.select(col("lang"), col("q6").as("v"), col("cnt")),
-          "lang", Seq(("t6", 0.75)), scale = 1e6,
-          preCounted = true)
+          "lang", Seq(("t6", 0.75)), scale = 1e6)
         .select(col("lang"), round6(col("t6")).as("thr"),
           col("n").as("n_docs"))
       blocks.join(broadcast(thr), "lang")

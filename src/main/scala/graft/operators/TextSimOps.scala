@@ -234,7 +234,7 @@ object TextSimOps {
     *
     * Pin retention: localCheckpoint blocks persist until the
     * checkpointed RDD is GC'd and reaped by the ContextCleaner — there is
-    * no handle here to unpersist eagerly (the frames escape into
+    * no handle here to unpersist early (the frames escape into
     * arbitrary downstream plans). Acceptable because each Verify/Bench
     * key runs in its own query and the harness sweeps its pins; a
     * long-lived session that loops pair operators bounds retention via

@@ -134,7 +134,9 @@ case class TopKPerGroupExec(
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numSortFallbacks" -> SQLMetrics.createMetric(sparkContext,
-      "partitions that fell back to external sort"))
+      "partitions that fell back to external sort"),
+    "numPassThroughs" -> SQLMetrics.createMetric(sparkContext,
+      "partial partitions passed through when denied memory"))
 
   /** Memory bound and the escape hatch: the per-partition heap map holds
     * ≤ k rows per DISTINCT group key seen in that partition, on-heap —
@@ -145,7 +147,11 @@ case class TopKPerGroupExec(
     * a spilling external sort on (group, order) and streams the first k
     * rows of each group from the sorted run, as Spark's hash aggregate
     * hands over to its external sorter. Rows already evicted by a heap
-    * lost to ≥ k better rows that ARE in the sorter: the switch is exact. */
+    * lost to ≥ k better rows that ARE in the sorter: the switch is exact.
+    * A partial pass whose heaps still hold every row it has read (unique
+    * keys, or groups of ≤ k rows) instead passes its input through
+    * unchanged: the sort would not have shrunk what it read, and the
+    * final pass ranks whatever the exchange brings it. */
   override protected def doExecute(): RDD[InternalRow] =
     child.execute().mapPartitions(partitionTopK(), preservesPartitioning = true)
 
@@ -162,6 +168,7 @@ case class TopKPerGroupExec(
     val sortExec = SortExec(gExprs.map(SortOrder(_, Ascending)) ++ ord,
       global = false, LocalTableScanExec(out, Nil, None))
     val numSortFallbacks = longMetric("numSortFallbacks")
+    val numPassThroughs = longMetric("numPassThroughs")
     iter => {
       val ctx = TaskContext.get()
       val mem = new HeapCharge(GraftBridge.taskMemoryManager(ctx))
@@ -177,7 +184,10 @@ case class TopKPerGroupExec(
       val heaps = new java.util.HashMap[UnsafeRow,
         scala.collection.mutable.PriorityQueue[UnsafeRow]]()
       var overflow = false
+      var read = 0L
+      var kept = 0L
       while (iter.hasNext && !overflow) {
+        read += 1
         val row = unsafe(iter.next())
         val key = groupProj(row)
         var heap = heaps.get(key)
@@ -190,6 +200,7 @@ case class TopKPerGroupExec(
         if (heap.size < limit) {
           heap.enqueue(row.copy())
           grew += row.getSizeInBytes + HeapCharge.RowOverhead
+          kept += 1
         } else if (rowOrd.lt(row, heap.head)) {
           grew += row.getSizeInBytes - heap.dequeue().getSizeInBytes
           heap.enqueue(row.copy())
@@ -201,6 +212,11 @@ case class TopKPerGroupExec(
         heaps.values().iterator().asScala.flatMap { h =>
           if (emitSorted) h.toArray.sorted(rowOrd).iterator else h.iterator
         } ++ { heaps.clear(); mem.release(); Iterator.empty }
+      } else if (!emitSorted && kept == read) {
+        // no row read so far was dropped: emit them and the unread rest
+        numPassThroughs += 1
+        heaps.values().iterator().asScala.flatMap(_.iterator) ++
+          { heaps.clear(); mem.release(); iter }
       } else {
         numSortFallbacks += 1
         mem.release()

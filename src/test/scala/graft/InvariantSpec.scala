@@ -205,24 +205,14 @@ class InvariantSpec extends SparkTestBase {
           round6(expr("percentile(v, 0.5)")).as("p50"),
           round6(expr("percentile(v, 0.9)")).as("p90"))
         .orderBy("g").collect().map(_.toString).toSeq
-      val got = graft.operators.AggOps.countPercentiles(df, "g", ps)
+      val blocks = df.groupBy(col("g"), col("v"))
+        .agg(count(lit(1)).as("cnt"))
+      val got = graft.operators.AggOps.countPercentiles(blocks, "g", ps)
         .select(col("g"), round6(col("p25")).as("p25"),
           round6(col("p50")).as("p50"), round6(col("p90")).as("p90"))
         .orderBy("g").collect().map(_.toString).toSeq
       assert(got == want,
         s"trial $trial (domain $domain) drifts:\n got  $got\n want $want")
-      // the pre-counted tie-block form must agree with the raw path on
-      // the same data — otherwise a cnt-branch regression is visible
-      // only through end-to-end parity of its three callers
-      val blocks = df.groupBy(col("g"), col("v"))
-        .agg(count(lit(1)).as("cnt"))
-      val alt = graft.operators.AggOps.countPercentiles(
-          blocks, "g", ps, preCounted = true)
-        .select(col("g"), round6(col("p25")).as("p25"),
-          round6(col("p50")).as("p50"), round6(col("p90")).as("p90"))
-        .orderBy("g").collect().map(_.toString).toSeq
-      assert(alt == want,
-        s"trial $trial preCounted form drifts:\n got  $alt\n want $want")
     }
   }
 
@@ -294,29 +284,22 @@ class InvariantSpec extends SparkTestBase {
 
   test("countPercentiles rejects contract-violating input loudly " +
     "(r13 review: no silent semantics switch)") {
-    // The pre-counted switch is an explicit parameter, never a
-    // column-name sniff: an unrelated column named cnt must fail fast
-    // rather than silently weight every row.
+    // The input is tie blocks: rows without a cnt weight column must
+    // fail fast rather than be read as anything else.
     val ss = spark
     import ss.implicits._
     val plain = Seq(("A", 1L), ("A", 2L)).toDF("g", "v")
-    val counted = Seq(("A", 1L, 2L), ("A", 2L, 1L)).toDF("g", "v", "cnt")
     val e1 = intercept[IllegalArgumentException] {
       graft.operators.AggOps.countPercentiles(
-        counted, "g", Seq(("p50", 0.5))) // cnt present, flag absent
+        plain, "g", Seq(("p50", 0.5))) // no cnt
     }
-    assert(e1.getMessage.contains("preCounted"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.operators.AggOps.countPercentiles(
-        plain, "g", Seq(("p50", 0.5)), preCounted = true) // no cnt
-    }
-    assert(e2.getMessage.contains("cnt"), e2.getMessage)
+    assert(e1.getMessage.contains("cnt"), e1.getMessage)
     // and the public GraftOps surface validates fractions
-    val e3 = intercept[IllegalArgumentException] {
+    val e2 = intercept[IllegalArgumentException] {
       graft.operators.GraftOps.countPercentiles(
         plain, "g", Seq(("bad", 1.5)))
     }
-    assert(e3.getMessage.contains("fraction"), e3.getMessage)
+    assert(e2.getMessage.contains("fraction"), e2.getMessage)
   }
 
   test("countPercentiles keeps count(*) semantics under NULL values " +
@@ -334,8 +317,10 @@ class InvariantSpec extends SparkTestBase {
       ("A", None), // NULL value still counted in n
       ("Z", None), ("Z", None)) // group with ONLY nulls
       .toDF("g", "v")
+    val blocks = vals.groupBy(col("g"), col("v"))
+      .agg(count(lit(1)).as("cnt"))
     val out = graft.operators.AggOps.countPercentiles(
-      vals, "g", Seq(("p50", 0.5)), scale = 100).collect()
+      blocks, "g", Seq(("p50", 0.5)), scale = 100).collect()
     val a = out.find(_.getString(0) == "A").get
     assert(a.getLong(a.fieldIndex("n")) == 4L,
       s"A.n must be count(*) including the NULL row: $a")

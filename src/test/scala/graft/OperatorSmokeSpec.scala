@@ -72,10 +72,10 @@ class OperatorSmokeSpec extends SparkTestBase {
   test("Harness.sweepPins releases a key's pins and spares earlier ones") {
     val sc = spark.sparkContext
     val outside = Harness.pinSnapshot(spark)
-    val kept = Tables.pin(spark.range(10).toDF(), eager = true)
+    val kept = Tables.pin(spark.range(10).toDF())
     val before = Harness.pinSnapshot(spark)
     val keptIds = before -- outside
-    assert(keptIds.nonEmpty, "the eager pin registered no persistent RDD")
+    assert(keptIds.nonEmpty, "the pin registered no persistent RDD")
     SparkEntry.queries("graph_kcore")(spark, sf).queryExecution.toRdd.count()
     val created = sc.getPersistentRDDs.keySet.toSet -- before
     assert(created.nonEmpty, "graph_kcore created no pin")
@@ -86,6 +86,48 @@ class OperatorSmokeSpec extends SparkTestBase {
     assert(keptIds.subsetOf(after), "the sweep released a pre-snapshot pin")
     assert(kept.count() == 10)
     Harness.sweepPins(spark, outside)
+  }
+
+  test("a lazy pin read by two broadcast builds of one query computes " +
+    "each pinned row once") {
+    // Both builds start together (AQE materializes the two broadcast
+    // stages at once; without AQE both relation futures start when the
+    // plan is prepared), so both task sets reach the pin's blocks
+    // before either has written them. A counting UDF after the
+    // aggregate's exchange shows how often each pinned row was computed.
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqe = spark.conf.get(aqeKey)
+    try for (on <- Seq("true", "false")) {
+      spark.conf.set(aqeKey, on)
+      val computed = spark.sparkContext.longAccumulator(s"pinned rows, AQE $on")
+      val mark = udf { (k: Long) => computed.add(1); k }.asNondeterministic()
+      val pinned = Tables.pin(spark.range(4000)
+        .groupBy((col("id") % 1000).as("k")).agg(count(lit(1)).as("c"))
+        .select(mark(col("k")).as("k"), col("c")))
+      // two different build sides, so no exchange is reused
+      val q = spark.range(1000).toDF("k")
+        .join(broadcast(pinned.select(col("k"), col("c").as("c1"))), "k")
+        .join(broadcast(pinned.where(col("c") > 0)
+          .select(col("k"), (col("c") * 2).as("c2"))), "k")
+      assert(q.collect().length == 1000, s"AQE $on")
+      val plan = q.queryExecution.executedPlan
+      val builds = SparkTestBase.broadcastJoins(plan).map { j =>
+        if (j.buildSide == BuildLeft) j.left else j.right }
+      def reused(p: SparkPlan): Boolean = p match {
+        case _: ReusedExchangeExec => true
+        case s: QueryStageExec => reused(s.plan)
+        case _ => false
+      }
+      assert(builds.size == 2 && !builds.exists(reused),
+        s"AQE $on: expected two broadcasts, none reused:\n$plan")
+      assert(computed.value == 1000L,
+        s"AQE $on: ${computed.value} pinned-row computations for 1000 rows")
+    } finally spark.conf.set(aqeKey, aqe)
   }
 
   test("entry (flagship) returns rows") {

@@ -160,13 +160,18 @@ class PlanSpec extends SparkTestBase {
     // group cardinality (5000 groups × 4 rows, shuffled so groups repeat
     // before the switch) charges a heap map about 1.5-2 MB: with a 1.5 MB
     // pool the second 1 MB page is denied part-way through every partition.
-    // The 12-row edge-case frame (k > group size, all-tie groups) charges
-    // a few KB: a 256 KB pool denies it the first page. Either way the
-    // freed pool still holds the sorter's first page, and the result must
-    // equal the window formulation with no memory left held.
+    // By then each partial partition has dropped rows (k = 2), so it sorts
+    // too; the same rows keyed uniquely drop none, so each partial
+    // partition passes its input through. The 12-row edge-case frame
+    // (k > group size, all-tie groups) charges a few KB: a 256 KB pool
+    // denies it the first page, at a partition's first row, which passes
+    // through. Either way the final pass's freed pool still holds the
+    // sorter's first page, and the result must equal the window
+    // formulation with no memory left held.
     val rnd = new scala.util.Random(11)
-    val wide = rnd.shuffle((1 to 20000).map(i => (i % 5000, i, (i * 37 % 101).toDouble)))
-      .toDF("g", "id", "v").repartition(3)
+    val rows = rnd.shuffle((1 to 20000).map(i => (i, (i * 37 % 101).toDouble)))
+    val wide = rows.map { case (i, v) => (i % 5000, i, v) }.toDF("g", "id", "v").repartition(3)
+    val unique = rows.map { case (i, v) => (i, i, v) }.toDF("g", "id", "v").repartition(3)
     val edge = Seq(
       ("a", 1, 10.0), ("a", 2, 20.0),
       ("b", 1, 5.0), ("b", 2, 4.0), ("b", 3, 3.0), ("b", 4, 2.0), ("b", 5, 1.0),
@@ -174,14 +179,31 @@ class PlanSpec extends SparkTestBase {
       ("d", 1, 6.0), ("d", 2, 6.0), ("d", 3, 6.0), ("d", 4, 6.0))
       .toDF("g", "id", "v").repartition(5)
     val mb = 1L << 20
-    for ((df, k, deniedPool) <- Seq((wide, 2, 3 * mb / 2), (edge, 3, mb / 4),
-        (edge, 1, mb / 4)); (pool, fallBack) <- Seq((64 * mb, false),
-        (deniedPool, true))) {
+    for ((df, k, deniedPool, passes) <- Seq((wide, 2, 3 * mb / 2, false),
+        (unique, 1, 3 * mb / 2, true), (edge, 3, mb / 4, true), (edge, 1, mb / 4, true));
+        (pool, denied) <- Seq((64 * mb, false), (deniedPool, true))) {
       val run = TopKTasks.run(operators.GraftOps.topKPerGroup(
         df, Seq("g"), Seq(("v", false), ("id", true)), k), pool, mb)
       val label = s"k=$k, pool ${pool / 1024} KB"
-      if (fallBack) assert(run.fallbacks > 0, s"$label: no partition fell back")
-      else assert(run.fallbacks == 0, s"$label: ${run.fallbacks} fell back")
+      val partial = (run.partialFallbacks, run.partialPassThroughs)
+      val input = df.count()
+      if (!denied) {
+        assert(partial == ((0, 0)) && run.finalFallbacks == 0,
+          s"$label: $partial partial and ${run.finalFallbacks} final partitions switched")
+      } else {
+        assert(run.finalFallbacks > 0, s"$label: no final partition fell back")
+        if (passes) {
+          assert(partial._1 == 0 && partial._2 > 0,
+            s"$label: $partial partial partitions (sorted, passed through)")
+          assert(run.partialRows == input,
+            s"$label: the partial pass emitted ${run.partialRows} of $input rows")
+        } else {
+          assert(partial._1 > 0 && partial._2 == 0,
+            s"$label: $partial partial partitions (sorted, passed through)")
+          assert(run.partialRows < input,
+            s"$label: the partial sort kept ${run.partialRows} of $input rows")
+        }
+      }
       assert(run.held == 0, s"$label: ${run.held} B still held after draining")
       val got = run.rows.map(r => (r.get(0), r.getInt(1))).sortBy(_.toString)
       val expected = df.withColumn("rn", row_number().over(

@@ -223,18 +223,26 @@ class SourceSinkSpec extends SparkTestBase {
     "batches (NULL keys/versions/payloads, composite key, -0.0 keys, map payload)") {
     // The top-k passes run as tasks on a pool of their own (TopKTasks):
     // once on the hash maps (64 MB pool), once with every task denied its
-    // first 1 MB page by a 256 KB pool, so it takes the external-sort
-    // fallback, which must honour the same NULL orderings. The hash arm
-    // also matches the planned query (partial → exchange → final).
+    // first 1 MB page by a 256 KB pool, at its first row: the partial
+    // pass, which has dropped no row yet, passes its input through, and
+    // the final pass takes the external-sort fallback, which must honour
+    // the same NULL orderings. The hash arm also matches the planned
+    // query (partial → exchange → final).
     def check(forceFallback: Boolean): Unit = {
       val mode = if (forceFallback) "sort fallback" else "hash"
       def resolve(df: DataFrame, keys: Seq[String]): Seq[Row] = {
         val out = upserted(df, keys, "v")
         val mb = 1L << 20
         val run = TopKTasks.run(out, if (forceFallback) mb / 4 else 64 * mb, mb)
-        if (forceFallback) assert(run.fallbacks > 0, "no partition fell back")
-        else {
-          assert(run.fallbacks == 0, s"${run.fallbacks} partitions fell back")
+        assert(run.partialFallbacks == 0,
+          s"${run.partialFallbacks} partial partitions sorted")
+        if (forceFallback) {
+          assert(run.partialPassThroughs > 0, "no partial partition passed through")
+          assert(run.finalFallbacks > 0, "no partition fell back")
+        } else {
+          assert(run.partialPassThroughs == 0,
+            s"${run.partialPassThroughs} partial partitions passed through")
+          assert(run.finalFallbacks == 0, s"${run.finalFallbacks} partitions fell back")
           assert(out.collect().map(orderablePart).sorted.toSeq ==
             run.rows.map(orderablePart).sorted, "tasks and planned query differ")
         }

@@ -41,8 +41,12 @@ values did not repeat (a count that moves between runs of one build is
 no evidence of a change); then each side's traced `total_s` and `cpu_s`
 per key, and the `live_heap_mb` of the key's untraced tries (the live heap
 after the try, read after a full GC with its plan and pins still held),
-each the median over its runs (min-max when N > 1); it prints no
-verdict. The raw records go to
+each the median over its runs (min-max when N > 1). With N of at least
+ten, round i of each side is pair i: for every key it then prints each
+side's traced `cpu_s` and `total_s` median and quartiles, the rounds the
+change won and the paired rule's verdict, as --workload mode does (a round
+in which either side's try of the key failed counts as a failed run). The
+raw records go to
 <workdir>/<side>-keys-<round>/raw.json. Exit code 1 if any try of
 either side failed.
 """
@@ -151,13 +155,15 @@ def run_keys(side_dir, work, data, keys):
 
 
 def key_failures(raw, keys):
-    """Failed tries of one side's record, as printable lines."""
+    """Failed tries of `keys` in one side's record, as printable lines."""
     if raw is None:
         return ["no record (build or JVM failed)"]
     bad = [f"{t['key']} pass {t['pass']}: {t['error']}"
-           for t in raw["tries"] if t["error"] is not None]
+           for t in raw["tries"]
+           if t["error"] is not None and t["key"] in keys]
     traced = raw.get("traced") or {}
-    bad += [f"{k} traced: {e}" for k, e in traced.get("errors", {}).items()]
+    bad += [f"{k} traced: {e}" for k, e in traced.get("errors", {}).items()
+            if k in keys]
     bad += [f"{k}: no traced try" for k in keys
             if k not in traced.get("keys", {})]
     return bad
@@ -225,6 +231,8 @@ def compare_keys(a, sides, workdir):
                         + [(m, try_values(raws, k, m)) for m in KEY_TRIES]):
             print(f"{'':26s} {m:20s} {timed(vals['base']):>20s} "
                   f"{timed(vals['change']):>20s}")
+    if a.repeat >= MIN_PAIRS:
+        paired_key_times(raws, keys, a.repeat)
     ok = True
     for side in ("base", "change"):
         for n, raw in enumerate(raws[side], 1):
@@ -232,6 +240,27 @@ def compare_keys(a, sides, workdir):
                 ok = False
                 print(f"{side} run {n} FAILED {line}")
     return ok
+
+
+def paired_key_times(raws, keys, rounds):
+    """Round i of each side as pair i: the paired rule over each key's
+    traced times."""
+    print(f"\npaired per-key times over {rounds} rounds "
+          f"(round i of each side is pair i)")
+    print(PAIRED_HEADER)
+    for k in keys:
+        complete = [i for i in range(rounds)
+                    if not key_failures(raws["base"][i], [k])
+                    and not key_failures(raws["change"][i], [k])]
+        for m in KEY_TIMES:
+            vals = traced_values(raws, k, m)
+            b = [vals["base"][i] for i in complete]
+            c = [vals["change"][i] for i in complete]
+            if complete:
+                print(paired_line(f"{k} {m}", b, c, "lower", rounds,
+                                  len(complete) == rounds, "s")[1])
+            else:
+                print(f"{k} {m}: no complete round")
 
 
 def quartiles(vals):
@@ -264,6 +293,28 @@ def verdict(base, change, better, pairs, ok):
         v = "no claim"
     return {"wins": wins, "losses": losses, "need": need,
             "median_gap": gap, "base_iqr": q3 - q1, "verdict": v}
+
+
+PAIRED_HEADER = (f"{'metric':28s} {'base med':>10s} {'[q1, q3]':>21s} "
+                 f"{'change med':>10s} {'[q1, q3]':>21s} {'wins':>6s}  "
+                 "verdict")
+
+
+def paired_line(name, base, change, better, pairs, ok, unit):
+    """The paired rule over one metric, and its line under
+    PAIRED_HEADER."""
+    v = verdict(base, change, better, pairs, ok)
+    bq, cq = quartiles(base), quartiles(change)
+    rec = {"unit": unit, "base": base, "change": change,
+           "base_median": statistics.median(base), "base_q1_q3": bq,
+           "change_median": statistics.median(change),
+           "change_q1_q3": cq, **v}
+    line = (f"{name:28s} {rec['base_median']:10.4g} "
+            f"[{bq[0]:9.4g}, {bq[1]:9.4g}] {rec['change_median']:10.4g} "
+            f"[{cq[0]:9.4g}, {cq[1]:9.4g}] {v['wins']:3d}/{pairs:<2d}  "
+            f"{v['verdict']} (gap {v['median_gap']:.4g}, "
+            f"base iqr {v['base_iqr']:.4g} {unit})")
+    return rec, line
 
 
 def good(run):
@@ -330,24 +381,14 @@ def main():
           f"seeds {a.seed0}.."
           f"{a.seed0 + a.pairs - 1}, --seconds {seconds}, "
           f"base {sides['base']['label']}, change {sides['change']['label']}")
-    print(f"{'metric':20s} {'base med':>10s} {'[q1, q3]':>21s} "
-          f"{'change med':>10s} {'[q1, q3]':>21s} {'wins':>6s}  verdict")
+    print(PAIRED_HEADER)
     for m in bench["end_to_end"] if complete else []:
         name = m["name"]
         b = metric_values([runs["base"][i] for i in complete], name)
         c = metric_values([runs["change"][i] for i in complete], name)
-        v = verdict(b, c, m["better"], a.pairs, ok)
-        bq, cq = quartiles(b), quartiles(c)
-        report[name] = {"unit": m["unit"], "base": b, "change": c,
-                        "base_median": statistics.median(b),
-                        "base_q1_q3": bq,
-                        "change_median": statistics.median(c),
-                        "change_q1_q3": cq, **v}
-        print(f"{name:20s} {statistics.median(b):10.4g} "
-              f"[{bq[0]:9.4g}, {bq[1]:9.4g}] {statistics.median(c):10.4g} "
-              f"[{cq[0]:9.4g}, {cq[1]:9.4g}] {v['wins']:3d}/{a.pairs:<2d}  "
-              f"{v['verdict']} (gap {v['median_gap']:.4g}, "
-              f"base iqr {v['base_iqr']:.4g} {m['unit']})")
+        report[name], line = paired_line(name, b, c, m["better"], a.pairs,
+                                         ok, m["unit"])
+        print(line)
     print(f"all runs correct with 0 failed: {ok}")
 
     traced = {}
